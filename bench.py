@@ -42,19 +42,23 @@ CANONICAL_CPUS = 32
 
 
 def _session_cpus() -> int:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    return int(cpus) if cpus else (os.cpu_count() or 0)
+    return env_cpus() or os.cpu_count() or 0
 
 
 def _is_canonical(sf_dir: str) -> bool:
+    # a malformed $SPARK_GRAFT_CPUS runs on os.cpu_count() cores (see
+    # session.env_cpus) but never writes the records: the core count
+    # the caller asked for is unknown
+    malformed = bool(os.environ.get("SPARK_GRAFT_CPUS")) and env_cpus() is None
     return (
-        os.path.realpath(sf_dir) == os.path.realpath(CANONICAL_SF_DIR)
+        not malformed
+        and os.path.realpath(sf_dir) == os.path.realpath(CANONICAL_SF_DIR)
         and _session_cpus() == CANONICAL_CPUS
     )
 
 from kafka_spark_streaming_pipeline_spark.cache import session_gc, unpersist_tracked
 from kafka_spark_streaming_pipeline_spark.plans import QUERIES
-from kafka_spark_streaming_pipeline_spark.session import get_spark
+from kafka_spark_streaming_pipeline_spark.session import env_cpus, get_spark
 from tools.bench_history import (
     baseline_sec,
     compact_regressions,

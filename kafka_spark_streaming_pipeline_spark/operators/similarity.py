@@ -399,9 +399,11 @@ def nearest_cells(
     # an O(k) array_min instead of the O(k log k) full sort — same
     # (neg_sim, cell) struct ordering, so ties break identically
     # (r13 optimization pass, guide §1.2: less per-row work in the
-    # map-only pass over every vector)
+    # map-only pass over every vector).  array_min of an EMPTY centroid
+    # set is NULL; array_compact drops it so, as with the sort path, a
+    # vector with no cell explodes to no row rather than a NULL cell
     if n == 1:
-        top = F.array(F.array_min(sims))
+        top = F.array_compact(F.array(F.array_min(sims)))
     else:
         top = F.slice(F.array_sort(sims), 1, n)
     return (

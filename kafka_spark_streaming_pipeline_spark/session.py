@@ -16,6 +16,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def env_cpus() -> int | None:
+    """``$SPARK_GRAFT_CPUS`` parsed in one place for every caller: the
+    core count when it is a positive integer, else None.  Unset, empty,
+    non-numeric and non-positive values all mean "no override", and the
+    caller falls back to ``os.cpu_count()``."""
+    try:
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
+    except ValueError:
+        return None
+    return cpus if cpus > 0 else None
+
+
 def get_spark(
     app_name: str = "kafka_spark_streaming_pipeline_spark",
     master: str | None = None,
@@ -24,13 +36,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``
+    when that is unset or not a positive integer, see ``env_cpus``).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    cpus = env_cpus()
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
+        shuffle_partitions = cpus or os.cpu_count() or 8
 
     builder = (
         SparkSession.builder.appName(app_name)

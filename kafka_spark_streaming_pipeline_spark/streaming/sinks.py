@@ -11,7 +11,10 @@ keys + merge — on parquet tables:
   same access pattern a Delta/Iceberg MERGE would compile to, without
   requiring those jars in this environment.
 - ``append_chunk_objects``: the object-store placeholder writes (S5)
-  as an append-only file sink partitioned by stream_id.
+  as an append-only file sink, one file per task with no directory
+  fan-out; rows are sorted by ``(part_bucket, stream_id,
+  chunk_index)`` so parquet min/max statistics still let a bucket or
+  stream filter skip row groups.
 
 Both are safe under checkpoint replay: re-running a batch rewrites the
 same keys to the same values (last-writer-wins on the compound key).
@@ -22,6 +25,11 @@ a writer dying mid-write can never tear the table.  The plain
 dynamic-partition-overwrite ``upsert_partitioned`` remains as the
 lightweight alternative where the storage layer already provides
 atomic directory swap semantics.
+
+Every log view here reads its log through ``_read_log``: one parquet
+scan over all committed files under the schema the manifest records
+(see ``txn``), so a view's read cost follows the rows in the log, not
+the number of commits behind them.
 """
 
 from __future__ import annotations
@@ -84,12 +92,24 @@ def upsert_partitioned(
     )
 
 
-def append_chunk_objects(batch_df: DataFrame, path: str, partition_col: str = "stream_id") -> None:
-    """S5 — the chunk 'objects' as an append-only partitioned sink; the
-    object key is carried as a column (functions/scalars.chunk_object_key)
-    so the physical layout mirrors the reference's
-    {stream_id}/{quality}/{chunk_index}.ts keyspace."""
-    batch_df.write.mode("append").partitionBy(partition_col).parquet(path)
+def append_chunk_objects(batch_df: DataFrame, path: str) -> None:
+    """S5 — the chunk 'objects' as an append-only sink; the object key
+    is carried as a column (functions/scalars.chunk_object_key), so the
+    reference's {stream_id}/{quality}/{chunk_index}.ts keyspace lives
+    in the data, not in the directory tree.
+
+    Each task writes ONE file: a directory per hash bucket would make
+    every task open a file in every bucket it touches (up to 64 tiny
+    files per task per micro-batch), and no reader prunes chunk
+    objects by directory.  ``part_bucket`` is kept as a data column
+    and rows are sorted within each task by ``(part_bucket, stream_id,
+    chunk_index)`` — all three are required — so a filter on bucket or
+    stream still skips row groups by their min/max statistics."""
+    (
+        batch_df.sortWithinPartitions("part_bucket", "stream_id", "chunk_index")
+        .write.mode("append")
+        .parquet(path)
+    )
 
 
 N_PARTITION_BUCKETS = 64
@@ -101,9 +121,13 @@ def with_partition_bucket(
     """Bounded partition key: hash-bucket of the stream id.  Partitioning
     a 100 TB table by raw stream_id means millions of directories (a
     catalog/listing disaster) and single-stream batches rewriting one
-    tiny file per stream.  A fixed bucket count keeps partition dirs
-    bounded while per-stream reads still prune: filter on
-    ``part_bucket = pmod(xxhash64(id), buckets)`` + the id itself."""
+    tiny file per stream.  A fixed bucket count keeps the copy-on-write
+    metadata table's partition dirs bounded while per-stream reads
+    still prune: filter on ``part_bucket = pmod(xxhash64(id), buckets)``
+    + the id itself.  The append-only sinks (the merge-on-read log and
+    the chunk objects) keep the bucket as a plain column instead: they
+    never rewrite a partition, so a directory per bucket would only
+    multiply the files each commit writes."""
     return df.withColumn("part_bucket", F.pmod(F.xxhash64(key_col), F.lit(buckets)))
 
 
@@ -111,8 +135,9 @@ def make_live_sink(metadata_path: str, chunks_path: str):
     """Copy-on-write variant of the live-path foreachBatch body
     (reference process_live_batch, spark_streaming.py:519-539, minus
     the collect()): dedup-upsert the per-chunk metadata, append the
-    chunk objects.  Both sinks partition on the bounded hash bucket,
-    not the raw stream id.  ``make_live_log_sink`` is the DEFAULT live
+    chunk objects.  The metadata upsert partitions on the bounded hash
+    bucket, not the raw stream id; the chunk objects carry the bucket
+    as a column.  ``make_live_log_sink`` is the DEFAULT live
     path — crash-atomic and O(batch) per commit; this COW variant
     trades that for zero read-time merge."""
 
@@ -133,7 +158,6 @@ def make_live_sink(metadata_path: str, chunks_path: str):
                     "stream_id", "chunk_index", "chunk_path", "size_bytes", "part_bucket"
                 ),
                 chunks_path,
-                partition_col="part_bucket",
             )
         finally:
             batch_df.unpersist()
@@ -328,7 +352,6 @@ def make_live_log_sink(metadata_path: str, chunks_path: str):
                     "stream_id", "chunk_index", "chunk_path", "size_bytes", "part_bucket"
                 ),
                 chunks_path,
-                partition_col="part_bucket",
             )
         finally:
             batch_df.unpersist()

@@ -22,6 +22,16 @@ on nothing but the Hadoop ``FileSystem`` API that ships with Spark:
   directories its manifest lists.  A writer crash at any point before
   the rename leaves garbage data dirs that no manifest references —
   invisible to every reader, reclaimed by ``vacuum``.
+- The manifest carries the table SCHEMA, as Delta's log does:
+  ``append`` merges the batch's columns into it by name and
+  ``overwrite`` replaces it.  A reader therefore scans every
+  unpartitioned entry as ONE relation,
+  ``spark.read.schema(S).parquet(*dirs)`` — no footer inference, no
+  per-commit union — so a log view's plan stays one scan however many
+  commits it spans, and rows of a commit written before a column
+  existed read that column as NULL.  A manifest without the field
+  (written before it existed) infers the schema once per read, from
+  one footer per entry; its next append records it.
 
 Partitioned tables get copy-on-write at PARTITION granularity: an
 upsert rewrites only the partitions the batch touches into the new
@@ -43,6 +53,19 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql.types import (
+    ArrayType,
+    ByteType,
+    DataType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    MapType,
+    ShortType,
+    StructField,
+    StructType,
+)
 
 _COMMITS = "_commits"
 _DATA = "data"
@@ -96,6 +119,55 @@ class _FS:
 def fs_exists(spark: SparkSession, path: str) -> bool:
     """Existence probe that works on any Hadoop-reachable scheme."""
     return _FS(spark, path).exists(path)
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every level nullable: what a file scan reports, and
+    what makes two batches that differ only in nullability one type."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+#: Type pairs the parquet reader widens at scan time: a file written as
+#: the narrower type reads under the wider one.  ``unionByName`` widened
+#: these too, back when every commit was its own relation.
+_INTEGRAL = (ByteType, ShortType, IntegerType)
+_WIDENS_TO = {LongType: _INTEGRAL, DoubleType: _INTEGRAL + (FloatType,)}
+
+
+def _merge_schema(table: StructType | None, batch: StructType) -> StructType:
+    """Merge ``batch`` into the table schema by column name: table
+    columns keep their order, new ones are added at the end (the
+    ``unionByName(allowMissingColumns=True)`` result).  A column whose
+    type differs must be one the reader widens; anything else raises
+    before a byte is written."""
+    batch = _nullable(batch)
+    if table is None:
+        return batch
+    fields = {f.name: f for f in table.fields}
+    for f in batch.fields:
+        old = fields.get(f.name)
+        if old is None or old.dataType == f.dataType:
+            fields.setdefault(f.name, f)
+            continue
+        types = {type(old.dataType), type(f.dataType)}
+        for wide, narrow in _WIDENS_TO.items():
+            if wide in types and types - {wide} <= set(narrow):
+                fields[f.name] = StructField(f.name, wide(), True)
+                break
+        else:
+            raise ValueError(
+                f"column {f.name!r} is {old.dataType.simpleString()} in the "
+                f"table and {f.dataType.simpleString()} in the batch"
+            )
+    return StructType(list(fields.values()))
 
 
 def _commit_name(version: int) -> str:
@@ -178,7 +250,11 @@ class AtomicParquetTable:
         ``partition_values`` prunes at MANIFEST level — only commit
         dirs owning a wanted partition are even listed, and within a
         dir only the wanted ``col=value`` subdirectories are read
-        (the file-listing analogue of partition pruning)."""
+        (the file-listing analogue of partition pruning).
+
+        Every unpartitioned entry is read by ONE scan under the
+        manifest's schema, so the plan has one relation for the whole
+        log, not one per commit."""
         fs = _FS(spark, self.root)
         if version is None:
             _, manifest = self._resolve(fs)
@@ -195,11 +271,12 @@ class AtomicParquetTable:
         wanted = (
             None if partition_values is None else {str(v) for v in partition_values}
         )
+        log_dirs: list[str] = []
         parts: list[DataFrame] = []
         for entry in manifest["entries"]:
             d = f"{self.root}/{entry['dir']}"
             if entry["partitions"] is None:
-                parts.append(spark.read.parquet(d))
+                log_dirs.append(d)
                 continue
             owned = entry["partitions"] if wanted is None else sorted(
                 wanted.intersection(entry["partitions"])
@@ -212,12 +289,29 @@ class AtomicParquetTable:
                     *[f"{d}/{pcol}={v}" for v in owned]
                 )
             )
+        if log_dirs:
+            schema = self._schema(spark, manifest)
+            parts.insert(0, spark.read.schema(schema).parquet(*log_dirs))
         if not parts:
             return None
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
         return out
+
+    def _schema(self, spark: SparkSession, manifest: dict) -> StructType | None:
+        """The schema of ``manifest``'s unpartitioned entries (None if it
+        has none).  A manifest without the field (written before
+        manifests carried it) gets the by-name merge of one footer per
+        such entry."""
+        if "schema" in manifest:
+            return StructType.fromJson(manifest["schema"])
+        schema = None
+        for entry in manifest["entries"]:
+            if entry["partitions"] is None:
+                d = f"{self.root}/{entry['dir']}"
+                schema = _merge_schema(schema, spark.read.parquet(d).schema)
+        return schema
 
     # ------------------------------------------------------------- append
 
@@ -227,6 +321,7 @@ class AtomicParquetTable:
         spark = df.sparkSession
         fs = _FS(spark, self.root)
         version, manifest = self._resolve(fs)
+        schema = _merge_schema(self._schema(spark, manifest) if manifest else None, df.schema)
         rel = f"{_DATA}/{uuid.uuid4().hex[:12]}"
         df.write.parquet(f"{self.root}/{rel}")
         entries = (manifest["entries"] if manifest else []) + [
@@ -236,7 +331,12 @@ class AtomicParquetTable:
             fs,
             self.root,
             version + 1,
-            {"version": version + 1, "partition_col": self.partition_col, "entries": entries},
+            {
+                "version": version + 1,
+                "partition_col": self.partition_col,
+                "schema": schema.jsonValue(),
+                "entries": entries,
+            },
         )
         return version + 1
 
@@ -267,6 +367,7 @@ class AtomicParquetTable:
             {
                 "version": version + 1,
                 "partition_col": self.partition_col,
+                "schema": _nullable(df.schema).jsonValue(),
                 "entries": [{"dir": rel, "partitions": None}],
             },
         )
@@ -334,12 +435,10 @@ class AtomicParquetTable:
             )
             if remaining is None or remaining:
                 entries.append({"dir": entry["dir"], "partitions": remaining})
-        _publish(
-            fs,
-            self.root,
-            version + 1,
-            {"version": version + 1, "partition_col": pcol, "entries": entries},
-        )
+        new = {"version": version + 1, "partition_col": pcol, "entries": entries}
+        if manifest and "schema" in manifest:
+            new["schema"] = manifest["schema"]  # every log entry is kept as is
+        _publish(fs, self.root, version + 1, new)
         return version + 1
 
     # ------------------------------------------------------------- vacuum

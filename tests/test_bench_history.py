@@ -406,3 +406,25 @@ def test_bench_records_gated_on_canonical_cores(monkeypatch):
     assert not bench._is_canonical("/root/testdata/sf0.1")
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
     assert not bench._is_canonical("/root/testdata/sf0.01")
+
+
+def test_malformed_cpu_env_falls_back_and_is_non_canonical(monkeypatch):
+    """A non-numeric or non-positive $SPARK_GRAFT_CPUS does not crash
+    the bench: the session falls back to os.cpu_count() cores, and the
+    run is non-canonical, so no record is written — even on a host
+    whose cpu_count() is the canonical 32."""
+    import bench
+    from kafka_spark_streaming_pipeline_spark.session import env_cpus
+
+    monkeypatch.setattr(bench.os, "cpu_count", lambda: 32)
+    for raw in ("eight", "4.5", "0", "-4"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+        assert env_cpus() is None
+        assert bench._session_cpus() == 32
+        assert not bench._is_canonical(bench.CANONICAL_SF_DIR)
+    # a well-formed value is still the core count, and an unset one
+    # still means "this host's cores"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", " 32 ")
+    assert env_cpus() == 32 and bench._is_canonical(bench.CANONICAL_SF_DIR)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert env_cpus() is None and bench._is_canonical(bench.CANONICAL_SF_DIR)

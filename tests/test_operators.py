@@ -211,6 +211,23 @@ def test_ivf_topk_recall(spark, sf_dir):
     assert sum(1 for q in exact if portable_top1.get(q) == exact[q]) >= 8
 
 
+def test_nearest_cells_empty_centroid_set_assigns_nothing(spark):
+    """An empty centroid set assigns no cell: the n=1 array_min path
+    (NULL over an empty array) must give the same empty result as the
+    sort path, not one row with a NULL cell."""
+    from kafka_spark_streaming_pipeline_spark.operators.similarity import nearest_cells
+
+    vecs = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 1.0])], "id int, v array<double>")
+    cents = spark.createDataFrame([], "cell int, centroid array<double>")
+    one = nearest_cells(vecs, cents, 1, "cell").collect()
+    two = nearest_cells(vecs, cents, 2, "cell").collect()
+    assert one == two == []
+    # a non-empty set still assigns every vector exactly one cell
+    cents = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell int, centroid array<double>")
+    got = {r.id: r.cell for r in nearest_cells(vecs, cents, 1, "cell").collect()}
+    assert got == {1: 0, 2: 1}
+
+
 def test_pq_topk_rerank_recall(spark, sf_dir):
     """PQ ADC shortlist + exact rerank: high recall vs brute force while
     the exact math only touches the shortlist; codes stay in-range; the

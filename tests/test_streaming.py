@@ -490,6 +490,37 @@ def test_end_to_end_live_query(spark, tmp_path):
     assert spark.read.parquet(chunks).count() >= 5
 
 
+def test_live_log_sink_writes_one_chunk_file_per_task(spark, tmp_path):
+    """A batch touching all 64 hash buckets writes at most one chunk
+    object file per input partition — no part_bucket= directory per
+    bucket — and every row keeps its bucket as a data column."""
+    from kafka_spark_streaming_pipeline_spark.streaming.sinks import (
+        N_PARTITION_BUCKETS,
+        make_live_log_sink,
+    )
+
+    n_parts = 4
+    batch = spark.range(1000).select(
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("stream_id"),
+        F.lit(0).cast("long").alias("chunk_index"),
+        F.concat(F.lit("s"), F.col("id").cast("string"), F.lit("/chunks/0.ts")).alias("chunk_path"),
+        (F.col("id") + 1000).alias("size_bytes"),
+        F.col("id").alias("sequence_number"),
+    ).repartition(n_parts)
+    bucket = F.pmod(F.xxhash64("stream_id"), F.lit(N_PARTITION_BUCKETS))
+    assert batch.select(bucket).distinct().count() == N_PARTITION_BUCKETS
+
+    chunks = str(tmp_path / "chunks")
+    make_live_log_sink(str(tmp_path / "meta"), chunks)(batch, 0)
+
+    files = [f for _, _, fs in os.walk(chunks) for f in fs if f.endswith(".parquet")]
+    assert not [d for d in os.listdir(chunks) if os.path.isdir(os.path.join(chunks, d))]
+    assert 1 <= len(files) <= n_parts
+    out = spark.read.parquet(chunks)
+    assert out.count() == 1000
+    assert out.filter(F.col("part_bucket") != bucket).count() == 0
+
+
 def test_cow_live_sink_still_works(spark, tmp_path):
     """The copy-on-write alternative sink keeps its semantics."""
     batches = [[_event("s1", i) for i in range(3)]]

@@ -241,3 +241,78 @@ def test_snapshot_diff_classifies_changes(spark, tmp_path):
     )
     nulls = {r.id: r.change for r in snapshot_diff(spark, table, ["id"], v3, v4).collect()}
     assert nulls == {1: "updated"}
+
+
+def _parquet_scans(df) -> int:
+    return df._jdf.queryExecution().sparkPlan().toString().count("FileScan parquet")
+
+
+def test_log_view_plans_the_same_scans_at_any_commit_count(spark, tmp_path):
+    """Every unpartitioned entry is read by one scan under the
+    manifest's schema: a log view over 8 commits plans exactly the scans
+    it plans over 1 (one relation per commit made this 2 x commits)."""
+    from kafka_spark_streaming_pipeline_spark.streaming.sinks import (
+        append_log_upsert,
+        latest_view,
+    )
+
+    keys = ["stream_id", "chunk_index"]
+    scans = {}
+    for n in (1, 8):
+        path = str(tmp_path / f"log{n}")
+        for b in range(n):
+            append_log_upsert(_df(spark, [("s1", b, b, f"v{b}")]), path, batch_id=b)
+        view = latest_view(spark, path, keys, "sequence_number")
+        assert view.count() == n
+        scans[n] = _parquet_scans(view)
+    assert scans[1] == scans[8]
+
+
+def test_added_column_reads_older_rows_as_null(spark, tmp_path):
+    """``append`` merges the batch schema into the manifest's by column
+    name, so a column added by a later commit reads as NULL on the
+    older rows — the result the per-commit unionByName gave."""
+    table = AtomicParquetTable(str(tmp_path / "evolve"))
+    table.append(spark.createDataFrame([(1, "a")], "id int, tag string"))
+    table.append(spark.createDataFrame([(2, 7.5, "b")], "id int, score double, tag string"))
+    out = table.read(spark)
+    assert out.columns == ["id", "tag", "score"]
+    assert sorted(tuple(r) for r in out.collect()) == [(1, "a", None), (2, "b", 7.5)]
+    assert _parquet_scans(out) == 1
+    # the reader widens int to bigint; a type it cannot read fails the
+    # append before any data is written
+    table.append(spark.createDataFrame([(3, "c")], "id bigint, tag string"))
+    assert dict(table.read(spark).dtypes)["id"] == "bigint"
+    v = table.version(spark)
+    with pytest.raises(ValueError, match="'tag' is string in the table and int"):
+        table.append(spark.createDataFrame([(4, 1)], "id int, tag int"))
+    assert table.version(spark) == v
+
+
+def test_manifest_without_schema_reads_as_before(spark, tmp_path):
+    """A manifest with no schema field (the format before manifests
+    carried one) infers the schema once and reads the same rows; its
+    next append records the schema."""
+    root = str(tmp_path / "legacy")
+    fs = txn._FS(spark, root)
+    spark.createDataFrame([(1, "a")], "id int, tag string").write.parquet(f"{root}/data/d1")
+    spark.createDataFrame([(2, 7.5, "b")], "id int, score double, tag string").write.parquet(
+        f"{root}/data/d2"
+    )
+    txn._publish(fs, root, 1, {
+        "version": 1,
+        "partition_col": None,
+        "entries": [{"dir": "data/d1", "partitions": None},
+                    {"dir": "data/d2", "partitions": None}],
+    })
+    table = AtomicParquetTable(root)
+    out = table.read(spark)
+    assert out.columns == ["id", "tag", "score"]
+    assert sorted(tuple(r) for r in out.collect()) == [(1, "a", None), (2, "b", 7.5)]
+
+    table.append(spark.createDataFrame([(3, "c")], "id int, tag string"))
+    _, manifest = table._resolve(fs)
+    assert [f["name"] for f in manifest["schema"]["fields"]] == ["id", "tag", "score"]
+    assert sorted(tuple(r) for r in table.read(spark).collect()) == [
+        (1, "a", None), (2, "b", 7.5), (3, "c", None)
+    ]

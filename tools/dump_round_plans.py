@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """Capture `.explain("formatted")` for the headline queries into
-plans/r13/<query>_<tag>.txt — the optimization round's before/after
-plan evidence (OPTIMIZATION_r13.md cites these files).
+plans/<round>/<query>_<tag>.txt — an optimization round's before/after
+plan evidence (OPTIMIZATION_<round>.md cites these files).
 
-    python3 tools/dump_r13_plans.py before [query ...]
-    python3 tools/dump_r13_plans.py after  [query ...]
+    python3 tools/dump_round_plans.py r13 before [query ...]
+    python3 tools/dump_round_plans.py r13 after  [query ...]
 
 With no query args, dumps the whole bench headline set.  Plans are
 captured against sf0.01 (plan SHAPE is scale-invariant here; the
@@ -28,8 +28,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_PLAN_SF_DIR", "/root/testdata/sf0.01")
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+    if len(sys.argv) < 2:
+        sys.exit("usage: dump_round_plans.py <round> [before|after] [query ...]")
+    round_ = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:]
     if not names:
         from bench import HEADLINE
 
@@ -37,10 +40,10 @@ def main() -> None:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r13",
+        round_,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name=f"r13_plans_{tag}")
+    spark = get_spark(app_name=f"{round_}_plans_{tag}")
     explain_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
     for name in names:
         df = QUERIES[name].builder(spark, SF_DIR)
