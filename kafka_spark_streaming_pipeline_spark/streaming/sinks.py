@@ -26,11 +26,32 @@ dynamic-partition-overwrite ``upsert_partitioned`` remains as the
 lightweight alternative where the storage layer already provides
 atomic directory swap semantics.
 
+Every incremental sink after the live path — rollups, sketches,
+histograms, indexes and per-document fact logs — is one entry of the
+``_LOGS`` table, a ``MergeableLog`` that holds the shared contract
+(incremental and exactly-once under replay, the Structured Streaming
+sink model) once:
+
+- write: a non-empty micro-batch appends its PARTIAL stamped with the
+  batch id as ``__commit``, as one crash-atomic commit; an empty batch
+  publishes nothing.  The log is never read on the write path.
+- read: drop replays behind an online compaction's watermark,
+  deduplicate on ``(__commit, keys)`` (a retried foreachBatch
+  recomputes the identical partial, so one copy per commit is
+  exactly-once), then ``merge`` the partials.
+- compact: fold the log to its merged view — itself a valid partial,
+  so live appends keep composing — under a pinned-snapshot CAS commit.
+
+The public ``make_*`` / ``*_view`` / ``compact_*`` functions are thin
+bindings of those entries; their docstrings say only why the log is
+mergeable and what the merged view guarantees.
+
 Every log view here reads its log through ``_read_log``: one parquet
 scan over all committed files under the schema the manifest records
 (see ``txn``), so a view's read cost follows the rows in the log, not
 the number of commits behind them.
 """
+
 
 from __future__ import annotations
 
@@ -359,150 +380,307 @@ def make_live_log_sink(metadata_path: str, chunks_path: str):
     return sink
 
 
-# ---------------------------------------------------- incremental rollup
+# --------------------------------------------------------- mergeable logs
 
-def make_rollup_sink(
-    rollup_path: str,
-    key_cols: list[str],
-    time_col: str = "event_ts",
-    value_col: str = "size_bytes",
-    window: str = "1 hour",
-):
-    """Incrementally-maintained aggregate table (the streaming
-    materialized-view pattern): each micro-batch appends its PARTIAL
-    per-(key, bucket) aggregate — count + sum are mergeable, so the
-    per-batch cost is O(batch) and the rollup table is never read on
-    the write path.  Readers merge partials with ``rollup_view``;
-    ``compact_rollup`` folds the log when partial-row amplification
-    grows.  Append is an AtomicParquetTable commit, and every partial
-    row carries its batch id, so a replayed batch (foreachBatch
-    at-least-once) deduplicates exactly at read time."""
+def _nonempty(body):
+    """The one emptiness guard of every mergeable-log sink: an empty
+    micro-batch publishes no commit, so no reader ever scans an empty
+    version (one cheap ``isEmpty`` job per batch)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        partial = (
-            batch_df.groupBy(
-                *key_cols, F.window(time_col, window).alias("__w")
-            )
+        body(batch_df, batch_id)
+
+    return sink
+
+
+class MergeableLog:
+    """One append log of mergeable partials (module-internal; the public
+    names below bind the ``_LOGS`` entries).
+
+    ``keys`` are the columns a partial row is unique on within one
+    commit — a list, or a function of the log's columns for logs keyed
+    by their own schema; ``keyed(*cols)`` prefixes caller-chosen key
+    columns.  ``merge(deduped, keys, **params)`` folds the deduplicated
+    partials into the view."""
+
+    def __init__(self, keys, merge):
+        self.keys = keys
+        self.merge = merge
+
+    def keyed(self, *cols: str) -> "MergeableLog":
+        return MergeableLog([*cols, *self.keys], self.merge)
+
+    def append(self, df: DataFrame, path: str, batch_id: int) -> None:
+        """Crash-atomic append of ``df`` stamped with its commit id."""
+        AtomicParquetTable(path).append(df.withColumn("__commit", F.lit(batch_id)))
+
+    def sink(self, path: str, partial):
+        """foreachBatch body appending ``partial(batch_df)``."""
+        return _nonempty(
+            lambda batch_df, batch_id: self.append(partial(batch_df), path, batch_id)
+        )
+
+    def view_of(self, log: DataFrame, **params) -> DataFrame:
+        keys = self.keys(log.columns) if callable(self.keys) else self.keys
+        deduped = _drop_replays_behind_watermark(log).dropDuplicates(
+            ["__commit", *keys]
+        )
+        return self.merge(deduped, keys, **params)
+
+    def view(self, spark, path: str, **params) -> DataFrame:
+        return self.view_of(_read_log(spark, path), **params)
+
+    def compact(self, spark, path: str, quiesced: bool = True, **params) -> None:
+        """Fold the log to its merged view; atomic overwrite, a crash
+        leaves the uncompacted log intact (pinned-snapshot CAS in
+        ``_compact``).
+
+        ``quiesced=True`` stamps folded rows ``__commit=-1``: batch ids
+        are always >= 0, so a stream restarted on a FRESH checkpoint can
+        never collide with folded history.  It needs a quiesced,
+        fully-checkpointed log — a folded but uncheckpointed batch loses
+        its commit identity and its replay would double-count.
+        ``quiesced=False`` is safe UNDER a live stream instead: the fold
+        stamps the in-band replay watermark (``_stamp_folded``) and every
+        view drops replays behind it.  Run one quiesced fold before
+        restarting on a fresh checkpoint."""
+        _compact(spark, path, lambda log: self.view_of(log, **params), quiesced)
+
+
+def _total(col: str):
+    return F.sum(col).cast("long").alias(col)
+
+
+def _folded(*values):
+    """Merge that groups the deduplicated partials by the keys and folds
+    each value column: a bare name is its BIGINT sum, ``(fn, name)`` is
+    ``fn(name)`` — min, max, bit_or, bit_xor."""
+
+    def fold(v):
+        return _total(v) if isinstance(v, str) else v[0](v[1]).alias(v[1])
+
+    def merge(d: DataFrame, keys: list[str]) -> DataFrame:
+        return d.groupBy(*keys).agg(*map(fold, values))
+
+    return merge
+
+
+def _ratio(num: str, den: str, digits: int):
+    """``num / den`` as doubles, rounded the way the batch reports round."""
+    return F.round(
+        F.col(num).cast("double") / F.col(den).cast("double") + F.lit(1e-9), digits
+    )
+
+
+def _distinct(d: DataFrame, keys: list[str]) -> DataFrame:
+    return d.select(*keys).distinct()
+
+
+def _projected(*cols: str):
+    """Merge for per-document fact logs: no cross-batch merging, only
+    the replay dedup."""
+    return lambda d, keys: d.select(*cols)
+
+
+def _merge_index(d: DataFrame, keys: list[str]) -> DataFrame:
+    return d.groupBy(*keys).agg(
+        _total("df"),
+        F.array_sort(F.flatten(F.collect_list("postings"))).alias("postings"),
+    )
+
+
+def _merge_dd(d: DataFrame, keys: list[str]) -> DataFrame:
+    if "sgn" not in d.columns:
+        # state-format migration: sketch logs persisted before the
+        # mirrored negative store carried only positive buckets, with
+        # the exact-zero bucket encoded as bucket NULL — derive the
+        # sgn column on read so old stores keep working (they never
+        # held negative values, so sgn=1/0 reconstructs them exactly)
+        d = d.withColumn(
+            "sgn", F.when(F.col("bucket").isNotNull(), F.lit(1)).otherwise(F.lit(0))
+        )
+    groups = [c for c in keys if c not in ("sgn", "bucket")]
+    return d.groupBy(*groups, "sgn", "bucket").agg(_total("cnt"))
+
+
+def _bottom_k(d: DataFrame, keys: list[str], k: int) -> DataFrame:
+    w = W.partitionBy(*keys[:-1]).orderBy("h")
+    return (
+        _distinct(d, keys)
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
+    )
+
+
+def _top_priority(d: DataFrame, keys: list[str], k: int) -> DataFrame:
+    # priorities are a pure function of doc id, so identical rows from
+    # replays OR genuine re-ingestions collapse under the id dedup
+    return (
+        d.dropDuplicates(keys)
+        .drop("__commit")
+        .orderBy(F.col("priority").desc(), F.col(keys[0]))
+        .limit(k + 1)
+    )
+
+
+def _latest_anchor(d: DataFrame, keys: list[str]) -> DataFrame:
+    """Latest assignment per doc.  Within one commit a doc appears at
+    most once (batch rows and update rows are disjoint by the
+    left_anti in the sink); across commits the LOWEST anchor is the
+    newest (anchors only decrease), so ordering by anchor ascending
+    inside the __commit tiebreak makes replayed-then-compacted logs
+    resolve identically to live ones."""
+    w = W.partitionBy(keys[0]).orderBy(
+        F.col("__commit").desc(), F.col("anchor_id").asc()
+    )
+    return (
+        d.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "__commit")
+    )
+
+
+# Every mergeable log in the module.  Entries with empty or partial
+# keys are completed per call with ``keyed`` (caller-chosen key columns).
+_LOGS: dict[str, MergeableLog] = {
+    "rollup": MergeableLog(["bucket"], _folded("n_events", "value_sum")),
+    "index": MergeableLog(["term"], _merge_index),
+    "ivf": MergeableLog(["neighbor_id"], _projected("cell", "neighbor_id", "v")),
+    "cms": MergeableLog(["depth", "slot"], _folded("cnt")),
+    "hh_candidates": MergeableLog([], _distinct),
+    "hll": MergeableLog(["bucket"], _folded((F.max, "rho"))),
+    "kmv": MergeableLog(["h"], _bottom_k),
+    "datasheet": MergeableLog(
+        ["source"], _folded("n_docs", "total_tokens", "hi_q_docs", "en_docs")
+    ),
+    # keys are the log's own columns: sketch keys, sgn (absent in the
+    # pre-sgn format) and bucket
+    "dd": MergeableLog(
+        lambda cols: [c for c in cols if c not in ("cnt", "__commit")], _merge_dd
+    ),
+    "seasonal": MergeableLog(["h", "t"], _folded("cnt")),
+    "signature": MergeableLog([], lambda d, keys: d.select(*keys, "sig")),
+    "window_hash": MergeableLog(["h"], _distinct),
+    "substring_clean": MergeableLog([], lambda d, keys: d.drop("__commit")),
+    "bloom": MergeableLog(["word"], _folded((F.bit_or, "bits"))),
+    "curation_yield": MergeableLog(
+        ["stage"], _folded("docs_in", "docs_removed", "docs_out")
+    ),
+    "manifest": MergeableLog(
+        ["shard_id"],
+        _folded(
+            "n_docs", "n_tokens", "n_chars", (F.min, "min_doc_id"),
+            (F.max, "max_doc_id"), (F.bit_xor, "checksum_xor"), "checksum_sum",
+        ),
+    ),
+    "priority_sample": MergeableLog([], _top_priority),
+    "bootstrap": MergeableLog(["grp", "b"], _folded("sum_m", "sum_mv")),
+    "gini": MergeableLog(["grp", "weight"], _folded("cnt")),
+    "term_histogram": MergeableLog(["src", "term"], _folded("cnt")),
+    "length_histogram": MergeableLog(["src", "len"], _folded("cnt")),
+    "privacy": MergeableLog([], _folded("n")),
+    "classifier_tokens": MergeableLog(["label", "tok"], _folded("c")),
+    "classifier_docs": MergeableLog(["label"], _folded("n")),
+    "fertility": MergeableLog(
+        ["grp"], _folded("n_docs", "n_words", "n_tokens", "n_bytes", "n_chars")
+    ),
+    "pii": MergeableLog(["src"], _folded("n_docs", "n_pii_docs")),
+    "embedding_health": MergeableLog(["dim"], _folded("n", "sv", "svv", "n_near_zero")),
+    "conformal": MergeableLog(["is_cal", "q"], _folded("nk")),
+    "retrieval_eval": MergeableLog(
+        ["d", "term"], _projected("d", "rel", "dl", "term", "tf")
+    ),
+    "wordfreq": MergeableLog(["w"], _folded("freq")),
+    "semantic_decontam": MergeableLog(
+        ["vec_id"],
+        _projected("vec_id", "max_eval_cosine", "matched_eval_id", "is_contaminated"),
+    ),
+    # split and moved are functions of (doc, anchor): whole-row dedup
+    "split_assign": MergeableLog(["anchor_id", "anchor_changed"], _latest_anchor),
+    "bitext_embeddings": MergeableLog(
+        ["id"],
+        lambda d, keys: d.select("id", "l", "v", "n", "buckets").dropDuplicates(keys),
+    ),
+    "bitext_candidates": MergeableLog(
+        ["sid", "tid"],
+        lambda d, keys: d.select("sid", "tid", "cos", "cq").dropDuplicates(keys),
+    ),
+    "trigram_tgc": MergeableLog(
+        ["tg_h"], _folded("c3", (F.min, "c12_h"), (F.min, "b23_h"), (F.min, "w3_h"))
+    ),
+    "trigram_bgc": MergeableLog(["b23_h"], _folded("c2b", (F.min, "w2_h"))),
+    "trigram_unic": MergeableLog(["w3_h"], _folded("c1w")),
+}
+
+
+# ---------------------------------------------------- incremental rollup
+
+def make_rollup_sink(
+    rollup_path: str, key_cols: list[str], time_col: str = "event_ts",
+    value_col: str = "size_bytes", window: str = "1 hour",
+):
+    """Incrementally-maintained aggregate table (the streaming
+    materialized-view pattern): each micro-batch appends its partial
+    per-(key, bucket) count + sum — both additive, so the merged
+    ``rollup_view`` equals the batch aggregate over all data."""
+
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return (
+            batch_df.groupBy(*key_cols, F.window(time_col, window).alias("__w"))
             .agg(
                 F.count("*").alias("n_events"),
                 F.sum(value_col).alias("value_sum"),
             )
             .select(
-                *key_cols,
-                F.col("__w.start").alias("bucket"),
-                "n_events",
-                "value_sum",
+                *key_cols, F.col("__w.start").alias("bucket"), "n_events", "value_sum"
             )
         )
-        AtomicParquetTable(rollup_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
 
-    return sink
+    return _LOGS["rollup"].sink(rollup_path, partial)
 
 
 def rollup_view(spark, rollup_path: str, key_cols: list[str]) -> DataFrame:
-    """Merged rollup: sum the partial aggregates per (key, bucket).
-    Replayed batches are deduplicated by (commit, key, bucket) first —
-    a retried foreachBatch recomputes the identical partial row, so
-    keeping one copy per commit makes the view exactly-once."""
-    return _rollup_view_of(_read_log(spark, rollup_path), key_cols)
-
-
-def _rollup_view_of(log: DataFrame, key_cols: list[str]) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", *key_cols, "bucket"])
-        .groupBy(*key_cols, "bucket")
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("value_sum").cast("long").alias("value_sum"),
-        )
-    )
+    """Merged rollup: the partial aggregates summed per (key, bucket)."""
+    return _LOGS["rollup"].keyed(*key_cols).view(spark, rollup_path)
 
 
 def compact_rollup(
     spark, rollup_path: str, key_cols: list[str], quiesced: bool = True
 ) -> None:
-    """Fold the partial-aggregate log to one row per (key, bucket);
-    atomic overwrite, crash leaves the uncompacted log intact.
-    Quiesced folds carry __commit=-1: foreachBatch batch ids are
-    always >= 0, so a stream restarted on a FRESH checkpoint (batch
-    ids starting over at 0) can never collide with compacted history
-    in the per-commit dedup.
-
-    The default requires a quiesced, fully-checkpointed log: folding
-    an appended-but-uncheckpointed batch loses its __commit identity,
-    so the stream's replay of that batch re-appends rows the
-    per-commit dedup can no longer match — partials double-count.
-    ``quiesced=False`` makes compaction safe UNDER a live stream
-    instead: the fold stamps the in-band replay watermark
-    (``_stamp_folded``) and the views drop replayed batches behind it.
-    (Same contract for compact_index and compact_log.)  Fold,
-    watermark, and publish all pin ONE snapshot with a CAS commit
-    (see ``_compact``)."""
-    _compact(
-        spark, rollup_path, lambda log: _rollup_view_of(log, key_cols), quiesced
-    )
+    _LOGS["rollup"].keyed(*key_cols).compact(spark, rollup_path, quiesced)
 
 
 # ------------------------------------------------ incremental inverted index
 
 def make_index_sink(
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    index_path: str, text_col: str = "text", id_col: str = "doc_id",
     min_token_len: int = 3,
 ):
-    """Incrementally-maintained inverted index (streaming corpus →
-    searchable index): each micro-batch appends its PARTIAL per-term
-    (df, postings) rows — df sums and posting lists concatenate, so
-    both are mergeable, per-batch cost is O(batch), and the index is
-    never read on the write path.  Same log shape as make_rollup_sink:
-    every partial row carries its batch id, a replayed batch
-    (foreachBatch at-least-once) recomputes the identical partial and
-    deduplicates at read time, and the append is an atomic commit.
+    """Incrementally-maintained inverted index: each micro-batch
+    appends its partial per-term (df, postings) rows — dfs sum and
+    posting lists concatenate, so both are mergeable.
 
     Assumes each document arrives in exactly one batch (an append-only
     corpus stream); upstream dedup handles re-crawls."""
     from ..operators.retrieval import inverted_index
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = inverted_index(
+    return _LOGS["index"].sink(
+        index_path,
+        lambda batch_df: inverted_index(
             batch_df, text_col=text_col, id_col=id_col, min_token_len=min_token_len
-        ).select("term", "df", "postings")
-        AtomicParquetTable(index_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def index_view(
-    spark, index_path: str, max_postings: int | None = None
-) -> DataFrame:
-    """Merged inverted index: sum partial dfs and concat+sort partial
-    posting lists per term, after per-commit dedup (exactly-once under
-    replay).  ``max_postings`` applies the same stopword truncation cap
-    as operators.retrieval.inverted_index, with df staying exact;
-    the output schema matches inverted_index exactly."""
-    return _index_view_of(_read_log(spark, index_path), max_postings)
-
-
-def _index_view_of(log: DataFrame, max_postings: int | None = None) -> DataFrame:
-    merged = (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "term"])
-        .groupBy("term")
-        .agg(
-            F.sum("df").cast("long").alias("df"),
-            F.array_sort(F.flatten(F.collect_list("postings"))).alias("postings"),
-        )
+        ).select("term", "df", "postings"),
     )
+
+
+def index_view(spark, index_path: str, max_postings: int | None = None) -> DataFrame:
+    """Merged inverted index: summed dfs, concatenated + sorted posting
+    lists.  ``max_postings`` applies the same stopword truncation cap
+    as operators.retrieval.inverted_index, with df staying exact; the
+    output schema matches inverted_index exactly."""
+    merged = _LOGS["index"].view(spark, index_path)
     if max_postings is not None:
         return merged.select(
             "term",
@@ -514,71 +692,36 @@ def _index_view_of(log: DataFrame, max_postings: int | None = None) -> DataFrame
 
 
 def compact_index(spark, index_path: str, quiesced: bool = True) -> None:
-    """Fold the partial-index log to one row per term; atomic
-    overwrite, crash leaves the uncompacted log intact.  Quiesced
-    folds stamp __commit=-1 for the same fresh-checkpoint-restart
-    reason as compact_rollup; ``quiesced=False`` stamps the in-band
-    replay watermark so compaction is safe under a live stream (see
-    compact_rollup's docstring for the full contract; pinned-snapshot
-    CAS semantics in ``_compact``)."""
-    _compact(
-        spark,
-        index_path,
-        lambda log: _index_view_of(log).select("term", "df", "postings"),
-        quiesced,
-    )
+    _LOGS["index"].compact(spark, index_path, quiesced)
 
 
 # ------------------------------------------------ incremental IVF ANN index
 
-def make_ivf_sink(
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Incrementally-maintained IVF postings (streaming embedding
-    corpus → searchable ANN index): centroids are FIXED at build time
-    (written by ``operators.similarity.ivf_index_build`` at
-    ``{index_path}/centroids`` — retraining is an offline rebuild, as
-    in every production IVF system); each micro-batch assigns its
-    vectors with the broadcast argmax (shuffle-free) and APPENDS
-    (cell, neighbor_id, v) rows — O(batch) per batch, the index is
-    never read on the write path.  Same log contract as
-    make_rollup_sink/make_index_sink: every row carries its batch id,
-    replays dedupe at read time, appends are atomic commits."""
+def make_ivf_sink(index_path: str, id_col: str = "vec_id", vec_col: str = "embedding"):
+    """Incrementally-maintained IVF postings: centroids are FIXED at
+    build time (``operators.similarity.ivf_index_build`` writes them to
+    ``{index_path}/centroids``; retraining is an offline rebuild, as in
+    every production IVF system), so each micro-batch assigns its
+    vectors with the broadcast argmax (shuffle-free) and appends
+    (cell, neighbor_id, v) rows — per-vector facts that union to the
+    one-shot assignment."""
     from ..operators.similarity import _as_double, nearest_cells
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        cents = spark.read.parquet(f"{index_path}/centroids")
+    def partial(batch_df: DataFrame) -> DataFrame:
+        cents = batch_df.sparkSession.read.parquet(f"{index_path}/centroids")
         c = batch_df.select(
             F.col(id_col).alias("neighbor_id"),
             _as_double(F.col(vec_col)).alias("v"),
         )
-        assigned = nearest_cells(c, cents, 1, "cell")
-        AtomicParquetTable(f"{index_path}/postings_log").append(
-            assigned.withColumn("__commit", F.lit(batch_id))
-        )
+        return nearest_cells(c, cents, 1, "cell")
 
-    return sink
+    return _LOGS["ivf"].sink(f"{index_path}/postings_log", partial)
 
 
 def ivf_stream_view(spark, index_path: str) -> DataFrame:
-    """Merged streaming postings: per-commit dedup (exactly-once under
-    replay, with the online-compaction watermark honored) → the
-    (cell, neighbor_id, v) frame ``ivf_search_postings`` scores
-    against."""
-    return _ivf_view_of(_read_log(spark, f"{index_path}/postings_log"))
-
-
-def _ivf_view_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "neighbor_id"])
-        .select("cell", "neighbor_id", "v")
-    )
+    """Merged streaming postings: the (cell, neighbor_id, v) frame
+    ``ivf_search_postings`` scores against."""
+    return _LOGS["ivf"].view(spark, f"{index_path}/postings_log")
 
 
 def ivf_stream_search(
@@ -595,63 +738,36 @@ def ivf_stream_search(
 
 
 def compact_ivf(spark, index_path: str, quiesced: bool = True) -> None:
-    """Fold the postings log to one row per vector; atomic overwrite.
-    Same quiesced/online contract as compact_rollup (pinned-snapshot
-    CAS semantics in ``_compact``)."""
-    _compact(spark, f"{index_path}/postings_log", _ivf_view_of, quiesced)
+    _LOGS["ivf"].compact(spark, f"{index_path}/postings_log", quiesced)
 
 
 # ------------------------------------------- incremental count-min sketch
 
 def make_cms_sink(sketch_path: str, term_col: str = "term"):
-    """Incrementally-maintained count-min sketch (streaming term
-    frequencies → bounded-size frequency oracle): each micro-batch
-    appends its PARTIAL counter matrix — depth*width rows regardless
-    of batch size, cell-wise additive, so the merged sketch equals the
-    batch-built sketch over all data (count-min is exactly mergeable).
-    Same log contract as make_rollup_sink: per-commit replay dedup,
-    atomic appends, online-compaction watermark honored."""
+    """Incrementally-maintained count-min sketch: each micro-batch
+    appends its partial counter matrix — depth*width rows regardless of
+    batch size, cell-wise additive, so the merged sketch equals the
+    batch-built sketch over all data (count-min is exactly mergeable)."""
     from ..operators.sketches import cms_build
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = cms_build(batch_df, term_col)
-        AtomicParquetTable(sketch_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def cms_view(spark, sketch_path: str) -> DataFrame:
-    """Merged sketch: cell-wise sum of the partial counter matrices
-    after per-commit dedup — feed to operators.sketches.cms_estimate."""
-    return _cms_view_of(_read_log(spark, sketch_path))
-
-
-def _cms_view_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "depth", "slot"])
-        .groupBy("depth", "slot")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    return _LOGS["cms"].sink(
+        sketch_path, lambda batch_df: cms_build(batch_df, term_col)
     )
 
 
+def cms_view(spark, sketch_path: str) -> DataFrame:
+    """Merged sketch — feed to operators.sketches.cms_estimate."""
+    return _LOGS["cms"].view(spark, sketch_path)
+
+
 def compact_cms(spark, sketch_path: str, quiesced: bool = True) -> None:
-    """Fold the partial-sketch log to one counter matrix; same
-    quiesced/online contract as the other compactors (pinned-snapshot
-    CAS semantics in ``_compact``)."""
-    _compact(spark, sketch_path, _cms_view_of, quiesced)
+    _LOGS["cms"].compact(spark, sketch_path, quiesced)
 
 
 # -------------------------------------------- streaming heavy hitters
 
 def make_heavy_hitters_sink(
-    path: str,
-    term_col: str = "term",
-    candidates_per_batch: int = 32,
+    path: str, term_col: str = "term", candidates_per_batch: int = 32,
     candidate_floor: int | None = None,
 ):
     """Streaming heavy-hitter tracking as two bounded mergeable logs:
@@ -670,19 +786,12 @@ def make_heavy_hitters_sink(
     floor occurrences per batch becomes a candidate on its first such
     batch.  A term below BOTH nets in every batch still escapes —
     that residual failure mode is inherent to bounded candidate
-    tracking (tested in test_streaming.py).
+    tracking (tested in test_streaming.py)."""
+    from ..operators.sketches import cms_build
 
-    Same replay contract as the underlying CMS sink; the candidate log
-    dedups per commit and a replayed batch re-appends an identical
-    candidate set."""
-    from pyspark.sql import functions as F
-
-    cms_sink = make_cms_sink(f"{path}/cms", term_col)
-
+    @_nonempty
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cms_sink(batch_df, batch_id)
+        _LOGS["cms"].append(cms_build(batch_df, term_col), f"{path}/cms", batch_id)
         counts = batch_df.groupBy(term_col).agg(F.count("*").alias("__cnt"))
         top = (
             counts.orderBy(F.desc("__cnt"), F.asc(term_col))
@@ -693,9 +802,7 @@ def make_heavy_hitters_sink(
             top = top.union(
                 counts.filter(F.col("__cnt") >= candidate_floor).select(term_col)
             ).distinct()
-        AtomicParquetTable(f"{path}/cands").append(
-            top.withColumn("__commit", F.lit(batch_id))
-        )
+        _LOGS["hh_candidates"].append(top, f"{path}/cands", batch_id)
 
     return sink
 
@@ -708,12 +815,8 @@ def heavy_hitters_view(
     and the 1024-cell sketch — no raw data."""
     from ..operators.sketches import cms_estimate
 
-    cands = (
-        _drop_replays_behind_watermark(_read_log(spark, f"{path}/cands"))
-        .select(term_col)
-        .distinct()
-    )
-    est = cms_estimate(_cms_view_of(_read_log(spark, f"{path}/cms")), cands)
+    cands = _LOGS["hh_candidates"].keyed(term_col).view(spark, f"{path}/cands")
+    est = cms_estimate(cms_view(spark, f"{path}/cms"), cands)
     return est.orderBy(F.desc("cms_estimate"), F.asc(term_col)).limit(k)
 
 
@@ -723,60 +826,35 @@ def compact_heavy_hitters(
     """Compact both logs: fold the sketch cell-wise and the candidate
     log to its distinct terms."""
     compact_cms(spark, f"{path}/cms", quiesced)
-    _compact(
-        spark,
-        f"{path}/cands",
-        lambda log: _drop_replays_behind_watermark(log).select(term_col).distinct(),
-        quiesced,
-    )
+    _LOGS["hh_candidates"].keyed(term_col).compact(spark, f"{path}/cands", quiesced)
 
 
 # ------------------------------------ incremental portable HLL registers
 
 def make_hll_sink(sketch_path: str, keys: list[str], col: str):
     """Incrementally-maintained portable HLL (streaming distinct
-    counts): each micro-batch appends its PARTIAL (keys..., bucket,
+    counts): each micro-batch appends its partial (keys..., bucket,
     rho) registers — at most |keys| x 256 rows regardless of batch
     size.  HLL union is the element-wise register MAX, which is not
-    just mergeable but IDEMPOTENT — a replayed batch's registers
-    cannot inflate the estimate even without commit dedup — so this is
-    the most replay-tolerant sink in the family; the per-commit dedup
-    is kept anyway for log-size hygiene and the shared compaction
-    contract.  Estimates come from
+    just mergeable but IDEMPOTENT — a replayed batch cannot inflate
+    the estimate even without commit dedup.  Estimates come from
     operators.sketches.hll_portable_estimate over the merged view,
     identical to the batch-built sketch (the x89 mergeability law)."""
     from ..operators.sketches import hll_portable_registers
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = hll_portable_registers(batch_df, keys, col)
-        AtomicParquetTable(sketch_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def hll_stream_view(spark, sketch_path: str, keys: list[str]) -> DataFrame:
-    """Merged registers: per-commit dedup then max(rho) per (keys,
-    bucket) — feed to operators.sketches.hll_portable_estimate."""
-    return _hll_view_of(_read_log(spark, sketch_path), keys)
-
-
-def _hll_view_of(log: DataFrame, keys: list[str]) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", *keys, "bucket"])
-        .groupBy(*keys, "bucket")
-        .agg(F.max("rho").alias("rho"))
+    return _LOGS["hll"].sink(
+        sketch_path, lambda batch_df: hll_portable_registers(batch_df, keys, col)
     )
 
 
+def hll_stream_view(spark, sketch_path: str, keys: list[str]) -> DataFrame:
+    """Merged registers, max(rho) per (keys, bucket) — feed to
+    operators.sketches.hll_portable_estimate."""
+    return _LOGS["hll"].keyed(*keys).view(spark, sketch_path)
+
+
 def compact_hll(spark, sketch_path: str, keys: list[str], quiesced: bool = True) -> None:
-    """Fold the register log to one row set per (keys, bucket); same
-    quiesced/online contract as the other compactors."""
-    _compact(spark, sketch_path, lambda log: _hll_view_of(log, keys), quiesced)
+    _LOGS["hll"].keyed(*keys).compact(spark, sketch_path, quiesced)
 
 
 def make_kmv_sink(sketch_path: str, keys: list[str], col: str, k: int = 64):
@@ -786,31 +864,11 @@ def make_kmv_sink(sketch_path: str, keys: list[str], col: str, k: int = 64):
     its per-group bottom-k distinct hash rows: at most |groups| x k
     rows regardless of batch size.  KMV union is the k smallest of
     the union — min-like, hence IDEMPOTENT under replay exactly like
-    HLL's register max: a re-appended batch cannot perturb the merged
-    bottom-k.  Per-commit hygiene and the shared compaction contract
-    are kept anyway (compact_kmv)."""
+    HLL's register max."""
     from ..operators.sketches import kmv_partial_rows
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = kmv_partial_rows(batch_df, keys, F.col(col), k)
-        AtomicParquetTable(sketch_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _kmv_view_of(log: DataFrame, keys: list[str], k: int) -> DataFrame:
-    deduped = (
-        _drop_replays_behind_watermark(log).select(*keys, "h").distinct()
-    )
-    w = W.partitionBy(*keys).orderBy("h")
-    return (
-        deduped.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    return _LOGS["kmv"].sink(
+        sketch_path, lambda batch_df: kmv_partial_rows(batch_df, keys, F.col(col), k)
     )
 
 
@@ -819,16 +877,15 @@ def kmv_stream_view(spark, sketch_path: str, keys: list[str], k: int = 64) -> Da
     kmv_sketch_by over all data ever logged — feed straight to
     kmv_overlap_matrix for the continuously-maintained source-overlap
     report."""
-    rows = _kmv_view_of(_read_log(spark, sketch_path), keys, k)
+    rows = _LOGS["kmv"].keyed(*keys).view(spark, sketch_path, k=k)
     return rows.groupBy(*keys).agg(F.array_sort(F.collect_list("h")).alias("kmv"))
 
 
 def compact_kmv(
     spark, sketch_path: str, keys: list[str], k: int = 64, quiesced: bool = True
 ) -> None:
-    """Fold the hash log to the current per-group bottom-k rows; same
-    quiesced/online contract as the other compactors."""
-    _compact(spark, sketch_path, lambda log: _kmv_view_of(log, keys, k), quiesced)
+    """Fold the hash log to the current per-group bottom-k rows."""
+    _LOGS["kmv"].keyed(*keys).compact(spark, sketch_path, quiesced, k=k)
 
 
 # ---------------------------------------- streaming corpus datasheet
@@ -841,48 +898,31 @@ def make_datasheet_sink(path: str):
     md5 fingerprints, because distinct-count is NOT sum-mergeable and
     at 100 TB the fingerprint set cannot be kept; the register sketch
     is the standard fix.  Both logs are bounded per batch (sources x
-    1 row; sources x 256 registers) and share the replay/compaction
-    contract."""
-    from ..operators import text as tx
+    1 row; sources x 256 registers)."""
+    from ..operators.sketches import hll_portable_registers
+    from ..operators.text import fingerprint
 
-    hll = make_hll_sink(f"{path}/fps", ["source"], "__fp")
-
+    @_nonempty
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         t = F.col("text")
-        per = batch_df.select(
-            "source",
-            tx.token_count(t).alias("n_tokens"),
-            (tx.quality_score(t) >= 0.9).cast("long").alias("hi_q"),
-            (tx.lang_id(t) == "en").cast("long").alias("is_en"),
-            tx.fingerprint(t).alias("__fp"),
-        )
-        sums = per.groupBy("source").agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.sum("hi_q").alias("hi_q_docs"),
-            F.sum("is_en").alias("en_docs"),
-        )
-        AtomicParquetTable(f"{path}/sums").append(
-            sums.withColumn("__commit", F.lit(batch_id))
-        )
-        hll(per.select("source", "__fp"), batch_id)
+        per = batch_df.select("source", *_doc_stats(t), fingerprint(t).alias("__fp"))
+        sums = _LOGS["datasheet"].merge(per.drop("__fp"), ["source"])
+        _LOGS["datasheet"].append(sums, f"{path}/sums", batch_id)
+        fps = hll_portable_registers(per.select("source", "__fp"), ["source"], "__fp")
+        _LOGS["hll"].append(fps, f"{path}/fps", batch_id)
 
     return sink
 
 
-def _datasheet_sums_of(log: DataFrame) -> DataFrame:
+def _doc_stats(t):
+    """One document as a one-row partial of the datasheet sums."""
+    from ..operators import text as tx
+
     return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "source"])
-        .groupBy("source")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("total_tokens").cast("long").alias("total_tokens"),
-            F.sum("hi_q_docs").cast("long").alias("hi_q_docs"),
-            F.sum("en_docs").cast("long").alias("en_docs"),
-        )
+        F.lit(1).alias("n_docs"),
+        tx.token_count(t).alias("total_tokens"),
+        (tx.quality_score(t) >= 0.9).cast("long").alias("hi_q_docs"),
+        (tx.lang_id(t) == "en").cast("long").alias("en_docs"),
     )
 
 
@@ -892,27 +932,21 @@ def datasheet_view(spark, path: str) -> DataFrame:
     source.  Touches only the two small logs, never raw documents."""
     from ..operators.sketches import hll_portable_estimate
 
-    sums = _datasheet_sums_of(_read_log(spark, f"{path}/sums"))
+    sums = _LOGS["datasheet"].view(spark, f"{path}/sums")
     fps = hll_portable_estimate(
-        _hll_view_of(_read_log(spark, f"{path}/fps"), ["source"]), ["source"]
+        hll_stream_view(spark, f"{path}/fps", ["source"]), ["source"]
     ).select("source", F.col("approx_distinct").alias("approx_distinct_fps"))
     n = F.col("n_docs").cast("double")
     return sums.join(fps, "source").select(
         "source",
         "n_docs",
         "total_tokens",
-        F.round(F.col("total_tokens").cast("double") / n + F.lit(1e-9), 4).alias(
-            "mean_tokens"
-        ),
-        F.round(F.col("hi_q_docs").cast("double") / n + F.lit(1e-9), 4).alias(
-            "hi_quality_rate"
-        ),
-        F.round(F.col("en_docs").cast("double") / n + F.lit(1e-9), 4).alias("en_rate"),
+        _ratio("total_tokens", "n_docs", 4).alias("mean_tokens"),
+        _ratio("hi_q_docs", "n_docs", 4).alias("hi_quality_rate"),
+        _ratio("en_docs", "n_docs", 4).alias("en_rate"),
         "approx_distinct_fps",
         F.round(
-            F.greatest(
-                F.lit(0.0), F.lit(1.0) - F.col("approx_distinct_fps") / n
-            )
+            F.greatest(F.lit(0.0), F.lit(1.0) - F.col("approx_distinct_fps") / n)
             + F.lit(1e-9),
             4,
         ).alias("dup_rate_est"),
@@ -920,8 +954,8 @@ def datasheet_view(spark, path: str) -> DataFrame:
 
 
 def compact_datasheet(spark, path: str, quiesced: bool = True) -> None:
-    """Fold both datasheet logs; same contract as the other sinks."""
-    _compact(spark, f"{path}/sums", _datasheet_sums_of, quiesced)
+    """Fold both datasheet logs."""
+    _LOGS["datasheet"].compact(spark, f"{path}/sums", quiesced)
     compact_hll(spark, f"{path}/fps", ["source"], quiesced)
 
 
@@ -934,56 +968,25 @@ def make_dd_sink(sketch_path: str, value_col: str, keys: list[str] | None = None
     sized regardless of batch size, bucket-wise additive, so the
     merged sketch equals the batch-built sketch over all data
     (DDSketch merge is exact).  The streaming answer to "p99 latency
-    right now" without ever re-scanning history.  Same log contract
-    as make_cms_sink: per-commit replay dedup, atomic appends,
-    online-compaction watermark honored."""
+    right now" without ever re-scanning history."""
     from ..operators.sketches import dd_build
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = dd_build(batch_df, value_col, keys=keys)
-        AtomicParquetTable(sketch_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def dd_stream_view(spark, sketch_path: str) -> DataFrame:
-    """Merged sketch: bucket-wise sum of the partials after per-commit
-    dedup — feed to operators.sketches.dd_quantiles.  Sketch keys are
-    derived from the log's own columns (everything that is not
-    bucket/cnt/__commit), so a keyed sketch can never be silently
-    folded without its keys."""
-    return _dd_view_of(_read_log(spark, sketch_path))
-
-
-def _dd_view_of(log: DataFrame) -> DataFrame:
-    if "sgn" not in log.columns:
-        # state-format migration: sketch logs persisted before the
-        # mirrored negative store carried only positive buckets, with
-        # the exact-zero bucket encoded as bucket NULL — derive the
-        # sgn column on read so old stores keep working (they never
-        # held negative values, so sgn=1/0 reconstructs them exactly)
-        log = log.withColumn(
-            "sgn",
-            F.when(F.col("bucket").isNotNull(), F.lit(1)).otherwise(F.lit(0)),
-        )
-    keys = [c for c in log.columns if c not in ("sgn", "bucket", "cnt", "__commit")]
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", *keys, "sgn", "bucket"])
-        .groupBy(*keys, "sgn", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    return _LOGS["dd"].sink(
+        sketch_path, lambda batch_df: dd_build(batch_df, value_col, keys=keys)
     )
 
 
+def dd_stream_view(spark, sketch_path: str) -> DataFrame:
+    """Merged sketch: bucket-wise sums — feed to
+    operators.sketches.dd_quantiles.  Sketch keys are derived from the
+    log's own columns (everything that is not sgn/bucket/cnt/__commit),
+    so a keyed sketch can never be silently folded without its keys;
+    logs written before the sgn column read unchanged."""
+    return _LOGS["dd"].view(spark, sketch_path)
+
+
 def compact_dd(spark, sketch_path: str, quiesced: bool = True) -> None:
-    """Fold the partial-sketch log to one bucket table (keys derived
-    from the log's columns, like dd_stream_view); same quiesced/online
-    contract as the other compactors."""
-    _compact(spark, sketch_path, _dd_view_of, quiesced)
+    _LOGS["dd"].compact(spark, sketch_path, quiesced)
 
 
 # ------------------------------------ streaming seasonal anomalies
@@ -995,21 +998,18 @@ def make_seasonal_sink(
     reference's continuous-monitoring story — its Grafana thresholds
     watch exactly this kind of per-hour health signal): each
     micro-batch appends its partial per-(type, hour) event counts —
-    counts are bucket-wise additive, so the merged state equals the
-    batch-built hourly series exactly, and the per-batch cost is
-    O(batch).  Same log contract as make_rollup_sink: per-commit
-    replay dedup, atomic appends, online-compaction watermark.
+    bucket-wise additive, so the merged state equals the batch-built
+    hourly series exactly.
 
     The sink maintains the SPARSE hourly counts, not the scored
     anomalies: zero-filling needs the global observed range and the
     leave-one-out slot baselines shift with every new hour, so scoring
-    happens at read time (``seasonal_view``) over the tiny hours x
-    types state — where it reuses the batch operator's exact plan."""
+    happens at read time over the tiny hours x types state, through
+    the batch operators' exact plans (``seasonal_view`` and the six
+    sibling detectors below)."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = (
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.groupBy(
                 F.col(type_col).alias("t"),
                 F.window(time_col, "1 hour").alias("__w"),
@@ -1017,155 +1017,130 @@ def make_seasonal_sink(
             .agg(F.count("*").alias("cnt"))
             .select("t", F.col("__w.start").alias("h"), "cnt")
         )
-        AtomicParquetTable(counts_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
 
-    return sink
+    return _LOGS["seasonal"].sink(counts_path, partial)
 
 
-def _seasonal_sparse_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "t", "h"])
-        .groupBy("h", "t")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
+# hour-grid frames the LAST call of each hourly-store view persisted
+# (via densify_hourly's tracked_persist), keyed by view name — released
+# on that view's next call, so a long-running monitoring loop holds at
+# most one read's worth of cached state per view instead of accumulating
+# per read (Engine.clear_caches is not reachable from this read path)
+_HOURLY_VIEW_FRAMES: dict[str, list[DataFrame]] = {}
 
 
-# frames the LAST seasonal_view call persisted (via densify_hourly's
-# tracked_persist) — released on the next call, so a long-running
-# monitoring loop re-reading the view holds at most one view's worth
-# of cached state instead of accumulating per read (Engine.clear_caches
-# is not reachable from this streaming read path)
-_SEASONAL_VIEW_FRAMES: list[DataFrame] = []
+def _hourly_view(
+    name: str, spark, counts_path: str, score, *args, **kwargs
+) -> DataFrame:
+    """``score(grid, *args, **kwargs)`` — a batch detector's
+    ``*_from_dense`` core — over the dense grid of the MERGED hourly-count
+    store, so merged-view == batch-operator is a structural guarantee.
+    Scope-releases only the frames this view's previous call persisted
+    (cache.release), never the ones other readers hold."""
+    from .. import cache
+    from ..operators.timeseries import densify_hourly
+
+    cache.release(_HOURLY_VIEW_FRAMES.pop(name, []))
+    pos = cache.mark()
+    grid = densify_hourly(_LOGS["seasonal"].view(spark, counts_path))
+    view = score(grid, *args, **kwargs)
+    _HOURLY_VIEW_FRAMES[name] = cache.tracked_since(pos)
+    return view
 
 
 def seasonal_view(spark, counts_path: str, z_threshold: float = 2.0) -> DataFrame:
-    """Anomalies over the MERGED hourly state: per-commit dedup
-    (exactly-once under foreachBatch replay), then the dense grid +
-    leave-one-out scoring runs through the IDENTICAL code path as the
-    batch operator (``seasonal_scores_from_dense``) — merged-view ==
-    batch-operator is a structural guarantee, tested with planted
-    outage + spike batches.  Each call scope-releases the hour-grid
-    frames the PREVIOUS call persisted (cache.release), bounding a
-    monitoring loop's cached state at one view."""
-    from .. import cache
-    from ..operators.timeseries import densify_hourly, seasonal_scores_from_dense
+    """Hour-of-day anomalies (leave-one-out scoring), tested with
+    planted outage + spike batches."""
+    from ..operators.timeseries import seasonal_scores_from_dense as score
 
-    cache.release(_SEASONAL_VIEW_FRAMES)
-    _SEASONAL_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = seasonal_scores_from_dense(densify_hourly(sparse), z_threshold)
-    _SEASONAL_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
+    return _hourly_view("seasonal", spark, counts_path, score, z_threshold)
+
 
 
 def compact_seasonal(spark, counts_path: str, quiesced: bool = True) -> None:
-    """Fold the hourly-count log to one row per (hour, type); same
-    quiesced/online contract as the other compactors."""
-    _compact(spark, counts_path, _seasonal_sparse_of, quiesced)
-
-
-_ROBUST_VIEW_FRAMES: list[DataFrame] = []
+    _LOGS["seasonal"].compact(spark, counts_path, quiesced)
 
 
 def robust_view(spark, counts_path: str, z_threshold: float = 3.5) -> DataFrame:
-    """Median/MAD robust outliers over the SAME hourly-count store the
-    seasonal sink maintains — the third detector served by the one
-    rollup (seasonal = hour-of-day deviations, CUSUM = sustained
-    shifts, robust = contamination-proof point outliers).  Identical
-    code path as the batch operator; same replay dedup and
-    scope-release cache bounds as the sibling views."""
-    from .. import cache
-    from ..operators.timeseries import densify_hourly, robust_scores_from_dense
+    """Median/MAD robust point outliers over the hourly-count store."""
+    from ..operators.timeseries import robust_scores_from_dense as score
 
-    cache.release(_ROBUST_VIEW_FRAMES)
-    _ROBUST_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = robust_scores_from_dense(densify_hourly(sparse), z_threshold)
-    _ROBUST_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
+    return _hourly_view("robust", spark, counts_path, score, z_threshold)
 
-
-_CUSUM_VIEW_FRAMES: list[DataFrame] = []
 
 
 def cusum_view(
     spark, counts_path: str, slack: float = 0.5, threshold: float = 5.0
 ) -> DataFrame:
-    """CUSUM level-shift detection over the SAME incrementally-
-    maintained hourly-count store the seasonal sink writes — no new
-    state format, the one rollup serves both detectors (seasonal =
-    hour-of-day deviations, CUSUM = sustained level shifts).  Scores
-    through the IDENTICAL code path as the batch operator
-    (``cusum_scores_from_dense``), so merged-view == batch is a
-    structural guarantee; same per-commit replay dedup and
-    scope-release cache bounds as ``seasonal_view``."""
-    from .. import cache
-    from ..operators.timeseries import cusum_scores_from_dense, densify_hourly
+    """CUSUM sustained level shifts over the hourly-count store."""
+    from ..operators.timeseries import cusum_scores_from_dense as score
 
-    cache.release(_CUSUM_VIEW_FRAMES)
-    _CUSUM_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = cusum_scores_from_dense(densify_hourly(sparse), slack, threshold)
-    _CUSUM_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
+    return _hourly_view("cusum", spark, counts_path, score, slack, threshold)
+
+
+
+def dispersion_view(spark, counts_path: str, threshold: float = 1.5) -> DataFrame:
+    """Fano-factor burstiness over the hourly-count store."""
+    from ..operators.timeseries import dispersion_scores_from_dense as score
+
+    return _hourly_view("dispersion", spark, counts_path, score, threshold)
+
+
+
+def trend_view(spark, counts_path: str, z_crit: float = 1.96) -> DataFrame:
+    """Mann-Kendall trend + Sen's slope over the hourly-count store."""
+    from ..operators.timeseries import mann_kendall_from_dense as score
+
+    return _hourly_view("trend", spark, counts_path, score, z_crit)
+
+
+
+def acf_view(spark, counts_path: str, max_lag_hours: int = 24) -> DataFrame:
+    """Autocorrelation (periodicity) over the hourly-count store."""
+    from ..operators.timeseries import acf_from_dense as score
+
+    return _hourly_view("acf", spark, counts_path, score, max_lag_hours)
+
+
+
+def forecast_view(spark, counts_path: str, **hw_kwargs) -> DataFrame:
+    """Holt-Winters forecast over the hourly-count store."""
+    from ..operators.timeseries import holt_winters_from_dense as score
+
+    return _hourly_view("forecast", spark, counts_path, score, **hw_kwargs)
+
 
 
 # --------------------------------------- incremental signature history
 
 def make_signature_sink(
-    history_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    shingle_k: int = 3,
+    history_path: str, text_col: str = "text", id_col: str = "doc_id",
+    num_hashes: int = 16, shingle_k: int = 3,
 ):
     """Incrementally-maintained MinHash signature history (streaming
     document ingest → the near-dup matching substrate): each
     micro-batch shingles ONLY its own documents and appends their
-    (id, sig) rows — O(batch) per batch, the history is never read on
-    the write path, and downstream near-dup checks
+    (id, sig) rows — per-document facts, so downstream near-dup checks
     (``neardup_stream_check``) match against ~128-byte signature rows
-    instead of re-reading corpus text.  Same log contract as the other
-    incremental sinks: per-commit replay dedup, atomic appends,
-    online-compaction watermark honored."""
+    instead of re-reading corpus text."""
     from ..operators.dedup import minhash_signatures
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sigs = minhash_signatures(batch_df, text_col, id_col, num_hashes, shingle_k)
-        AtomicParquetTable(history_path).append(
-            sigs.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def signature_view(spark, history_path: str, id_col: str = "doc_id") -> DataFrame:
-    """Merged signature history: per-commit dedup (exactly-once under
-    replay) → the (id, sig) frame ``incremental_neardup`` consumes."""
-    return _signature_view_of(_read_log(spark, history_path), id_col)
-
-
-def _signature_view_of(log: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", id_col])
-        .select(id_col, "sig")
+    return _LOGS["signature"].sink(
+        history_path,
+        lambda batch_df: minhash_signatures(
+            batch_df, text_col, id_col, num_hashes, shingle_k
+        ),
     )
 
 
+def signature_view(spark, history_path: str, id_col: str = "doc_id") -> DataFrame:
+    """Merged signature history — the (id, sig) frame
+    ``incremental_neardup`` consumes."""
+    return _LOGS["signature"].keyed(id_col).view(spark, history_path)
+
+
 def neardup_stream_check(
-    spark,
-    new_docs: DataFrame,
-    history_path: str,
-    min_est_jaccard: float = 0.5,
+    spark, new_docs: DataFrame, history_path: str, min_est_jaccard: float = 0.5,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Near-dup-match a candidate batch against the STREAMING signature
@@ -1182,19 +1157,13 @@ def neardup_stream_check(
 
 
 def compact_signatures(spark, history_path: str, quiesced: bool = True) -> None:
-    """Fold the signature log to one row per document; same
-    quiesced/online contract as the other compactors (pinned-snapshot
-    CAS semantics in ``_compact``)."""
-    _compact(spark, history_path, _signature_view_of, quiesced)
+    _LOGS["signature"].keyed("doc_id").compact(spark, history_path, quiesced)
 
 
 # ------------------- incremental substring-dedup (window-hash history)
 
 def make_substring_clean_sink(
-    history_path: str,
-    clean_path: str,
-    k: int = 8,
-    text_col: str = "text",
+    history_path: str, clean_path: str, k: int = 8, text_col: str = "text",
     id_col: str = "doc_id",
 ):
     """Streaming substring-dedup ingest (the streamed form of x194):
@@ -1208,41 +1177,38 @@ def make_substring_clean_sink(
     Replay safety: the clean step excludes hashes the SAME batch id
     committed (a replayed batch must not see its own first attempt as
     'history'), so re-running a batch reproduces byte-identical
-    cleaned rows and per-commit dedup in the views drops them.  Same
-    log contract as the other incremental sinks: atomic appends,
-    per-commit replay dedup, online-compaction watermark honored."""
-    from ..cache import unpersist_tracked
+    cleaned rows.  The frames the clean step persists are released
+    when the call ends — only those, never other readers' caches."""
+    from .. import cache
     from ..operators.dedup import (
         _window_occurrences,
         incremental_substring_clean,
     )
 
+    @_nonempty
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         try:
             log = _read_log(spark, history_path)
-            hist = _window_hash_view_of(
+            hist = _LOGS["window_hash"].view_of(
                 log.filter(F.col("__commit") != batch_id)
             )
         except FileNotFoundError:
             hist = spark.createDataFrame([], "h bigint")
-        cleaned = incremental_substring_clean(
-            batch_df, hist, k, text_col, id_col
-        )
-        AtomicParquetTable(clean_path).append(
-            cleaned.withColumn("__commit", F.lit(batch_id))
-        )
-        hashes = (
-            _window_occurrences(batch_df, k, text_col, id_col)
-            .select("h")
-            .distinct()
-        )
-        AtomicParquetTable(history_path).append(
-            hashes.withColumn("__commit", F.lit(batch_id))
-        )
-        unpersist_tracked()
+        pos = cache.mark()
+        try:
+            cleaned = incremental_substring_clean(
+                batch_df, hist, k, text_col, id_col
+            )
+            _LOGS["substring_clean"].append(cleaned, clean_path, batch_id)
+            hashes = (
+                _window_occurrences(batch_df, k, text_col, id_col)
+                .select("h")
+                .distinct()
+            )
+            _LOGS["window_hash"].append(hashes, history_path, batch_id)
+        finally:
+            cache.release(cache.tracked_since(pos))
 
     return sink
 
@@ -1250,49 +1216,22 @@ def make_substring_clean_sink(
 def window_hash_view(spark, history_path: str) -> DataFrame:
     """Merged distinct window-hash history — the frame
     ``incremental_substring_clean`` consumes."""
-    return _window_hash_view_of(_read_log(spark, history_path))
+    return _LOGS["window_hash"].view(spark, history_path)
 
 
-def _window_hash_view_of(log: DataFrame) -> DataFrame:
-    return _drop_replays_behind_watermark(log).select("h").distinct()
+def substring_clean_view(spark, clean_path: str, id_col: str = "doc_id") -> DataFrame:
+    """Merged cleaned corpus: the streamed x194 output rows."""
+    return _LOGS["substring_clean"].keyed(id_col).view(spark, clean_path)
 
 
-def substring_clean_view(
-    spark, clean_path: str, id_col: str = "doc_id"
-) -> DataFrame:
-    """Merged cleaned corpus: per-commit dedup (exactly-once under
-    replay) over the streamed x194 output rows."""
-    return _substring_clean_view_of(_read_log(spark, clean_path), id_col)
-
-
-def _substring_clean_view_of(
-    log: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", id_col])
-        .drop("__commit")
-    )
-
-
-def compact_window_hashes(
-    spark, history_path: str, quiesced: bool = True
-) -> None:
-    """Fold the hash log to one row per distinct hash; same
-    quiesced/online contract as the other compactors."""
-    _compact(spark, history_path, _window_hash_view_of, quiesced)
+def compact_window_hashes(spark, history_path: str, quiesced: bool = True) -> None:
+    _LOGS["window_hash"].compact(spark, history_path, quiesced)
 
 
 def compact_substring_clean(
     spark, clean_path: str, id_col: str = "doc_id", quiesced: bool = True
 ) -> None:
-    """Fold the cleaned-corpus log to one row per document."""
-    _compact(
-        spark,
-        clean_path,
-        lambda log: _substring_clean_view_of(log, id_col),
-        quiesced,
-    )
+    _LOGS["substring_clean"].keyed(id_col).compact(spark, clean_path, quiesced)
 
 
 # ------------------------------------------- incremental bloom filter
@@ -1300,46 +1239,25 @@ def compact_substring_clean(
 def make_bloom_sink(sketch_path: str, value_col: str):
     """Incrementally-maintained Bloom filter (streaming values → a
     bounded-size membership oracle): each micro-batch appends its
-    PARTIAL (word, bits) rows — at most bits/63 rows regardless of
+    partial (word, bits) rows — at most bits/63 rows regardless of
     batch size, word-wise OR-mergeable, so the merged filter equals
     the batch-built filter over all data.  The streamed form of the
-    decontamination / blocklist screen: keep the filter current as
-    eval sets or blocklists arrive.  Same log contract as the other
-    sketch sinks: per-commit replay dedup, atomic appends,
-    online-compaction watermark honored."""
+    decontamination / blocklist screen."""
     from ..operators.sketches import bloom_build
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = bloom_build(batch_df, value_col)
-        AtomicParquetTable(sketch_path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def bloom_stream_view(spark, sketch_path: str) -> DataFrame:
-    """Merged filter: word-wise bit_or of the partial filters after
-    per-commit dedup — feed through operators.sketches.bloom_pack to
-    probe."""
-    return _bloom_view_of(_read_log(spark, sketch_path))
-
-
-def _bloom_view_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "word"])
-        .groupBy("word")
-        .agg(F.bit_or("bits").alias("bits"))
+    return _LOGS["bloom"].sink(
+        sketch_path, lambda batch_df: bloom_build(batch_df, value_col)
     )
 
 
+def bloom_stream_view(spark, sketch_path: str) -> DataFrame:
+    """Merged filter (word-wise bit_or) — feed through
+    operators.sketches.bloom_pack to probe."""
+    return _LOGS["bloom"].view(spark, sketch_path)
+
+
 def compact_bloom(spark, sketch_path: str, quiesced: bool = True) -> None:
-    """Fold the partial-filter log to one (word, bits) set; same
-    quiesced/online contract as the other compactors."""
-    _compact(spark, sketch_path, _bloom_view_of, quiesced)
+    _LOGS["bloom"].compact(spark, sketch_path, quiesced)
 
 
 # ---------------------------------------------- streaming quality gate
@@ -1541,8 +1459,8 @@ def make_curation_sink(
                 )
             from ..operators.dedup import incremental_neardup
 
-            hist_sigs = _signature_view_of(
-                sig_log.filter(F.col("__commit") != batch_id), id_col
+            hist_sigs = _LOGS["signature"].keyed(id_col).view_of(
+                sig_log.filter(F.col("__commit") != batch_id)
             )
             pairs = incremental_neardup(
                 exact_pass, hist_sigs, min_est_jaccard=min_est_jaccard
@@ -1616,30 +1534,14 @@ def make_curation_sink(
             staged.unpersist()
 
     return sink
-
-
 def curation_yield_view(spark, path: str) -> DataFrame:
-    """Cumulative per-stage funnel from the yield log: per-commit dedup
-    then sum — the continuously-maintained counterpart of x94's
-    one-shot funnel rows."""
-    log = _read_log(spark, f"{path}/yield")
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "stage"])
-        .groupBy("stage")
-        .agg(
-            F.sum("docs_in").cast("long").alias("docs_in"),
-            F.sum("docs_removed").cast("long").alias("docs_removed"),
-            F.sum("docs_out").cast("long").alias("docs_out"),
-        )
-    )
+    """Cumulative per-stage funnel from the yield log — the
+    continuously-maintained counterpart of x94's one-shot funnel rows."""
+    return _LOGS["curation_yield"].view(spark, f"{path}/yield")
 
 
 def datasheet_drift_view(
-    spark,
-    path: str,
-    new_docs: DataFrame,
-    text_col: str = "text",
+    spark, path: str, new_docs: DataFrame, text_col: str = "text",
     rate_drift_threshold: float = 0.1,
 ) -> DataFrame:
     """Drift of an INCOMING batch against the whole ingested corpus —
@@ -1649,32 +1551,20 @@ def datasheet_drift_view(
     the new batch plus the tiny sum log, however much was ingested
     before.  The gate a pipeline puts in front of a suspicious crawl
     drop."""
-    from ..operators import text as tx
+    names = {
+        "n_docs": "n_docs", "total_tokens": "tok", "hi_q_docs": "hi_q", "en_docs": "en"
+    }
 
-    sums = _datasheet_sums_of(_read_log(spark, f"{path}/sums"))
-    t = F.col(text_col)
-    new_sums = (
-        new_docs.select(
-            "source",
-            tx.token_count(t).alias("n_tokens"),
-            (tx.quality_score(t) >= 0.9).cast("long").alias("hi_q"),
-            (tx.lang_id(t) == "en").cast("long").alias("is_en"),
+    def side(sums, suffix):
+        return sums.select(
+            "source", *(F.col(c).alias(f"{n}_{suffix}") for c, n in names.items())
         )
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs_new"),
-            F.sum("n_tokens").cast("long").alias("tok_new"),
-            F.sum("hi_q").alias("hi_q_new"),
-            F.sum("is_en").alias("en_new"),
-        )
+
+    old = _LOGS["datasheet"].view(spark, f"{path}/sums")
+    new = _LOGS["datasheet"].merge(
+        new_docs.select("source", *_doc_stats(F.col(text_col))), ["source"]
     )
-    joined = sums.select(
-        "source",
-        F.col("n_docs").alias("n_docs_old"),
-        F.col("total_tokens").alias("tok_old"),
-        F.col("hi_q_docs").alias("hi_q_old"),
-        F.col("en_docs").alias("en_old"),
-    ).join(new_sums, "source", "full_outer")
+    joined = side(old, "old").join(side(new, "new"), "source", "full_outer")
     no = F.when(F.col("n_docs_old") > 0, F.col("n_docs_old").cast("double"))
     nn = F.when(F.col("n_docs_new") > 0, F.col("n_docs_new").cast("double"))
     hi_old, hi_new = F.col("hi_q_old") / no, F.col("hi_q_new") / nn
@@ -1702,8 +1592,6 @@ def datasheet_drift_view(
             | (F.abs(en_new - en_old) > rate_drift_threshold)
         ).alias("drift"),
     )
-
-
 # ------------------------------------- streaming shard manifest
 
 def make_manifest_sink(path: str, n_shards: int = 16):
@@ -1712,39 +1600,14 @@ def make_manifest_sink(path: str, n_shards: int = 16):
     partial rows — counts and min/max compose, and BOTH checksums are
     commutative-mergeable (xor of xors, sum of modular sums), so the
     merged view equals the batch manifest over all data ever ingested
-    EXACTLY, not approximately.  The log grows by n_shards rows per
-    batch regardless of batch size; replay dedup and compaction follow
-    the shared contract.  (checksum_sum headroom: per-doc terms are
-    < 1e9+7 and BIGINT holds ~9.2e18, so a shard absorbs ~9e9 docs
+    EXACTLY, not approximately.  (checksum_sum headroom: per-doc terms
+    are < 1e9+7 and BIGINT holds ~9.2e18, so a shard absorbs ~9e9 docs
     between compactions; production n_shards scales with the corpus,
     keeping per-shard counts far below that.)"""
     from ..operators.curation import shard_manifest
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = shard_manifest(batch_df, n_shards=n_shards)
-        AtomicParquetTable(path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _manifest_view_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "shard_id"])
-        .groupBy("shard_id")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.sum("n_chars").cast("long").alias("n_chars"),
-            F.min("min_doc_id").alias("min_doc_id"),
-            F.max("max_doc_id").alias("max_doc_id"),
-            F.expr("bit_xor(checksum_xor)").alias("checksum_xor"),
-            F.sum("checksum_sum").cast("long").alias("checksum_sum"),
-        )
+    return _LOGS["manifest"].sink(
+        path, lambda batch_df: shard_manifest(batch_df, n_shards=n_shards)
     )
 
 
@@ -1753,14 +1616,11 @@ def manifest_stream_view(spark, path: str) -> DataFrame:
     batch-side over every document ever ingested.  Feed two views (or
     a view and a pinned batch manifest) to operators.curation.
     manifest_diff for incremental re-validation."""
-    return _manifest_view_of(_read_log(spark, path))
+    return _LOGS["manifest"].view(spark, path)
 
 
 def compact_manifest(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the manifest log to its current n_shards merged rows; the
-    fold is itself a valid partial (same mergeable schema), so live
-    appends keep composing after compaction."""
-    _compact(spark, path, _manifest_view_of, quiesced)
+    _LOGS["manifest"].compact(spark, path, quiesced)
 
 
 def make_priority_sample_sink(path: str, k: int = 100, **candidate_kwargs):
@@ -1770,30 +1630,11 @@ def make_priority_sample_sink(path: str, k: int = 100, **candidate_kwargs):
     batch's top-(k+1), so the union of candidate logs always contains
     the exact global candidate set and the merged view is BIT-EQUAL
     to batch priority_sample over every document ever ingested.  The
-    log grows by at most k+1 rows per batch regardless of batch size;
-    priorities are deterministic per doc id, so replays and
-    re-ingestions append identical rows that the view dedups."""
+    log grows by at most k+1 rows per batch regardless of batch size."""
     from ..operators.curation import priority_candidates
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cand = priority_candidates(batch_df, k, **candidate_kwargs)
-        AtomicParquetTable(path).append(
-            cand.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _psample_candidates_of(log: DataFrame, k: int, id_col: str) -> DataFrame:
-    # priorities are a pure function of doc id, so identical rows from
-    # replays OR genuine re-ingestions collapse under the id dedup
-    dedup = _drop_replays_behind_watermark(log).dropDuplicates([id_col])
-    return (
-        dedup.drop("__commit")
-        .orderBy(F.col("priority").desc(), F.col(id_col))
-        .limit(k + 1)
+    return _LOGS["priority_sample"].sink(
+        path, lambda batch_df: priority_candidates(batch_df, k, **candidate_kwargs)
     )
 
 
@@ -1805,21 +1646,16 @@ def priority_sample_view(
     all ingested batches."""
     from ..operators.curation import sample_from_candidates
 
-    return sample_from_candidates(
-        _psample_candidates_of(_read_log(spark, path), k, id_col), k, id_col
-    )
+    cands = _LOGS["priority_sample"].keyed(id_col).view(spark, path, k=k)
+    return sample_from_candidates(cands, k, id_col)
 
 
 def compact_priority_sample(
     spark, path: str, k: int = 100, id_col: str = "doc_id", quiesced: bool = True
 ) -> None:
-    """Fold the candidate log to the current global top-(k+1) rows;
-    the fold is itself a valid candidate partial (same schema, and
-    top-(k+1) of a union that includes the folded top-(k+1) is
-    unchanged), so live appends keep composing after compaction."""
-    _compact(
-        spark, path, lambda log: _psample_candidates_of(log, k, id_col), quiesced
-    )
+    """Fold the candidate log to the current global top-(k+1) rows
+    (top-(k+1) of a union that includes them is unchanged)."""
+    _LOGS["priority_sample"].keyed(id_col).compact(spark, path, quiesced, k=k)
 
 
 def make_bootstrap_ci_sink(path: str, value_q, n_boot: int = 32, **kw):
@@ -1834,32 +1670,15 @@ def make_bootstrap_ci_sink(path: str, value_q, n_boot: int = 32, **kw):
     BIGINT value (e.g. floor(quality_score * 1e6))."""
     from ..operators.profile import bootstrap_partials
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def partial(batch_df: DataFrame) -> DataFrame:
         rated = batch_df.select(
             kw.get("group_col", "source"),
             kw.get("id_col", "doc_id"),
             value_q.alias("value_q"),
         )
-        partial = bootstrap_partials(rated, n_boot=n_boot, **kw)
-        AtomicParquetTable(path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
+        return bootstrap_partials(rated, n_boot=n_boot, **kw)
 
-    return sink
-
-
-def _bootstrap_partials_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "grp", "b"])
-        .groupBy("grp", "b")
-        .agg(
-            F.sum("sum_m").cast("long").alias("sum_m"),
-            F.sum("sum_mv").cast("long").alias("sum_mv"),
-        )
-    )
+    return _LOGS["bootstrap"].sink(path, partial)
 
 
 def bootstrap_ci_view(spark, path: str, group_col: str = "source") -> DataFrame:
@@ -1868,16 +1687,11 @@ def bootstrap_ci_view(spark, path: str, group_col: str = "source") -> DataFrame:
     ingested batches."""
     from ..operators.profile import ci_from_bootstrap_partials
 
-    return ci_from_bootstrap_partials(
-        _bootstrap_partials_of(_read_log(spark, path)), group_col
-    )
+    return ci_from_bootstrap_partials(_LOGS["bootstrap"].view(spark, path), group_col)
 
 
 def compact_bootstrap_ci(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the partial log to one merged row per (group, replicate);
-    the fold is itself a valid partial (sums of sums), so live appends
-    keep composing after compaction."""
-    _compact(spark, path, _bootstrap_partials_of, quiesced)
+    _LOGS["bootstrap"].compact(spark, path, quiesced)
 
 
 def make_gini_sink(path: str, weight, group_col: str = "source"):
@@ -1887,33 +1701,18 @@ def make_gini_sink(path: str, weight, group_col: str = "source"):
     gini_concentration over every document ever ingested.  State is
     bounded by the weight DOMAIN (distinct token counts), not the
     corpus.  ``weight`` is a Column producing the per-doc BIGINT
-    weight.  Append-exactly-once per doc contract, like the other
-    counting sinks."""
+    weight."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        hist = (
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 F.col(group_col).alias("grp"), weight.cast("long").alias("weight")
             )
             .groupBy("grp", "weight")
             .agg(F.count("*").cast("long").alias("cnt"))
         )
-        AtomicParquetTable(path).append(
-            hist.withColumn("__commit", F.lit(batch_id))
-        )
 
-    return sink
-
-
-def _gini_hist_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "grp", "weight"])
-        .groupBy("grp", "weight")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
+    return _LOGS["gini"].sink(path, partial)
 
 
 def gini_view(spark, path: str, group_col: str = "source") -> DataFrame:
@@ -1923,38 +1722,12 @@ def gini_view(spark, path: str, group_col: str = "source") -> DataFrame:
     from ..operators.profile import gini_from_hist
 
     return gini_from_hist(
-        _gini_hist_of(_read_log(spark, path)), "weight", "grp"
+        _LOGS["gini"].view(spark, path), "weight", "grp"
     ).withColumnRenamed("grp", group_col)
 
 
 def compact_gini(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the histogram log to one row per (group, weight) cell; the
-    fold is itself a valid partial (cell-wise sums), so live appends
-    keep composing after compaction."""
-    _compact(spark, path, _gini_hist_of, quiesced)
-
-
-_DISPERSION_VIEW_FRAMES: list[DataFrame] = []
-
-
-def dispersion_view(spark, counts_path: str, threshold: float = 1.5) -> DataFrame:
-    """Fano-factor burstiness over the SAME hourly-count store the
-    seasonal sink maintains — the fourth detector on the one rollup
-    (seasonal deviations / CUSUM shifts / robust point outliers /
-    dispersion).  Identical code path as the batch operator
-    (``dispersion_scores_from_dense``), so merged-view == batch is a
-    structural guarantee; same per-commit replay dedup and
-    scope-release cache bounds as the sibling views."""
-    from .. import cache
-    from ..operators.timeseries import densify_hourly, dispersion_scores_from_dense
-
-    cache.release(_DISPERSION_VIEW_FRAMES)
-    _DISPERSION_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = dispersion_scores_from_dense(densify_hourly(sparse), threshold)
-    _DISPERSION_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
+    _LOGS["gini"].compact(spark, path, quiesced)
 
 
 def make_term_histogram_sink(path: str, source_col: str = "source",
@@ -1962,31 +1735,14 @@ def make_term_histogram_sink(path: str, source_col: str = "source",
     """Continuously-maintained (source, term) token histogram — ONE
     shared lexical store serving every downstream term statistic
     (lexical diversity x129, Zipf fit x132, and any fightin'-words
-    comparison), the way the hourly-count store serves the four
-    time-series detectors.  Each batch appends its batch-local
-    histogram; cells ADD, so merged views are BIT-EQUAL to the batch
-    operators over every document ever ingested.  State is bounded by
-    the vocabulary, not the corpus.  Append-exactly-once per doc
-    contract, like the other counting sinks."""
+    comparison), the way the hourly-count store serves the
+    time-series detectors.  Cells ADD, so merged views are BIT-EQUAL
+    to the batch operators over every document ever ingested; state
+    is bounded by the vocabulary, not the corpus."""
     from ..operators.curation import term_histogram
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        hist = term_histogram(batch_df, source_col, text_col)
-        AtomicParquetTable(path).append(
-            hist.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _term_hist_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "src", "term"])
-        .groupBy("src", "term")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    return _LOGS["term_histogram"].sink(
+        path, lambda batch_df: term_histogram(batch_df, source_col, text_col)
     )
 
 
@@ -1998,7 +1754,7 @@ def lexical_view(spark, path: str) -> DataFrame:
     per call — a monitoring loop must not accumulate cached frames."""
     from ..operators.curation import lexical_diversity_from_hist
 
-    return lexical_diversity_from_hist(_term_hist_of(_read_log(spark, path)))
+    return lexical_diversity_from_hist(_LOGS["term_histogram"].view(spark, path))
 
 
 def zipf_view(spark, path: str) -> DataFrame:
@@ -2007,67 +1763,24 @@ def zipf_view(spark, path: str) -> DataFrame:
     batches."""
     from ..operators.curation import zipf_fit_from_hist
 
-    return zipf_fit_from_hist(_term_hist_of(_read_log(spark, path)))
+    return zipf_fit_from_hist(_LOGS["term_histogram"].view(spark, path))
 
 
 def compact_term_histogram(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the histogram log to one row per (src, term) cell; the
-    fold is itself a valid partial (cell-wise sums), so live appends
-    keep composing after compaction."""
-    _compact(spark, path, _term_hist_of, quiesced)
-
-
-_TREND_VIEW_FRAMES: list[DataFrame] = []
-
-
-def trend_view(spark, counts_path: str, z_crit: float = 1.96) -> DataFrame:
-    """Mann-Kendall trend + Sen's slope over the SAME hourly-count
-    store the seasonal sink maintains — the FIFTH detector on the one
-    rollup (seasonal deviations / CUSUM shifts / robust point
-    outliers / dispersion / monotonic trend).  Identical code path as
-    the batch operator (``mann_kendall_from_dense``), so merged-view
-    == batch is a structural guarantee; same per-commit replay dedup
-    and scope-release cache bounds as the sibling views."""
-    from .. import cache
-    from ..operators.timeseries import densify_hourly, mann_kendall_from_dense
-
-    cache.release(_TREND_VIEW_FRAMES)
-    _TREND_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = mann_kendall_from_dense(densify_hourly(sparse), z_crit)
-    _TREND_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
+    _LOGS["term_histogram"].compact(spark, path, quiesced)
 
 
 def make_length_histogram_sink(path: str, source_col: str = "source",
                                text_col: str = "text"):
     """Continuously-maintained (source, doc-length) histogram — the
-    mergeable state behind the streaming KS drift monitor: each batch
-    appends its batch-local length histogram; cells ADD, so the
-    merged KS report is BIT-EQUAL to the batch operator over every
-    document ever ingested.  State is bounded by the number of
-    distinct lengths per source, never the corpus.  Same
-    append-exactly-once contract as the other counting sinks."""
+    mergeable state behind the streaming KS and PSI drift monitors:
+    cells ADD, so the merged reports are BIT-EQUAL to the batch
+    operators over every document ever ingested.  State is bounded by
+    the number of distinct lengths per source, never the corpus."""
     from ..operators.curation import length_histogram
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        hist = length_histogram(batch_df, source_col, text_col)
-        AtomicParquetTable(path).append(
-            hist.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _length_hist_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "src", "len"])
-        .groupBy("src", "len")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    return _LOGS["length_histogram"].sink(
+        path, lambda batch_df: length_histogram(batch_df, source_col, text_col)
     )
 
 
@@ -2078,56 +1791,11 @@ def ks_view(spark, path: str) -> DataFrame:
     profile drifted?' monitor."""
     from ..operators.curation import ks_from_hist
 
-    return ks_from_hist(_length_hist_of(_read_log(spark, path)))
+    return ks_from_hist(_LOGS["length_histogram"].view(spark, path))
 
 
 def compact_length_histogram(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the length-histogram log to one row per (src, len) cell;
-    the fold is a valid partial (cell-wise sums), so live appends keep
-    composing after compaction."""
-    _compact(spark, path, _length_hist_of, quiesced)
-
-
-_ACF_VIEW_FRAMES: list[DataFrame] = []
-
-
-def acf_view(spark, counts_path: str, max_lag_hours: int = 24) -> DataFrame:
-    """Autocorrelation over the SAME hourly-count store — the SIXTH
-    consumer of the one rollup (four anomaly detectors + trend +
-    periodicity).  Identical code path as the batch operator
-    (``acf_from_dense``); same replay dedup and scope-release cache
-    bounds as the sibling views."""
-    from .. import cache
-    from ..operators.timeseries import acf_from_dense, densify_hourly
-
-    cache.release(_ACF_VIEW_FRAMES)
-    _ACF_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = acf_from_dense(densify_hourly(sparse), max_lag_hours)
-    _ACF_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
-
-
-_HW_VIEW_FRAMES: list[DataFrame] = []
-
-
-def forecast_view(spark, counts_path: str, **hw_kwargs) -> DataFrame:
-    """Holt-Winters forecast over the SAME hourly-count store — the
-    SEVENTH consumer of the one rollup (detectors + trend +
-    periodicity + forecast).  Identical code path as the batch
-    operator (``holt_winters_from_dense``); same replay dedup and
-    scope-release cache bounds as the sibling views."""
-    from .. import cache
-    from ..operators.timeseries import densify_hourly, holt_winters_from_dense
-
-    cache.release(_HW_VIEW_FRAMES)
-    _HW_VIEW_FRAMES.clear()
-    pos = cache.mark()
-    sparse = _seasonal_sparse_of(_read_log(spark, counts_path))
-    view = holt_winters_from_dense(densify_hourly(sparse), **hw_kwargs)
-    _HW_VIEW_FRAMES.extend(cache.tracked_since(pos))
-    return view
+    _LOGS["length_histogram"].compact(spark, path, quiesced)
 
 
 def psi_view(spark, path: str, smooth: float = 0.5, crit: float = 0.2) -> DataFrame:
@@ -2137,7 +1805,7 @@ def psi_view(spark, path: str, smooth: float = 0.5, crit: float = 0.2) -> DataFr
     operators.curation.length_psi over all ingested docs."""
     from ..operators.curation import psi_from_hist
 
-    return psi_from_hist(_length_hist_of(_read_log(spark, path)), smooth, crit)
+    return psi_from_hist(_LOGS["length_histogram"].view(spark, path), smooth, crit)
 
 
 # ----------------------------------------- incremental privacy audit
@@ -2153,38 +1821,17 @@ def make_privacy_sink(path: str, quasi_cols: list[str], sensitive_col: str):
     under ingest only per class (new rows can only grow a class), but
     new rows create NEW small classes, which is exactly why the audit
     must re-run as the corpus grows; this sink makes that re-run
-    log-sized.  Shares the replay/compaction contract of the other
-    sinks."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        counts = batch_df.groupBy(*quasi_cols, sensitive_col).agg(
+    log-sized."""
+    return _LOGS["privacy"].sink(
+        path,
+        lambda batch_df: batch_df.groupBy(*quasi_cols, sensitive_col).agg(
             F.count("*").cast("long").alias("n")
-        )
-        AtomicParquetTable(path).append(
-            counts.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _privacy_counts_of(
-    log: DataFrame, quasi_cols: list[str], sensitive_col: str
-) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", *quasi_cols, sensitive_col])
-        .groupBy(*quasi_cols, sensitive_col)
-        .agg(F.sum("n").cast("long").alias("n"))
+        ),
     )
 
 
 def privacy_view(
-    spark,
-    path: str,
-    quasi_cols: list[str],
-    sensitive_col: str,
+    spark, path: str, quasi_cols: list[str], sensitive_col: str,
     ks: tuple[int, ...] = (2, 5, 10, 25),
 ) -> DataFrame:
     """Current k-anonymity report over everything ingested: fold the
@@ -2195,9 +1842,7 @@ def privacy_view(
     the class-count log, never raw documents."""
     from ..operators.profile import k_anonymity_from_classes
 
-    counts = _privacy_counts_of(
-        _read_log(spark, path), quasi_cols, sensitive_col
-    )
+    counts = _LOGS["privacy"].keyed(*quasi_cols, sensitive_col).view(spark, path)
     classes = counts.groupBy(*quasi_cols).agg(
         F.sum("n").cast("long").alias("cls_n"),
         # counts is already unique per (quasi, sensitive): row count IS
@@ -2208,20 +1853,9 @@ def privacy_view(
 
 
 def compact_privacy(
-    spark,
-    path: str,
-    quasi_cols: list[str],
-    sensitive_col: str,
-    quiesced: bool = True,
+    spark, path: str, quasi_cols: list[str], sensitive_col: str, quiesced: bool = True
 ) -> None:
-    """Fold the privacy count log; same CAS contract as the other
-    sinks."""
-    _compact(
-        spark,
-        path,
-        lambda log: _privacy_counts_of(log, quasi_cols, sensitive_col),
-        quiesced,
-    )
+    _LOGS["privacy"].keyed(*quasi_cols, sensitive_col).compact(spark, path, quiesced)
 
 
 # ------------------------------------ incremental classifier training
@@ -2234,46 +1868,22 @@ def make_classifier_sink(path: str, label_col: str = "lang", text_col: str = "te
     counts — both sum-mergeable, bounded per batch by batch vocabulary
     x labels, never by history — so the model retrains from log-sized
     state as labeled data streams in, instead of rescanning the whole
-    labeled corpus per refresh.  Shares the replay/compaction contract
-    of the other sinks."""
+    labeled corpus per refresh."""
     from ..operators.text import tokens
 
+    @_nonempty
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         lbl = F.col(label_col).alias("label")
         counts = (
             batch_df.select(lbl, F.explode(tokens(F.col(text_col))).alias("tok"))
             .groupBy("label", "tok")
             .agg(F.count("*").cast("long").alias("c"))
         )
-        AtomicParquetTable(f"{path}/toks").append(
-            counts.withColumn("__commit", F.lit(batch_id))
-        )
+        _LOGS["classifier_tokens"].append(counts, f"{path}/toks", batch_id)
         docn = batch_df.groupBy(lbl).agg(F.count("*").cast("long").alias("n"))
-        AtomicParquetTable(f"{path}/docs").append(
-            docn.withColumn("__commit", F.lit(batch_id))
-        )
+        _LOGS["classifier_docs"].append(docn, f"{path}/docs", batch_id)
 
     return sink
-
-
-def _classifier_toks_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "label", "tok"])
-        .groupBy("label", "tok")
-        .agg(F.sum("c").cast("long").alias("c"))
-    )
-
-
-def _classifier_docs_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "label"])
-        .groupBy("label")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
 
 
 def classifier_model_view(spark, path: str, alpha: float = 0.5) -> DataFrame:
@@ -2284,16 +1894,15 @@ def classifier_model_view(spark, path: str, alpha: float = 0.5) -> DataFrame:
     plugs straight into ``nb_score`` / the size-gated model join."""
     from ..operators.classify import nb_model_from_counts
 
-    counts = _classifier_toks_of(_read_log(spark, f"{path}/toks"))
-    docn = _classifier_docs_of(_read_log(spark, f"{path}/docs"))
+    counts = _LOGS["classifier_tokens"].view(spark, f"{path}/toks")
+    docn = _LOGS["classifier_docs"].view(spark, f"{path}/docs")
     return nb_model_from_counts(counts, docn, alpha=alpha)
 
 
 def compact_classifier(spark, path: str, quiesced: bool = True) -> None:
-    """Fold both classifier count logs; same CAS contract as the
-    other sinks."""
-    _compact(spark, f"{path}/toks", _classifier_toks_of, quiesced)
-    _compact(spark, f"{path}/docs", _classifier_docs_of, quiesced)
+    """Fold both classifier count logs."""
+    _LOGS["classifier_tokens"].compact(spark, f"{path}/toks", quiesced)
+    _LOGS["classifier_docs"].compact(spark, f"{path}/docs", quiesced)
 
 
 def release_audit_view(
@@ -2349,75 +1958,38 @@ def release_audit_view(
 
 
 # -------------------------------------- incremental tokenizer budget
-
-
 def make_fertility_sink(path: str, group_col: str = "lang", text_col: str = "text"):
     """Continuously-maintained tokenizer-budget state (the streaming
     twin of x168): each batch appends per-group exact BIGINT sums of
     whitespace words, BPE-ish sub-word tokens, bytes and chars — all
     sum-mergeable, |groups| rows per batch — so fertility and
     bytes-per-token stay answerable as the corpus grows without
-    re-tokenizing history.  Shares the replay/compaction contract."""
+    re-tokenizing history."""
     from ..operators.text import bpe_regex_token_count, token_count
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def partial(batch_df: DataFrame) -> DataFrame:
         t = F.col(text_col)
-        sums = (
-            batch_df.select(
-                F.col(group_col).alias("grp"),
-                token_count(t).alias("ws"),
-                bpe_regex_token_count(t).alias("bpe"),
-                F.octet_length(t).cast("long").alias("bytes"),
-                F.length(t).cast("long").alias("chars"),
-            )
-            .groupBy("grp")
-            .agg(
-                F.count("*").cast("long").alias("n_docs"),
-                F.sum("ws").cast("long").alias("n_words"),
-                F.sum("bpe").cast("long").alias("n_tokens"),
-                F.sum("bytes").cast("long").alias("n_bytes"),
-                F.sum("chars").cast("long").alias("n_chars"),
-            )
+        per_doc = batch_df.select(
+            F.col(group_col).alias("grp"),
+            F.lit(1).alias("n_docs"),
+            token_count(t).alias("n_words"),
+            bpe_regex_token_count(t).alias("n_tokens"),
+            F.octet_length(t).alias("n_bytes"),
+            F.length(t).alias("n_chars"),
         )
-        AtomicParquetTable(path).append(
-            sums.withColumn("__commit", F.lit(batch_id))
-        )
+        return _LOGS["fertility"].merge(per_doc, ["grp"])
 
-    return sink
-
-
-def _fertility_sums_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "grp"])
-        .groupBy("grp")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_words").cast("long").alias("n_words"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.sum("n_bytes").cast("long").alias("n_bytes"),
-            F.sum("n_chars").cast("long").alias("n_chars"),
-        )
-    )
+    return _LOGS["fertility"].sink(path, partial)
 
 
 def fertility_view(spark, path: str, group_col: str = "lang") -> DataFrame:
     """Current tokenizer-budget report over everything ingested —
     bit-equal to the batch x168 operator over the union of batches
     (corpus-level ratios of exact folded sums)."""
-    sums = _fertility_sums_of(_read_log(spark, path))
+    sums = _LOGS["fertility"].view(spark, path)
 
     def ratio(num, den):
-        return (
-            F.round(
-                F.col(num).cast("double") / F.col(den).cast("double")
-                + F.lit(1e-9),
-                6,
-            )
-            + F.lit(0.0)
-        )
+        return _ratio(num, den, 6) + F.lit(0.0)
 
     return sums.select(
         F.col("grp").alias(group_col),
@@ -2432,9 +2004,7 @@ def fertility_view(spark, path: str, group_col: str = "lang") -> DataFrame:
 
 
 def compact_fertility(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the fertility sum log; same CAS contract as the other
-    sinks."""
-    _compact(spark, path, _fertility_sums_of, quiesced)
+    _LOGS["fertility"].compact(spark, path, quiesced)
 
 
 def make_pii_sink(path: str, source_col: str = "source", text_col: str = "text"):
@@ -2442,70 +2012,38 @@ def make_pii_sink(path: str, source_col: str = "source", text_col: str = "text")
     of x164's pii family): per batch, per-source counts of documents
     and of documents with ANY PII regex hit — sum-mergeable, |sources|
     rows per batch — so the zero-residue release invariant is
-    checkable at any moment without rescanning text.  Shares the
-    replay/compaction contract."""
+    checkable at any moment without rescanning text."""
     from ..operators.text import pii_counts
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def partial(batch_df: DataFrame) -> DataFrame:
         pii = pii_counts(F.col(text_col))
-        sums = (
-            batch_df.select(
-                F.col(source_col).alias("src"),
-                ((pii["EMAIL"] + pii["IPV4"] + pii["PHONE"]) > 0)
-                .cast("long")
-                .alias("has_pii"),
-            )
-            .groupBy("src")
-            .agg(
-                F.count("*").cast("long").alias("n_docs"),
-                F.sum("has_pii").cast("long").alias("n_pii_docs"),
-            )
+        per_doc = batch_df.select(
+            F.col(source_col).alias("src"),
+            F.lit(1).alias("n_docs"),
+            ((pii["EMAIL"] + pii["IPV4"] + pii["PHONE"]) > 0).cast("long").alias(
+                "n_pii_docs"
+            ),
         )
-        AtomicParquetTable(path).append(
-            sums.withColumn("__commit", F.lit(batch_id))
-        )
+        return _LOGS["pii"].merge(per_doc, ["src"])
 
-    return sink
-
-
-def _pii_sums_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "src"])
-        .groupBy("src")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_pii_docs").cast("long").alias("n_pii_docs"),
-        )
-    )
+    return _LOGS["pii"].sink(path, partial)
 
 
 def pii_view(spark, path: str) -> DataFrame:
     """Current per-source PII residue over everything ingested:
     (source, n_docs, n_pii_docs, pii_doc_rate, ok = zero residue)."""
-    sums = _pii_sums_of(_read_log(spark, path))
+    sums = _LOGS["pii"].view(spark, path)
     return sums.select(
         F.col("src").alias("source"),
         "n_docs",
         "n_pii_docs",
-        (
-            F.round(
-                F.col("n_pii_docs").cast("double")
-                / F.col("n_docs").cast("double")
-                + F.lit(1e-9),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("pii_doc_rate"),
+        (_ratio("n_pii_docs", "n_docs", 6) + F.lit(0.0)).alias("pii_doc_rate"),
         (F.col("n_pii_docs") == 0).alias("ok"),
     )
 
 
 def compact_pii(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the PII count log; same CAS contract as the other sinks."""
-    _compact(spark, path, _pii_sums_of, quiesced)
+    _LOGS["pii"].compact(spark, path, quiesced)
 
 
 # --------------------------------------- incremental embedding health
@@ -2518,46 +2056,22 @@ def make_embedding_health_sink(path: str, vec_col: str = "embedding",
     moment partials (n, sum, sum-of-squares, near-zero count) — all
     sum-mergeable, |dims| rows per batch — so dead-dimension and
     anisotropy screens stay answerable as vectors stream in, without
-    re-reading the embedding store.  Shares the replay/compaction
-    contract."""
+    re-reading the embedding store."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def partial(batch_df: DataFrame) -> DataFrame:
         q = F.lit(1e8)
-        rows = batch_df.select(
+        per_value = batch_df.select(
             F.posexplode(F.col(vec_col).cast("array<double>"))
         ).select(
             (F.col("pos") + 1).alias("dim"),
-            (F.col("col") * q).cast("long").alias("qv"),
-            (F.col("col") * F.col("col") * q).cast("long").alias("qvv"),
-            (F.abs(F.col("col")) < F.lit(near_zero)).cast("long").alias("nz"),
+            F.lit(1).alias("n"),
+            (F.col("col") * q).cast("long").alias("sv"),
+            (F.col("col") * F.col("col") * q).cast("long").alias("svv"),
+            (F.abs(F.col("col")) < F.lit(near_zero)).cast("long").alias("n_near_zero"),
         )
-        per = rows.groupBy("dim").agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("qv").cast("long").alias("sv"),
-            F.sum("qvv").cast("long").alias("svv"),
-            F.sum("nz").cast("long").alias("n_near_zero"),
-        )
-        AtomicParquetTable(path).append(
-            per.withColumn("__commit", F.lit(batch_id))
-        )
+        return _LOGS["embedding_health"].merge(per_value, ["dim"])
 
-    return sink
-
-
-def _embedding_moments_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "dim"])
-        .groupBy("dim")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("sv").cast("long").alias("sv"),
-            F.sum("svv").cast("long").alias("svv"),
-            F.sum("n_near_zero").cast("long").alias("n_near_zero"),
-        )
-    )
+    return _LOGS["embedding_health"].sink(path, partial)
 
 
 def embedding_health_view(spark, path: str) -> DataFrame:
@@ -2566,14 +2080,11 @@ def embedding_health_view(spark, path: str) -> DataFrame:
     (the SAME report derivation runs on the folded moments)."""
     from ..operators.embed import embedding_health_from_moments
 
-    return embedding_health_from_moments(
-        _embedding_moments_of(_read_log(spark, path))
-    )
+    return embedding_health_from_moments(_LOGS["embedding_health"].view(spark, path))
 
 
 def compact_embedding_health(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the moment log; same CAS contract as the other sinks."""
-    _compact(spark, path, _embedding_moments_of, quiesced)
+    _LOGS["embedding_health"].compact(spark, path, quiesced)
 
 
 # ------------------------------------- incremental conformal calibration
@@ -2587,34 +2098,17 @@ def make_conformal_sink(path: str, id_col: str = "doc_id", text_col: str = "text
     shared verbatim with the batch query — and cells ADD, so the
     merged thresholds are BIT-EQUAL to conformal_thresholds over every
     document ever ingested.  State is bounded by score quantization
-    (distinct q values), never the corpus.  Same append-exactly-once
-    contract as the other counting sinks."""
+    (distinct q values), never the corpus."""
     from ..operators.curation import lexdiv_qscore
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cells = (
-            batch_df.select(
-                (F.col(id_col) % 2 == 0).alias("is_cal"),
-                lexdiv_qscore(F.col(text_col)).alias("q"),
-            )
-            .groupBy("is_cal", "q")
-            .agg(F.count("*").cast("long").alias("nk"))
+    return _LOGS["conformal"].sink(
+        path,
+        lambda batch_df: batch_df.select(
+            (F.col(id_col) % 2 == 0).alias("is_cal"),
+            lexdiv_qscore(F.col(text_col)).alias("q"),
         )
-        AtomicParquetTable(path).append(
-            cells.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _conformal_hist_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "is_cal", "q"])
         .groupBy("is_cal", "q")
-        .agg(F.sum("nk").cast("long").alias("nk"))
+        .agg(F.count("*").cast("long").alias("nk")),
     )
 
 
@@ -2629,7 +2123,7 @@ def conformal_view(
     input histogram."""
     from ..operators.curation import conformal_from_hist
 
-    hist = _conformal_hist_of(_read_log(spark, path))
+    hist = _LOGS["conformal"].view(spark, path)
     return conformal_from_hist(
         hist.filter(F.col("is_cal")).select("q", "nk"),
         hist.filter(~F.col("is_cal")).select("q", "nk"),
@@ -2638,20 +2132,14 @@ def conformal_view(
 
 
 def compact_conformal(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the conformal score-histogram log to one row per
-    (is_cal, q) cell; cell-wise sums are a valid partial, so live
-    appends keep composing after compaction."""
-    _compact(spark, path, _conformal_hist_of, quiesced)
+    _LOGS["conformal"].compact(spark, path, quiesced)
 
 
 # --------------------------------------- incremental retrieval evaluation
 
 
 def make_retrieval_eval_sink(
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    rel_col: str = "source",
+    path: str, id_col: str = "doc_id", text_col: str = "text", rel_col: str = "source"
 ):
     """Incrementally-maintained tf-grade postings store (d, rel, dl,
     term, tf) — the eval-ready sibling of make_index_sink's (term, df,
@@ -2660,26 +2148,11 @@ def make_retrieval_eval_sink(
     search index deliberately drops.  Rows are PER-DOCUMENT facts, so
     per-batch partials union to exactly the batch frame (each document
     arrives in one batch — the same append-only-corpus assumption as
-    make_index_sink); a replayed batch recomputes identical rows and
-    deduplicates at read time."""
+    make_index_sink)."""
     from ..operators.retrieval import eval_tf_frame
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = eval_tf_frame(batch_df, id_col, text_col, rel_col)
-        AtomicParquetTable(path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _retrieval_tf_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "d", "term"])
-        .select("d", "rel", "dl", "term", "tf")
+    return _LOGS["retrieval_eval"].sink(
+        path, lambda batch_df: eval_tf_frame(batch_df, id_col, text_col, rel_col)
     )
 
 
@@ -2693,15 +2166,12 @@ def retrieval_eval_view(spark, path: str, **eval_kwargs) -> DataFrame:
     from ..operators.retrieval import retrieval_eval_from_tf
 
     return retrieval_eval_from_tf(
-        _retrieval_tf_of(_read_log(spark, path)), **eval_kwargs
+        _LOGS["retrieval_eval"].view(spark, path), **eval_kwargs
     )
 
 
 def compact_retrieval_eval(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the postings log to one row per (d, term); rows are
-    per-document facts (no cross-batch merging), so the fold is pure
-    replay-dedup and live appends keep composing after compaction."""
-    _compact(spark, path, _retrieval_tf_of, quiesced)
+    _LOGS["retrieval_eval"].compact(spark, path, quiesced)
 
 
 # -------------------------------------- incremental tokenizer retraining
@@ -2713,30 +2183,14 @@ def make_wordfreq_sink(path: str, text_col: str = "text", max_word_len: int = 12
     batch appends its (w, freq) count partials; counts ADD, so the
     model retrained from the merged store is BIT-EQUAL to batch
     training over every document ever ingested.  State is bounded by
-    the vocabulary (distinct truncated words), never the corpus.  Same
-    append-exactly-once contract as the other counting sinks.
+    the vocabulary (distinct truncated words), never the corpus.
 
     ``max_word_len`` must match the training parameter (words are
     truncated BEFORE counting, exactly as _word_freqs does)."""
     from ..operators.text import _word_freqs
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = _word_freqs(batch_df, text_col, max_word_len)
-        AtomicParquetTable(path).append(
-            partial.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _wordfreq_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "w"])
-        .groupBy("w")
-        .agg(F.sum("freq").cast("long").alias("freq"))
+    return _LOGS["wordfreq"].sink(
+        path, lambda batch_df: _word_freqs(batch_df, text_col, max_word_len)
     )
 
 
@@ -2744,7 +2198,7 @@ def wordfreq_view(spark, path: str) -> DataFrame:
     """Current merged (w, freq) word-frequency table over all ingested
     batches — the tokenizer trainer's input state, also useful on its
     own (Zipf checks, vocabulary growth)."""
-    return _wordfreq_of(_read_log(spark, path))
+    return _LOGS["wordfreq"].view(spark, path)
 
 
 def unigram_model_view(spark, path: str, **train_kwargs) -> DataFrame:
@@ -2760,28 +2214,19 @@ def unigram_model_view(spark, path: str, **train_kwargs) -> DataFrame:
     retraining cadence, not per batch."""
     from ..operators.text import unigram_lm_train_from_words
 
-    return unigram_lm_train_from_words(
-        _wordfreq_of(_read_log(spark, path)), **train_kwargs
-    )
+    return unigram_lm_train_from_words(wordfreq_view(spark, path), **train_kwargs)
 
 
 def compact_wordfreq(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the word-frequency log to one row per word; word counts are
-    a valid partial (sums), so live appends keep composing after
-    compaction."""
-    _compact(spark, path, _wordfreq_of, quiesced)
+    _LOGS["wordfreq"].compact(spark, path, quiesced)
 
 
 # --------------------------------- incremental semantic decontamination
 
 
 def make_semantic_decontam_sink(
-    path: str,
-    eval_emb: DataFrame,
-    planes: list,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    path: str, eval_emb: DataFrame, planes: list, threshold: float = 0.4,
+    id_col: str = "vec_id", vec_col: str = "embedding",
 ):
     """Continuously-maintained semantic-contamination verdicts (the
     x178 screen at ingest): each embedding batch is screened against
@@ -2789,54 +2234,34 @@ def make_semantic_decontam_sink(
     exactly the batch operator) and its per-document verdict rows are
     appended.  Verdicts are per-document facts against an immutable
     eval suite, so per-batch partials union to exactly the batch
-    screen over every vector ever ingested — the same
-    append-only-corpus contract as make_index_sink; a changed eval
-    suite is an offline re-screen, not a merge.
+    screen over every vector ever ingested; a changed eval suite is an
+    offline re-screen, not a merge.
 
     ``eval_emb`` and ``planes`` must match the batch x178 parameters
     for the view to be bit-equal."""
     from ..operators.similarity import semantic_decontaminate
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        verdicts = semantic_decontaminate(
+    return _LOGS["semantic_decontam"].sink(
+        path,
+        lambda batch_df: semantic_decontaminate(
             batch_df, eval_emb, planes, threshold, id_col, vec_col
-        )
-        AtomicParquetTable(path).append(
-            verdicts.withColumn("__commit", F.lit(batch_id))
-        )
-
-    return sink
-
-
-def _semantic_decontam_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "vec_id"])
-        .select("vec_id", "max_eval_cosine", "matched_eval_id", "is_contaminated")
+        ),
     )
 
 
 def semantic_decontam_view(spark, path: str) -> DataFrame:
     """Current per-document semantic-contamination verdicts over all
     ingested embedding batches — bit-equal to batch x178 on the union
-    corpus (verdicts are per-document facts against the fixed eval
-    suite)."""
-    return _semantic_decontam_of(_read_log(spark, path))
+    corpus."""
+    return _LOGS["semantic_decontam"].view(spark, path)
 
 
 def compact_semantic_decontam(spark, path: str, quiesced: bool = True) -> None:
-    """Fold the verdict log to one row per vector; pure replay-dedup
-    (no cross-batch merging), live appends keep composing."""
-    _compact(spark, path, _semantic_decontam_of, quiesced)
+    _LOGS["semantic_decontam"].compact(spark, path, quiesced)
 
 
 def t_closeness_view(
-    spark,
-    path: str,
-    quasi_cols: list[str],
-    sensitive_col: str,
+    spark, path: str, quasi_cols: list[str], sensitive_col: str,
     t_ppm: tuple[int, ...] = (100_000, 200_000, 300_000),
 ) -> DataFrame:
     """Current t-closeness report over everything ingested — the THIRD
@@ -2847,9 +2272,12 @@ def t_closeness_view(
     class-count log, never raw documents."""
     from ..operators.profile import t_closeness_from_cells
 
-    cells = _privacy_counts_of(
-        _read_log(spark, path), quasi_cols, sensitive_col
-    ).withColumnRenamed("n", "cv")
+    cells = (
+        _LOGS["privacy"]
+        .keyed(*quasi_cols, sensitive_col)
+        .view(spark, path)
+        .withColumnRenamed("n", "cv")
+    )
     return t_closeness_from_cells(cells, quasi_cols, sensitive_col, t_ppm)
 
 
@@ -2924,8 +2352,8 @@ def make_split_anchor_sink(
             .distinct()
         )
         try:
-            assigned = _split_assign_view_of(
-                _read_log(spark, assign_path), id_col
+            assigned = _LOGS["split_assign"].keyed(id_col).view(
+                spark, assign_path
             ).select(
                 F.col(id_col).alias("matched_id"),
                 F.col("anchor_id").alias("cur_anchor"),
@@ -2986,53 +2414,24 @@ def make_split_anchor_sink(
         )
 
     return sink
-
-
-def _split_assign_view_of(log: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Latest assignment per doc.  Within one commit a doc appears at
-    most once (batch rows and update rows are disjoint by the
-    left_anti in the sink); across commits the LOWEST anchor is the
-    newest (anchors only decrease), so ordering by anchor ascending
-    inside the __commit tiebreak makes replayed-then-compacted logs
-    resolve identically to live ones."""
-    w = W.partitionBy(id_col).orderBy(
-        F.col("__commit").desc(), F.col("anchor_id").asc()
-    )
-    return (
-        _drop_replays_behind_watermark(log)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__commit")
-    )
-
-
 def split_stability_view(spark, assign_path: str, id_col: str = "doc_id") -> DataFrame:
     """Current leakage-safe split assignment for every ingested doc:
     (doc, anchor_id, split, moved, anchor_changed) — equal to the
     one-shot batch x179 assignment over everything ingested (pinned by
     test), with ``anchor_changed`` marking docs whose cluster was
     merged into a smaller anchor after first assignment."""
-    return _split_assign_view_of(_read_log(spark, assign_path), id_col)
+    return _LOGS["split_assign"].keyed(id_col).view(spark, assign_path)
 
 
-def compact_split_assignments(
-    spark, assign_path: str, quiesced: bool = True
-) -> None:
-    """Fold the assignment log to one row per document; same
-    quiesced/online contract as the other compactors."""
-    _compact(spark, assign_path, _split_assign_view_of, quiesced)
+def compact_split_assignments(spark, assign_path: str, quiesced: bool = True) -> None:
+    _LOGS["split_assign"].keyed("doc_id").compact(spark, assign_path, quiesced)
 
 
 # --------------------------------------------- incremental bitext mining
 
 def make_bitext_candidate_sink(
-    cand_path: str,
-    emb_path: str,
-    tables: list[list[list[int]]],
-    src_lang: str,
-    tgt_lang: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    cand_path: str, emb_path: str, tables: list[list[list[int]]], src_lang: str,
+    tgt_lang: str, id_col: str = "vec_id", vec_col: str = "embedding",
     lang_col: str = "lang",
 ):
     """Streaming twin of x183/x185 (bitext mining), candidate-log
@@ -3052,17 +2451,14 @@ def make_bitext_candidate_sink(
     Per batch: O(batch x matched buckets) join work + one read of the
     merged embedding log (the prep side is the persisted artifact,
     ~(dim+3) values per vector — the corpus itself is never re-read;
-    same cost class as the other incremental views).  Both logs get
-    the house contract: per-commit replay dedup, atomic appends,
-    online compaction."""
+    same cost class as the other incremental views)."""
     from ..operators.similarity import (
         bitext_candidates_between,
         bitext_prep_frame,
     )
 
+    @_nonempty
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         prep = bitext_prep_frame(
             batch_df.filter(F.col(lang_col).isin(src_lang, tgt_lang)),
@@ -3072,7 +2468,7 @@ def make_bitext_candidate_sink(
             lang_col,
         ).localCheckpoint(eager=False)
         try:
-            old = _bitext_emb_view_of(_read_log(spark, emb_path))
+            old = _LOGS["bitext_embeddings"].view(spark, emb_path)
         except FileNotFoundError:
             old = spark.createDataFrame(
                 [],
@@ -3086,39 +2482,14 @@ def make_bitext_candidate_sink(
         cand = bitext_candidates_between(new_s, all_t).unionByName(
             bitext_candidates_between(old_s, new_t)
         )
-        AtomicParquetTable(cand_path).append(
-            cand.withColumn("__commit", F.lit(batch_id))
-        )
-        AtomicParquetTable(emb_path).append(
-            prep.withColumn("__commit", F.lit(batch_id))
-        )
+        _LOGS["bitext_candidates"].append(cand, cand_path, batch_id)
+        _LOGS["bitext_embeddings"].append(prep, emb_path, batch_id)
 
     return sink
 
 
-def _bitext_emb_view_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "id"])
-        .select("id", "l", "v", "n", "buckets")
-        .dropDuplicates(["id"])
-    )
-
-
-def _bitext_cand_view_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "sid", "tid"])
-        .select("sid", "tid", "cos", "cq")
-        .dropDuplicates(["sid", "tid"])
-    )
-
-
 def bitext_stream_view(
-    spark,
-    cand_path: str,
-    knn_k: int = 8,
-    margin_threshold: float = 1.05,
+    spark, cand_path: str, knn_k: int = 8, margin_threshold: float = 1.05,
     mutual_best: bool = False,
 ) -> DataFrame:
     """Current mined bitext pairs over everything ingested — margins
@@ -3128,7 +2499,7 @@ def bitext_stream_view(
     from ..operators.similarity import bitext_margin_from_candidates
 
     return bitext_margin_from_candidates(
-        _bitext_cand_view_of(_read_log(spark, cand_path)),
+        _LOGS["bitext_candidates"].view(spark, cand_path),
         knn_k=knn_k,
         margin_threshold=margin_threshold,
         mutual_best=mutual_best,
@@ -3136,16 +2507,17 @@ def bitext_stream_view(
 
 
 def compact_bitext_candidates(spark, cand_path: str, quiesced: bool = True) -> None:
-    """Fold the candidate log to one row per pair; house contract."""
-    _compact(spark, cand_path, _bitext_cand_view_of, quiesced)
+    _LOGS["bitext_candidates"].compact(spark, cand_path, quiesced)
 
 
 def compact_bitext_embeddings(spark, emb_path: str, quiesced: bool = True) -> None:
-    """Fold the embedding prep log to one row per vector."""
-    _compact(spark, emb_path, _bitext_emb_view_of, quiesced)
+    _LOGS["bitext_embeddings"].compact(spark, emb_path, quiesced)
 
 
 # --------------------------------------- continuous trigram-LM counts
+
+_TRIGRAM_TIERS = ("tgc", "bgc", "unic")
+
 
 def make_trigram_counts_sink(path: str, text_col: str = "text", id_col: str = "doc_id"):
     """Continuously-maintained trigram-LM count state — the x184
@@ -3156,72 +2528,29 @@ def make_trigram_counts_sink(path: str, text_col: str = "text", id_col: str = "d
     every document ever ingested (the ctx12/ctx2/scalar tables are
     deterministic functions of the folded tiers, exactly as in
     _trigram_model_tables).  State is bounded by the distinct-n-gram
-    vocabulary, never the corpus.  House append-exactly-once
-    contract on all three sub-logs."""
+    vocabulary, never the corpus.  The narrow frame the tier counts
+    share is released when the call ends."""
+    from .. import cache
     from ..operators.curation import _trigram_model_tables
 
+    @_nonempty
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        narrow, tgc, _, bgc, _, unic, _ = _trigram_model_tables(
-            batch_df, id_col, text_col
-        )
-        AtomicParquetTable(f"{path}/tgc").append(
-            tgc.withColumn("__commit", F.lit(batch_id))
-        )
-        AtomicParquetTable(f"{path}/bgc").append(
-            bgc.withColumn("__commit", F.lit(batch_id))
-        )
-        AtomicParquetTable(f"{path}/unic").append(
-            unic.withColumn("__commit", F.lit(batch_id))
-        )
-        narrow.unpersist()
+        pos = cache.mark()
+        try:
+            _, tgc, _, bgc, _, unic, _ = _trigram_model_tables(
+                batch_df, id_col, text_col
+            )
+            for tier, counts in zip(_TRIGRAM_TIERS, (tgc, bgc, unic)):
+                _LOGS[f"trigram_{tier}"].append(counts, f"{path}/{tier}", batch_id)
+        finally:
+            cache.release(cache.tracked_since(pos))
 
     return sink
 
 
-def _trigram_tgc_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "tg_h"])
-        .groupBy("tg_h")
-        .agg(
-            F.sum("c3").cast("long").alias("c3"),
-            F.min("c12_h").alias("c12_h"),
-            F.min("b23_h").alias("b23_h"),
-            F.min("w3_h").alias("w3_h"),
-        )
-    )
-
-
-def _trigram_bgc_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "b23_h"])
-        .groupBy("b23_h")
-        .agg(
-            F.sum("c2b").cast("long").alias("c2b"),
-            F.min("w2_h").alias("w2_h"),
-        )
-    )
-
-
-def _trigram_unic_of(log: DataFrame) -> DataFrame:
-    return (
-        _drop_replays_behind_watermark(log)
-        .dropDuplicates(["__commit", "w3_h"])
-        .groupBy("w3_h")
-        .agg(F.sum("c1w").cast("long").alias("c1w"))
-    )
-
-
 def trigram_stream_score(
-    spark,
-    path: str,
-    batch: DataFrame,
-    k_smooth: float = 0.5,
-    lambdas: tuple[float, float, float] = (0.6, 0.3, 0.1),
-    id_col: str = "doc_id",
+    spark, path: str, batch: DataFrame, k_smooth: float = 0.5,
+    lambdas: tuple[float, float, float] = (0.6, 0.3, 0.1), id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """Score any frame against the CONTINUOUSLY-trained trigram LM:
@@ -3231,9 +2560,10 @@ def trigram_stream_score(
     docs here is bit-equal to x184 over that union (pinned by test)."""
     from ..operators.curation import score_with_trigram_tables
 
-    tgc = _trigram_tgc_of(_read_log(spark, f"{path}/tgc"))
-    bgc = _trigram_bgc_of(_read_log(spark, f"{path}/bgc"))
-    unic = _trigram_unic_of(_read_log(spark, f"{path}/unic"))
+    tgc, bgc, unic = (
+        _LOGS[f"trigram_{tier}"].view(spark, f"{path}/{tier}")
+        for tier in _TRIGRAM_TIERS
+    )
     ctx12 = tgc.groupBy("c12_h").agg(F.sum("c3").alias("c12"))
     ctx2 = bgc.groupBy("w2_h").agg(F.sum("c2b").alias("c2"))
     scalars = (
@@ -3248,8 +2578,6 @@ def trigram_stream_score(
 
 
 def compact_trigram_counts(spark, path: str, quiesced: bool = True) -> None:
-    """Fold all three tier logs; counts are valid partials (sums), so
-    live appends keep composing after compaction."""
-    _compact(spark, f"{path}/tgc", _trigram_tgc_of, quiesced)
-    _compact(spark, f"{path}/bgc", _trigram_bgc_of, quiesced)
-    _compact(spark, f"{path}/unic", _trigram_unic_of, quiesced)
+    """Fold all three tier logs."""
+    for tier in _TRIGRAM_TIERS:
+        _LOGS[f"trigram_{tier}"].compact(spark, f"{path}/{tier}", quiesced)
