@@ -17,7 +17,10 @@ tiers — hangs off a single ``Engine`` handle:
     eng.dedup_clusters()                   # transitive-closure groups
 
 Everything returns a lazy DataFrame; nothing here adds plan nodes —
-it only wires existing operators to the session + catalog.
+it only wires existing operators to the session + catalog.  The
+methods below are the entry points something calls; every other
+operator is ``operators.<module>.<fn>(eng.table(...))`` or
+``eng.query("<registered name>")``.
 
 Side effect to know about: registering the catalog views sets two
 SESSION-WIDE confs on the SparkSession you pass in — the session
@@ -93,16 +96,6 @@ class Engine:
 
         return connected_components(self.near_dups(**kwargs))
 
-    def decontaminate(self, eval_set: DataFrame, **kwargs) -> DataFrame:
-        """Tiered eval-set decontamination of the documents table
-        (Bloom screen -> exact gram join on suspects -> containment
-        verify on the gray zone); per-doc verdict + deciding tier.
-        Pair with operators.curation.decontamination_report for the
-        yield accounting."""
-        from .operators.curation import decontaminate_tiered
-
-        return decontaminate_tiered(self.table("documents"), eval_set, **kwargs)
-
     def chunks(self, chunk_tokens: int = 32, overlap: int = 8) -> DataFrame:
         """Fixed-token-window chunks of every document."""
         from .operators.curation import chunk_documents
@@ -133,15 +126,14 @@ class Engine:
         to avoid.  No-op if the table already exists (pass
         ``rebuild=True`` after the corpus itself changes)."""
         from .operators.dedup import exact_dedup_groups
-        from .streaming.txn import AtomicParquetTable
 
-        table = AtomicParquetTable(dest)
-        if rebuild or table.read(self.spark) is None:
-            table.overwrite(
-                exact_dedup_groups(self.table("documents"))
-                .select("fingerprint")
-                .distinct()
-            )
+        self._build_history(
+            dest,
+            rebuild,
+            lambda: exact_dedup_groups(self.table("documents"))
+            .select("fingerprint")
+            .distinct(),
+        )
         self._dedup_history_path = dest
 
     def ingest_dedup(self, new_docs: DataFrame, history_path: str | None = None) -> DataFrame:
@@ -156,20 +148,9 @@ class Engine:
         corpus on the fly and WARNS (correct, but pays a full-corpus
         read per batch — fine ad hoc, wrong as a loop)."""
         from .operators.dedup import exact_dedup_groups, incremental_dedup
-        from .streaming.txn import AtomicParquetTable
 
         path = history_path or self._dedup_history_path
-        if path is not None:
-            history = AtomicParquetTable(path).read(self.spark)
-            if history is None:
-                raise FileNotFoundError(
-                    f"no committed fingerprint history at {path} — "
-                    "call build_dedup_history(dest) first"
-                )
-            if history_path is not None:
-                self._dedup_history_path = path
-            history = history.select("fingerprint")
-        else:
+        if path is None:
             import warnings
 
             warnings.warn(
@@ -180,8 +161,13 @@ class Engine:
                 "fingerprints instead.",
                 stacklevel=2,
             )
-            history = exact_dedup_groups(self.table("documents")).select("fingerprint")
-        return incremental_dedup(new_docs, history)
+            history = exact_dedup_groups(self.table("documents"))
+        else:
+            history = self._read_history(
+                path, "build_dedup_history", "ingest_dedup", "fingerprint"
+            )
+            self._dedup_history_path = path
+        return incremental_dedup(new_docs, history.select("fingerprint"))
 
     def accept_ingest(self, ingest_result: DataFrame) -> None:
         """Append an accepted batch's new fingerprints (the
@@ -191,13 +177,9 @@ class Engine:
         rewritten."""
         from pyspark.sql import functions as F
 
-        from .streaming.txn import AtomicParquetTable
-
-        if self._dedup_history_path is None:
-            raise RuntimeError("build_dedup_history(dest) before accept_ingest")
-        AtomicParquetTable(self._dedup_history_path).append(
-            ingest_result.filter(F.col("keep")).select("fingerprint").distinct()
-        )
+        self._history_table(
+            self._dedup_history_path, "build_dedup_history", "accept_ingest"
+        ).append(ingest_result.filter(F.col("keep")).select("fingerprint").distinct())
 
     def build_neardup_history(self, dest: str, rebuild: bool = False) -> None:
         """Persist the documents table's MinHash SIGNATURE table at
@@ -207,11 +189,10 @@ class Engine:
         the history text.  No-op if the table exists (``rebuild=True``
         after the corpus changes)."""
         from .operators.dedup import minhash_signatures
-        from .streaming.txn import AtomicParquetTable
 
-        table = AtomicParquetTable(dest)
-        if rebuild or table.read(self.spark) is None:
-            table.overwrite(minhash_signatures(self.table("documents")))
+        self._build_history(
+            dest, rebuild, lambda: minhash_signatures(self.table("documents"))
+        )
         self._neardup_history_path = dest
 
     def ingest_neardup(
@@ -225,17 +206,11 @@ class Engine:
         matched_id, est_jaccard, from_history) candidate pairs.  The
         batch plan reads the signature table, not the documents."""
         from .operators.dedup import incremental_neardup
-        from .streaming.txn import AtomicParquetTable
 
-        path = history_path or getattr(self, "_neardup_history_path", None)
-        if path is None:
-            raise RuntimeError("build_neardup_history(dest) before ingest_neardup")
-        history = AtomicParquetTable(path).read(self.spark)
-        if history is None:
-            raise FileNotFoundError(
-                f"no committed signature history at {path} — "
-                "call build_neardup_history(dest) first"
-            )
+        path = history_path or self._neardup_history_path
+        history = self._read_history(
+            path, "build_neardup_history", "ingest_neardup", "signature"
+        )
         self._neardup_history_path = path
         return incremental_neardup(
             new_docs, history, min_est_jaccard=min_est_jaccard
@@ -246,23 +221,52 @@ class Engine:
         history so the NEXT batch sees them — O(batch) shingling +
         append, the history is never rewritten."""
         from .operators.dedup import minhash_signatures
+
+        self._history_table(
+            self._neardup_history_path, "build_neardup_history", "accept_neardup"
+        ).append(minhash_signatures(accepted_docs))
+
+    def _build_history(self, dest: str, rebuild: bool, frame) -> None:
+        """Overwrite the history at ``dest`` with ``frame()`` unless a
+        version is already committed there (or ``rebuild``)."""
         from .streaming.txn import AtomicParquetTable
 
-        path = getattr(self, "_neardup_history_path", None)
+        table = AtomicParquetTable(dest)
+        if rebuild or table.read(self.spark) is None:
+            table.overwrite(frame())
+
+    @staticmethod
+    def _history_table(path: str | None, build: str, use: str):
+        """The history table at ``path``; ``use`` needs ``build`` to
+        have run (or a ``history_path=``) first."""
+        from .streaming.txn import AtomicParquetTable
+
         if path is None:
-            raise RuntimeError("build_neardup_history(dest) before accept_neardup")
-        AtomicParquetTable(path).append(minhash_signatures(accepted_docs))
+            raise RuntimeError(f"{build}(dest) before {use}")
+        return AtomicParquetTable(path)
+
+    def _read_history(self, path: str | None, build: str, use: str, what: str) -> DataFrame:
+        history = self._history_table(path, build, use).read(self.spark)
+        if history is None:
+            raise FileNotFoundError(
+                f"no committed {what} history at {path} — call {build}(dest) first"
+            )
+        return history
 
     def nearest_embeddings(self, queries: DataFrame | None = None, k: int = 5) -> DataFrame:
         """Exact cosine top-k over the embeddings table (queries default
         to the first 5 vectors)."""
-        from pyspark.sql import functions as F
-
         from .operators.similarity import cosine_topk
 
         emb = self.table("embeddings")
-        q = queries if queries is not None else emb.filter(F.col("vec_id") < 5)
-        return cosine_topk(q, emb, k=k)
+        return cosine_topk(self._queries(emb, queries), emb, k=k)
+
+    @staticmethod
+    def _queries(emb: DataFrame, queries: DataFrame | None) -> DataFrame:
+        """``queries``, or the first 5 vectors of ``emb``."""
+        from pyspark.sql import functions as F
+
+        return queries if queries is not None else emb.filter(F.col("vec_id") < 5)
 
     def hybrid_search(
         self, terms: list[str], query_vec_id: int = 0, n: int = 20, k: int = 10
@@ -322,13 +326,6 @@ class Engine:
 
         return training_shards(self.table("documents"), n_shards=n_shards)
 
-    def phrase(self, phrase: list[str], topk: int = 10) -> DataFrame:
-        """Exact phrase query over the documents table (positional
-        adjacency; see operators.retrieval.phrase_search)."""
-        from .operators.retrieval import phrase_search
-
-        return phrase_search(self.table("documents"), phrase, topk=topk)
-
     def weighted_sample(self, scale: float = 1.0) -> DataFrame:
         """Quality-weighted RNG-free Bernoulli downsample of the
         documents table (keep probability ∝ quality score)."""
@@ -341,26 +338,16 @@ class Engine:
             self.table("documents"), quality_score(F.col("text")), scale=scale
         )
 
-    def embed_corpus(self, dim: int = 64) -> DataFrame:
-        """Model-free feature-hashing embeddings of the documents table
-        (deterministic; feeds the ANN / semantic-dedup tier directly)."""
-        from .operators.embed import hash_embeddings
-
-        return hash_embeddings(self.table("documents"), dim=dim)
-
     def pq_search(
         self, queries: DataFrame | None = None, k: int = 5, rerank: int = 50
     ) -> DataFrame:
         """Compressed-tier ANN over the embeddings table: PQ ADC scan +
         exact rerank of the shortlist (queries default to the first 5
         vectors)."""
-        from pyspark.sql import functions as F
-
         from .operators.similarity import pq_topk
 
         emb = self.table("embeddings")
-        q = queries if queries is not None else emb.filter(F.col("vec_id") < 5)
-        return pq_topk(q, emb, m=16, ksub=16, k=k, rerank=rerank)
+        return pq_topk(self._queries(emb, queries), emb, m=16, ksub=16, k=k, rerank=rerank)
 
     def contamination_screen(
         self, train: DataFrame, eval_set: DataFrame, k: int = 5
@@ -409,30 +396,6 @@ class Engine:
             kmv_sketch(grams(other_docs), F.col("gram")),
         )
 
-    def build_pq_index(self, dest: str, m: int = 16, ksub: int = 16) -> None:
-        """Persist the PQ index of the embeddings table (codebooks +
-        32x-compressed codes) — the one-time pass that makes every
-        later pq_index_search pay only the ADC codes scan."""
-        from .operators.similarity import pq_index_build
-
-        pq_index_build(self.table("embeddings"), dest, m=m, ksub=ksub)
-
-    def pq_index_search(
-        self, dest: str, queries: DataFrame | None = None, k: int = 5, rerank: int = 50
-    ) -> DataFrame:
-        """ANN top-k against a build_pq_index() layout (queries default
-        to the first 5 vectors); rerank fetches originals from the
-        embeddings table."""
-        from pyspark.sql import functions as F
-
-        from .operators.similarity import pq_index_search
-
-        emb = self.table("embeddings")
-        q = queries if queries is not None else emb.filter(F.col("vec_id") < 5)
-        return pq_index_search(
-            self.spark, q, dest, k=k, rerank=rerank, corpus=emb if rerank else None
-        )
-
     def perplexity_scores(self, k_smooth: float = 0.5) -> DataFrame:
         """Bigram-LM cross-entropy per document (CCNet-style perplexity
         filter): high scorers are word salad / off-distribution."""
@@ -461,21 +424,6 @@ class Engine:
         pre = dd_build(self.table("orders"), "o_totalprice", keys=keys)
         return dd_quantiles(pre, qs, keys=keys)
 
-    def build_lm(self, dest: str, k_smooth: float = 0.5) -> None:
-        """Train-once half of the perplexity gate: persist the bigram
-        LM's count tables at ``dest`` (see save_bigram_lm)."""
-        from .operators.curation import save_bigram_lm
-
-        save_bigram_lm(self.table("documents"), dest, k_smooth=k_smooth)
-
-    def score_batch(self, batch: DataFrame, dest: str) -> DataFrame:
-        """Per-doc cross-entropy of a new batch under the persisted LM
-        (add-k backoff for unseen events); O(batch), zero corpus
-        reads."""
-        from .operators.curation import score_with_bigram_lm
-
-        return score_with_bigram_lm(batch, dest)
-
     def mine_triplets(
         self, pos_threshold: float = 0.4, neg_threshold: float = 0.2
     ) -> DataFrame:
@@ -491,41 +439,21 @@ class Engine:
             neg_threshold=neg_threshold,
         )
 
-    def update_clusters(
-        self, prev_labels: DataFrame, new_pairs: DataFrame
-    ) -> DataFrame:
-        """Fold a new batch of candidate pairs into an existing
-        (id, component) labeling without re-clustering the corpus
-        (see operators.dedup.incremental_components)."""
-        from .operators.dedup import incremental_components
-
-        return incremental_components(prev_labels, new_pairs)
-
     def datasheet(self) -> DataFrame:
         """Per-source corpus datasheet (x93): volume, length
         distribution, quality share, language mix, exact-dup rate —
         one corpus scan."""
-        from .plans import QUERIES
-
-        return QUERIES["x93_corpus_datasheet"].builder(self.spark, self.sf_dir)
+        return self.query("x93_corpus_datasheet")
 
     def cluster_topics(self, k: int = 8, iterations: int = 1) -> DataFrame:
         """Name each embedding cluster by its top TF-IDF terms (x90):
         portable k-means cells joined to documents, cluster-level
         TF-IDF top-3."""
-        from pyspark.sql import functions as F
+        from .operators.similarity import cluster_topics
 
-        from .cache import tracked_persist
-        from .operators.similarity import kmeans_assign
-        from .operators.text import tfidf_top_terms
-
-        assign = tracked_persist(
-            kmeans_assign(
-                self.table("embeddings"), k=k, iterations=iterations, portable=True
-            ).select(F.col("vec_id").alias("doc_id"), "cell")
+        return cluster_topics(
+            self.table("embeddings"), self.table("documents"), k=k, iterations=iterations
         )
-        labeled = self.table("documents").join(assign, "doc_id").select("cell", "text")
-        return tfidf_top_terms(labeled, id_col="cell", k=3, min_token_len=3)
 
     def canonical_docs(self, **kwargs) -> DataFrame:
         """Near-dup clusters with the best-quality member flagged
@@ -561,16 +489,9 @@ class Engine:
         corpus text scan total.  ``eval_mod`` carves every Nth doc
         out as the held-out benchmark; ``kwargs`` pass through to
         operators.curation.curation_funnel."""
-        from pyspark.sql import functions as F
-
         from .operators.curation import curation_funnel
 
-        docs = self.table("documents")
-        return curation_funnel(
-            docs.filter(F.col("doc_id") % eval_mod != 0),
-            docs.filter(F.col("doc_id") % eval_mod == 0),
-            **kwargs,
-        )
+        return curation_funnel(*self._eval_split(eval_mod), **kwargs)
 
     def split_leakage(self, **kwargs) -> DataFrame:
         """Near-dup pairs crossing the deterministic train/val/test
@@ -625,518 +546,30 @@ class Engine:
         """Per-document curation provenance (x102): each doc's fate
         and the tier evidence, from the same flag frame the funnel
         aggregates."""
-        from pyspark.sql import functions as F
-
         from .operators.curation import curation_flags, doc_fate
 
-        docs = self.table("documents")
-        return doc_fate(
-            curation_flags(
-                docs.filter(F.col("doc_id") % eval_mod != 0),
-                docs.filter(F.col("doc_id") % eval_mod == 0),
-                **kwargs,
-            )
-        )
+        return doc_fate(curation_flags(*self._eval_split(eval_mod), **kwargs))
 
-    def image_neardups(self, payloads: DataFrame, max_hamming: int = 3) -> DataFrame:
-        """Perceptual-hash image near-dup pairs over a (doc_id,
-        payload binary) frame (x101): Arrow grid decode -> dHash ->
-        shared banded-Hamming dataflow."""
-        from .operators.multimodal import phash_neardup_pairs
-
-        return phash_neardup_pairs(payloads, max_hamming=max_hamming)
-
-    def audio_neardups(self, payloads: DataFrame, max_hamming: int = 3) -> DataFrame:
-        """Audio-fingerprint near-dup pairs over a (doc_id, payload
-        binary) frame (x103): sample decode -> energy-gradient
-        signature -> shared banded-Hamming dataflow."""
-        from .operators.multimodal import audio_neardup_pairs
-
-        return audio_neardup_pairs(payloads, max_hamming=max_hamming)
-
-    def resolve_entities(self, records: DataFrame, **kwargs) -> DataFrame:
-        """Entity resolution over (rec_id, mention) records (x104):
-        rare-token multi-pass blocking -> Jaccard verify -> closure ->
-        golden-record survivorship."""
-        from .operators.linkage import entity_resolve
-
-        return entity_resolve(records, **kwargs)
-
-    def diverse_search(
-        self, terms: list[str], k: int = 10, shortlist: int = 20, **kwargs
-    ) -> DataFrame:
-        """MMR-diversified search (x105): BM25 shortlist -> embedding
-        join -> maximal-marginal-relevance pick of ``k``."""
-        from .operators.retrieval import bm25_topk, mmr_rerank
-
-        short = bm25_topk(self.table("documents"), terms, topk=shortlist)
-        return mmr_rerank(short, self.table("embeddings"), k=k, **kwargs)
-
-    def embedding_drift(self, new_emb: DataFrame, **kwargs) -> DataFrame:
-        """Per-label centroid drift of ``new_emb`` against this
-        engine's embeddings table (x106)."""
-        from .operators.embed import centroid_drift
-
-        return centroid_drift(self.table("embeddings"), new_emb, **kwargs)
-
-    def skew_report(self, table: str, key_cols: list[str], **kwargs) -> DataFrame:
-        """Join-key skew profile (x107) for each candidate key of
-        ``table`` — run this BEFORE launching a big shuffle."""
-        from functools import reduce
-
-        from .operators.profile import key_skew_profile
-
-        t = self.table(table)
-        return reduce(
-            lambda a, b: a.unionByName(b),
-            [key_skew_profile(t, c, **kwargs) for c in key_cols],
-        )
-
-    def manifest(self, n_shards: int = 16) -> DataFrame:
-        """Content-addressed shard manifest of the documents table
-        (x108) — the reproducibility record to pin with a run."""
-        from .operators.curation import shard_manifest
-
-        return shard_manifest(self.table("documents"), n_shards=n_shards)
-
-    def cluster_quality(self, k: int = 8, iterations: int = 2) -> DataFrame:
-        """Centroid-silhouette quality report for the embedding
-        clustering (x109)."""
-        from .operators.similarity import cluster_silhouette
-
-        return cluster_silhouette(self.table("embeddings"), k=k, iterations=iterations)
-
-    def diff_manifests(self, old: DataFrame, new: DataFrame) -> DataFrame:
-        """Incremental-validation diff of two shard manifests (x110)."""
-        from .operators.curation import manifest_diff
-
-        return manifest_diff(old, new)
-
-    def split_health(self, table: str = "events", unit_col: str = "user_id",
-                     n_arms: int = 2) -> DataFrame:
-        """Sample-ratio-mismatch audit of the deterministic hash split
-        (x111)."""
-        from .operators.profile import srm_check
-
-        return srm_check(self.table(table), unit_col, n_arms=n_arms)
-
-    def attribution(self, **kwargs) -> DataFrame:
-        """First/last-touch conversion attribution over events (x112)."""
-        from .operators.timeseries import touch_attribution
-
-        return touch_attribution(self.table("events"), **kwargs)
-
-    def changepoints(self, **kwargs) -> DataFrame:
-        """Two-sided CUSUM level-shift detection per event type on the
-        dense hourly grid (x113)."""
-        from .operators.timeseries import cusum_changepoints
-
-        return cusum_changepoints(self.table("events"), **kwargs)
-
-    def frontier_docs(self, **kwargs) -> DataFrame:
-        """Pareto-frontier (skyline) of the token-cost/vocabulary-
-        richness trade-off over documents (x114)."""
-        from .operators.curation import pareto_frontier
-
-        return pareto_frontier(self.table("documents"), **kwargs)
-
-    def calibrated_selection(self, frac: float = 0.25, **kwargs) -> DataFrame:
-        """Within-source percent-rank calibration + top-frac-per-source
-        selection of documents (x115)."""
-        from .operators.curation import quantile_normalized_selection
-
-        return quantile_normalized_selection(
-            self.table("documents"), frac=frac, **kwargs
-        )
-
-    def outliers(self, **kwargs) -> DataFrame:
-        """Median/MAD robust outlier scoring per event type on the
-        dense hourly grid (x116)."""
-        from .operators.timeseries import robust_outliers
-
-        return robust_outliers(self.table("events"), **kwargs)
-
-    def filter_agreement(self, **kwargs) -> DataFrame:
-        """Cohen's kappa between the Gopher rules and the quality-score
-        threshold, per source (x117)."""
-        from .operators.curation import rater_agreement
-
-        return rater_agreement(self.table("documents"), **kwargs)
-
-    def benford(self, table: str = "lineitem",
-                value_col: str = "l_extendedprice") -> DataFrame:
-        """Benford first-digit audit of a monetary column (x118)."""
-        from .operators.profile import benford_audit
-
-        return benford_audit(self.table(table), value_col)
-
-    def dedup_cohesion(self, **kwargs) -> DataFrame:
-        """Triangle count + clustering coefficient over the near-dup
-        pair graph (x119) — clique-vs-chain cluster diagnostics."""
-        from .operators.dedup import minhash_lsh_pairs
-        from .operators.graph import triangle_stats
-
-        return triangle_stats(minhash_lsh_pairs(self.table("documents"), **kwargs))
-
-    def survival_curve(self, **kwargs) -> DataFrame:
-        """Kaplan-Meier time-to-conversion curve with right censoring
-        (x120)."""
-        from .operators.timeseries import km_survival
-
-        return km_survival(self.table("events"), **kwargs)
-
-    def soft_dedup(self, frac: float = 0.5, **kwargs) -> DataFrame:
-        """Cluster-size-weighted sampling — soft dedup that flattens
-        duplication mass without deleting it (x121)."""
-        from .operators.dedup import cluster_weighted_sample
-
-        return cluster_weighted_sample(self.table("documents"), frac=frac, **kwargs)
-
-    def search_expanded(self, terms: list[str], **kwargs) -> DataFrame:
-        """BM25 with pseudo-relevance-feedback query expansion
-        (x122)."""
-        from .operators.retrieval import prf_search
-
-        return prf_search(self.table("documents"), terms, **kwargs)
-
-    def score_auc(self, **kwargs) -> DataFrame:
-        """Exact ROC-AUC of mean word length vs the Gopher label, per
-        source (x123) — threshold-free ranking-quality check of a
-        cheap score against the rule filter."""
-        from .plans.extensions import x123_score_auc
-
-        return x123_score_auc(self.spark, self.sf_dir)
-
-    def ht_sample(self, k: int = 100, **kwargs) -> DataFrame:
-        """Exactly-k priority sample with unbiased Horvitz-Thompson
-        subset-sum weights (x124).  Distinct from ``weighted_sample``
-        (x58), the Bernoulli keep-probability downsample."""
-        from .operators.curation import priority_sample
-
-        return priority_sample(self.table("documents"), k=k, **kwargs)
-
-    def quality_ci(self, **kwargs) -> DataFrame:
-        """Poisson-bootstrap CI for mean quality per source (x125)."""
-        from .plans.extensions import x125_quality_bootstrap_ci
-
-        return x125_quality_bootstrap_ci(self.spark, self.sf_dir)
-
-    def source_divergence(self, **kwargs) -> DataFrame:
-        """Pairwise Jensen-Shannon divergence between source unigram
-        distributions (x126)."""
-        from .operators.curation import js_divergence_matrix
-
-        return js_divergence_matrix(self.table("documents"), **kwargs)
-
-    def concentration(self, **kwargs) -> DataFrame:
-        """Exact Gini concentration of token mass per source (x127)."""
-        from .plans.extensions import x127_token_gini
-
-        return x127_token_gini(self.spark, self.sf_dir)
-
-    def signal_rank_corr(self, **kwargs) -> DataFrame:
-        """Spearman rank correlation between quality signals per
-        source (x128) — the monotone-proxy screen."""
-        from .plans.extensions import x128_signal_rank_corr
-
-        return x128_signal_rank_corr(self.spark, self.sf_dir)
-
-    def lexical_report(self, **kwargs) -> DataFrame:
-        """Type-token ratio, hapax ratio, Simpson concentration per
-        source (x129) — lexical boilerplate screens."""
-        from .operators.curation import lexical_diversity
-
-        return lexical_diversity(self.table("documents"), **kwargs)
-
-    def coverage_estimate(self, **kwargs) -> DataFrame:
-        """Chapman capture-recapture population estimate per source
-        pair (x130) — how much content is still uncrawled."""
-        from .operators.curation import capture_recapture
-
-        return capture_recapture(self.table("documents"), **kwargs)
-
-    def burstiness(self, **kwargs) -> DataFrame:
-        """Fano-factor dispersion (burstiness) per event type on the
-        dense hourly grid (x131)."""
-        from .operators.timeseries import dispersion_index
-
-        return dispersion_index(self.table("events"), **kwargs)
-
-    def zipf_report(self, **kwargs) -> DataFrame:
-        """Zipf-law fit (slope/intercept/R^2) per source (x132)."""
-        from .operators.curation import zipf_fit
-
-        return zipf_fit(self.table("documents"), **kwargs)
-
-    def packing_report(self, budget: int = 2048, **kwargs) -> DataFrame:
-        """Greedy-packing vs naive window-count efficiency per source
-        (x133)."""
-        from .operators.curation import packing_efficiency
-
-        return packing_efficiency(self.table("documents"), budget=budget, **kwargs)
-
-    def compare_sources(self, source_a: str, source_b: str, **kwargs) -> DataFrame:
-        """Log-odds-with-prior distinguishing terms between two
-        sources (x134, 'Fightin' Words')."""
-        from .operators.curation import distinguishing_terms
-
-        return distinguishing_terms(
-            self.table("documents"), source_a, source_b, **kwargs
-        )
-
-    def dedup_profile(self, **kwargs) -> DataFrame:
-        """Near-dup cluster-size distribution (x135) — singleton share
-        and duplication tail."""
-        from .operators.dedup import cluster_size_distribution
-
-        return cluster_size_distribution(self.table("documents"), **kwargs)
-
-    def dedup_threshold_curve(self, **kwargs) -> DataFrame:
-        """Candidate-pair yield at every estimated-Jaccard level
-        (x136) — dedup threshold sensitivity from one LSH pass."""
-        from .operators.dedup import threshold_sensitivity
-
-        return threshold_sensitivity(self.table("documents"), **kwargs)
-
-    def readability(self, **kwargs) -> DataFrame:
-        """Flesch reading-ease report per source (x137)."""
-        from .operators.curation import readability_report
-
-        return readability_report(self.table("documents"), **kwargs)
-
-    def vocab_churn(self, old_docs: DataFrame, new_docs: DataFrame,
-                    **kwargs) -> DataFrame:
-        """Type- and mass-weighted vocabulary churn between two
-        snapshots (x138)."""
-        from .operators.curation import vocabulary_churn
-
-        return vocabulary_churn(old_docs, new_docs, **kwargs)
-
-    def length_drift(self, **kwargs) -> DataFrame:
-        """Pairwise two-sample KS drift test on document-length
-        distributions (x139)."""
-        from .operators.curation import ks_drift
-
-        return ks_drift(self.table("documents"), **kwargs)
-
-    def vocab_growth(self, **kwargs) -> DataFrame:
-        """Heaps'-law vocabulary-growth fit per source (x140)."""
-        from .operators.curation import heaps_fit
-
-        return heaps_fit(self.table("documents"), **kwargs)
-
-    def trend_report(self, **kwargs) -> DataFrame:
-        """Mann-Kendall trend + Sen's slope per event type on the
-        dense hourly grid (x141)."""
-        from .operators.timeseries import mann_kendall_trend
-
-        return mann_kendall_trend(self.table("events"), **kwargs)
-
-    def transition_matrix(self, **kwargs) -> DataFrame:
-        """First-order Markov transition matrix with row entropy over
-        per-user event streams (x142)."""
-        from .operators.timeseries import event_transitions
-
-        return event_transitions(self.table("events"), **kwargs)
-
-    def fit_linear(self, df: DataFrame, y_col: str, x1_col: str, x2_col: str,
-                   group_col: str, **kwargs) -> DataFrame:
-        """Closed-form two-regressor OLS per group from one scan
-        (x143) over any frame."""
-        from .operators.profile import ols2_fit
-
-        return ols2_fit(df, y_col, x1_col, x2_col, group_col, **kwargs)
-
-    def lang_balance(self, **kwargs) -> DataFrame:
-        """Chi-squared independence of predicted language vs source
-        with Cramer's V (x144).  The 0.05 critical value is derived
-        from the table's ACTUAL dof (Wilson-Hilferty) unless an
-        explicit ``crit=`` is passed — the corpus contingency table is
-        typically ~20 sources x 5 languages (76 dof, crit ~97.4), not
-        a textbook 12-dof table."""
+    def _eval_split(self, eval_mod: int) -> tuple[DataFrame, DataFrame]:
+        """(train, eval): every ``eval_mod``-th document is held out."""
         from pyspark.sql import functions as F
 
-        from .operators.profile import chi2_independence
-        from .operators.text import lang_id
-
-        labeled = self.table("documents").select(
-            "source", lang_id(F.col("text")).alias("lang_pred")
-        )
-        return chi2_independence(labeled, "source", "lang_pred", **kwargs)
-
-    def periodicity(self, **kwargs) -> DataFrame:
-        """Autocorrelation function per event type on the dense
-        hourly grid (x145)."""
-        from .operators.timeseries import autocorrelation
-
-        return autocorrelation(self.table("events"), **kwargs)
-
-    def monitoring_dashboard(self, **kwargs) -> DataFrame:
-        """All hourly-grid detectors composed with a consensus vote
-        (x146).  Lazy by default; passing ``grid_partitions=n`` or
-        ``adaptive=True`` makes the call EAGER — the consensus is
-        computed under a grid-sized shuffle-partition scope and
-        returned as a bounded checkpoint (ADVICE r12: building the
-        frame then executes the query)."""
-        from .operators.timeseries import detector_consensus
-
-        return detector_consensus(self.table("events"), **kwargs)
-
-    def forecast(self, **kwargs) -> DataFrame:
-        """Additive Holt-Winters next-hour forecast per event type on
-        the dense hourly grid (x147)."""
-        from .operators.timeseries import holt_winters
-
-        return holt_winters(self.table("events"), **kwargs)
-
-    def length_stability(self, **kwargs) -> DataFrame:
-        """PSI of each source's length distribution vs the rest of
-        the corpus (x148)."""
-        from .operators.curation import length_psi
-
-        return length_psi(self.table("documents"), **kwargs)
-
-    def dedup_calibration(self, **kwargs) -> DataFrame:
-        """MinHash-estimate vs exact-Jaccard calibration curve
-        (x149)."""
-        from .operators.dedup import lsh_calibration
-
-        return lsh_calibration(self.table("documents"), **kwargs)
-
-    def journey_patterns(self, **kwargs) -> DataFrame:
-        """Top event-type n-grams by session support (x150)."""
-        from .operators.timeseries import session_ngrams
-
-        return session_ngrams(self.table("events"), **kwargs)
-
-    def tail_index(self, **kwargs) -> DataFrame:
-        """Hill estimator of the term-frequency tail per source
-        (x151)."""
-        from .operators.curation import hill_tail_index
-
-        return hill_tail_index(self.table("documents"), **kwargs)
-
-    def engagement(self, **kwargs) -> DataFrame:
-        """DAU/WAU/MAU + stickiness per day (x152)."""
-        from .operators.timeseries import active_users
-
-        return active_users(self.table("events"), **kwargs)
-
-    def audit_quantile_sketch(self, **kwargs) -> DataFrame:
-        """DDSketch-vs-exact quantile accuracy audit (x153)."""
-        from .plans import QUERIES
-
-        return QUERIES["x153_quantile_sketch_audit"].builder(
-            self.spark, self.sf_dir
-        )
-
-    def audit_cardinality_sketch(self, **kwargs) -> DataFrame:
-        """Portable-HLL-vs-exact distinct-count audit (x154)."""
-        from .plans import QUERIES
-
-        return QUERIES["x154_cardinality_sketch_audit"].builder(
-            self.spark, self.sf_dir
-        )
-
-    def audit_bloom_filter(self, build: DataFrame, probe: DataFrame,
-                           col: str, **kwargs) -> DataFrame:
-        """Bloom FPR + no-false-negative audit over any two value
-        sets (x155)."""
-        from .operators.sketches import bloom_fpr_audit
-
-        return bloom_fpr_audit(build, probe, col, **kwargs)
-
-    def embedding_report(self, **kwargs) -> DataFrame:
-        """Per-dimension embedding health (dead dims, anisotropy
-        inputs) (x156)."""
-        from .operators.embed import embedding_health
-
-        return embedding_health(self.table("embeddings"), **kwargs)
-
-    def class_separation(self, **kwargs) -> DataFrame:
-        """Fisher discriminant ratio per label pair (x157)."""
-        from .operators.embed import fisher_separation
-
-        return fisher_separation(self.table("embeddings"), **kwargs)
-
-    def label_consistency(self, **kwargs) -> DataFrame:
-        """1-NN label agreement on a broadcast query sample (x158)."""
-        from .operators.similarity import knn_label_agreement
-
-        return knn_label_agreement(self.table("embeddings"), **kwargs)
-
-    def train_classifier(self, label_col: str = "lang", **kwargs) -> DataFrame:
-        """Train the multinomial NB quality/domain classifier on the
-        documents table; returns the broadcastable dense model (x159)."""
-        from .operators.classify import nb_train
-
-        return nb_train(self.table("documents"), label_col=label_col, **kwargs)
-
-    def classify_docs(self, model: DataFrame, **kwargs) -> DataFrame:
-        """Score documents against a trained NB model (x159)."""
-        from .operators.classify import nb_score
-
-        return nb_score(self.table("documents"), model, **kwargs)
-
-    def classifier_report(self, label_col: str = "lang", **kwargs) -> DataFrame:
-        """Even/odd-split NB confusion matrix — the audit run before a
-        model-based filter is trusted (x159)."""
-        from .operators.classify import nb_confusion
-
-        return nb_confusion(self.table("documents"), label_col=label_col, **kwargs)
-
-    def privacy_audit(self, quasi_cols: list[str], sensitive_col: str, **kw) -> DataFrame:
-        """K-anonymity / l-diversity audit of a documents release
-        projection (x160)."""
-        from .operators.profile import k_anonymity_audit
-
-        return k_anonymity_audit(self.table("documents"), quasi_cols, sensitive_col, **kw)
-
-    def source_effect_sizes(self, value_col: str = "n_chars", **kw) -> DataFrame:
-        """Welch t + Cohen's d between every source pair (x161)."""
-        from .operators.profile import welch_pairs
-
-        return welch_pairs(self.table("documents"), "source", value_col, **kw)
-
-    def calibrate_quality_threshold(self, cal: DataFrame, test: DataFrame, qscore_col: str, **kw) -> DataFrame:
-        """Split-conformal filter-threshold calibration (x162)."""
-        from .operators.curation import conformal_thresholds
-
-        return conformal_thresholds(cal, test, qscore_col, **kw)
-
-    def search_quality_report(self, **kw) -> DataFrame:
-        """MRR / precision@k / nDCG@k of the BM25 ranker on
-        self-supervised queries (x163)."""
-        from .operators.retrieval import retrieval_eval
-
-        return retrieval_eval(self.table("documents"), **kw)
+        docs = self.table("documents")
+        held_out = F.col("doc_id") % eval_mod == 0
+        return docs.filter(~held_out), docs.filter(held_out)
 
     def release_audit(self) -> DataFrame:
         """The composed pre-publication gate (x164): datasheet + PII
         residue + k-anonymity + Bloom trust + sketch-accuracy audits
         as one long-form (family, item, metric, value, ok) report —
         one documents scan, one orders scan, one events scan."""
-        from .plans import QUERIES
-
-        return QUERIES["x164_release_audit"].builder(self.spark, self.sf_dir)
+        return self.query("x164_release_audit")
 
     def audit_ann_recall(self) -> DataFrame:
         """Per-query recall@10 of the multi-table LSH search vs the
         exact brute-force baseline (x165) — run before trusting the
         bucketed index."""
-        from .plans import QUERIES
-
-        return QUERIES["x165_ann_recall_audit"].builder(self.spark, self.sf_dir)
-
-    def batch_plan_report(self, max_len: int = 512, bucket_width: int = 64) -> DataFrame:
-        """Length-bucketed padding-waste report vs the naive
-        pad-to-max baseline (x166) — sizes a dynamic-batching
-        training loader."""
-        from .operators.curation import padding_efficiency
-
-        return padding_efficiency(
-            self.table("documents"), max_len=max_len, bucket_width=bucket_width
-        )
+        return self.query("x165_ann_recall_audit")
 
     def classifier_calibration(self, label_col: str = "lang", **kw) -> DataFrame:
         """Accuracy per prediction-margin bucket of the NB classifier
@@ -1152,34 +585,6 @@ class Engine:
 
         return tokenizer_fertility(self.table("documents"), group_col=group_col, **kw)
 
-    def filter_confound_audit(self) -> DataFrame:
-        """Chi-squared independence of the style quality signal vs
-        document length (x169) — does a heuristic filter silently act
-        as a length filter?"""
-        from .plans import QUERIES
-
-        return QUERIES["x169_quality_length_confound"].builder(
-            self.spark, self.sf_dir
-        )
-
-    def context_length_report(self, max_lens: tuple[int, ...] = (128, 256, 512, 1024, 2048)) -> DataFrame:
-        """Per candidate sequence length: documents truncated and
-        corpus tokens lost (x170) — the truncation side of the
-        padding/truncation trade x166 prices."""
-        from .operators.curation import truncation_loss
-
-        return truncation_loss(self.table("documents"), max_lens=max_lens)
-
-    def dedup_cluster_profile(self, **kwargs) -> DataFrame:
-        """Near-dup cluster-size distribution incl. singletons (x171)
-        — the giant-component early warning before canonical
-        selection acts on dedup output."""
-        from .operators.dedup import component_size_profile
-
-        return component_size_profile(
-            self.dedup_clusters(**kwargs), self.table("documents")
-        )
-
     def train_unigram_tokenizer(self, **kw) -> DataFrame:
         """Unigram-LM (SentencePiece-style) tokenizer model via Viterbi
         hard-EM + contribution pruning (x172) — the probabilistic
@@ -1188,26 +593,13 @@ class Engine:
 
         return unigram_lm_train(self.table("documents"), **kw)
 
-    def unigram_encode(self, model=None, **kw) -> DataFrame:
-        """Viterbi-encode the corpus with a unigram-LM model (x173):
-        per-document piece counts, total code length, OOV words.
-        Trains a fresh x172 model when none is passed."""
-        from .operators.text import unigram_lm_encode, unigram_lm_train
-
-        docs = self.table("documents")
-        if model is None:
-            model = unigram_lm_train(docs)
-        return unigram_lm_encode(docs, model, **kw)
-
     def tokenizer_audit(self) -> DataFrame:
         """The composed tokenizer-budget gate (x176): tokenizer-family
         comparison + per-language fertility + padding efficiency +
         truncation sweep as one long-form (family, item, metric,
         value) report — the x164 sibling for the token-budget
         decision."""
-        from .plans import QUERIES
-
-        return QUERIES["x176_tokenizer_audit"].builder(self.spark, self.sf_dir)
+        return self.query("x176_tokenizer_audit")
 
     def conformal_prediction_sets(self, **kw) -> DataFrame:
         """Split-conformal prediction sets for the NB classifier
@@ -1216,21 +608,3 @@ class Engine:
         from .operators.classify import nb_conformal_sets
 
         return nb_conformal_sets(self.table("documents"), **kw)
-
-    def t_closeness(self, quasi_cols: list[str], sensitive_col: str, **kw) -> DataFrame:
-        """T-closeness audit (x181) — the privacy-triad leg next to
-        privacy_audit's k-anonymity / l-diversity: per threshold t,
-        equivalence classes whose sensitive distribution diverges more
-        than t (total variation) from the corpus-wide one."""
-        from .operators.profile import t_closeness_audit
-
-        return t_closeness_audit(self.table("documents"), quasi_cols, sensitive_col, **kw)
-
-    def release_audit_extended(self) -> DataFrame:
-        """x164 plus the round-8 families (t-closeness, semantic
-        contamination) — the full pre-publication gate (x182)."""
-        from .plans import QUERIES
-
-        return QUERIES["x182_release_audit_extended"].builder(
-            self.spark, self.sf_dir
-        )

@@ -636,6 +636,30 @@ def kmeans_assign(
     )
 
 
+def cluster_topics(
+    emb: DataFrame, docs: DataFrame, k: int = 8, iterations: int = 1
+) -> DataFrame:
+    """Name each embedding cluster by its top-3 TF-IDF terms (x90):
+    portable k-means cells over ``emb`` joined back to ``docs`` by id,
+    then cluster-level TF-IDF (each cell is one super-document, df
+    counts cells).  Scale: the only cost over ``kmeans_assign`` is a
+    broadcast-able (doc_id, cell) join and the TF-IDF shuffles keyed on
+    k cells x terms."""
+    from ..cache import tracked_persist
+    from .text import tfidf_top_terms
+
+    # the (doc_id, cell) assignment is tiny and consumed by both
+    # tf-idf legs — persist so the Lloyd pipeline runs ONCE, not once
+    # per consumer
+    assign = tracked_persist(
+        kmeans_assign(emb, k=k, iterations=iterations, portable=True).select(
+            F.col("vec_id").alias("doc_id"), "cell"
+        )
+    )
+    labeled = docs.join(assign, "doc_id").select("cell", "text")
+    return tfidf_top_terms(labeled, id_col="cell", k=3, min_token_len=3)
+
+
 # ---------------------------------------------------------- matryoshka
 
 def matryoshka_truncate(

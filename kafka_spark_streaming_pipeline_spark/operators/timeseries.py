@@ -1230,10 +1230,13 @@ def detector_consensus(
     computed inside the scope and returned as a bounded localCheckpoint
     (``scoped_shuffle_partitions`` binds at action time, so a lazy
     return could not ride it), and the operator's internal grid caches
-    are released before returning.  ``adaptive=True`` prices the grid
-    with one count() (the blocks serve every detector anyway) and
-    derives the partition count via ``_grid_partition_count``;
-    ``grid_partitions`` skips the count and scopes to the given value.
+    are released before returning.  Both knobs first materialize the
+    grid with one count() OUTSIDE the scope (the blocks serve every
+    detector anyway), so the event-log aggregation shuffle runs under
+    the session's partitioning and only the grid-sized stages under the
+    scope.  ``adaptive=True`` derives the partition count from that
+    count via ``_grid_partition_count``; ``grid_partitions`` scopes to
+    the given value.
     """
     from ..cache import mark, release, tracked_since
     from ..session import scoped_shuffle_partitions
@@ -1243,10 +1246,14 @@ def detector_consensus(
     if grid_partitions is None and not adaptive:
         return consensus_from_dense(dense)
 
+    # materialize the persisted grid BEFORE the scope: the event-log
+    # aggregation feeding it must run under the session's partitioning,
+    # only the grid-sized detector stages under ``n_parts``
+    n_grid_rows = dense.count()
     n_parts = (
         int(grid_partitions)
         if grid_partitions is not None
-        else _grid_partition_count(dense.count())
+        else _grid_partition_count(n_grid_rows)
     )
     with scoped_shuffle_partitions(events.sparkSession, n_parts):
         out = consensus_from_dense(dense).localCheckpoint(eager=True)

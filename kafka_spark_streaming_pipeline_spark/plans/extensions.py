@@ -4665,22 +4665,14 @@ def x90_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     composite is hash-checked end-to-end.  Scale: the only added cost
     over x37 is a broadcast-able (doc_id, cell) join and the x17
     shuffles keyed on 8 cells x terms."""
-    from ..cache import tracked_persist
-    from ..operators.similarity import kmeans_assign
-    from ..operators.text import tfidf_top_terms
+    from ..operators.similarity import cluster_topics
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    docs = load_table(spark, sf_dir, "documents")
-    # the (doc_id, cell) assignment is tiny and consumed by both
-    # tf-idf legs — persist so the Lloyd pipeline runs ONCE, not once
-    # per consumer
-    assign = tracked_persist(
-        kmeans_assign(emb, k=8, iterations=1, portable=True).select(
-            F.col("vec_id").alias("doc_id"), "cell"
-        )
+    return cluster_topics(
+        load_table(spark, sf_dir, "embeddings"),
+        load_table(spark, sf_dir, "documents"),
+        k=8,
+        iterations=1,
     )
-    labeled = docs.join(assign, "doc_id").select("cell", "text")
-    return tfidf_top_terms(labeled, id_col="cell", k=3, min_token_len=3)
 
 
 @query(

@@ -203,6 +203,17 @@ def append_log_upsert(batch_df: DataFrame, table_path: str, batch_id: int) -> No
     )
 
 
+def _replay_watermark(log: DataFrame) -> DataFrame:
+    """One row, one ``__wm`` column: the highest batch id an online
+    compaction folded into ``log`` (-1 when none was)."""
+    return log.agg(
+        F.coalesce(
+            F.max(F.when(F.col("__commit") < -1, -F.col("__commit") - 2)),
+            F.lit(-1),
+        ).alias("__wm")
+    )
+
+
 def _drop_replays_behind_watermark(log: DataFrame) -> DataFrame:
     """Replay guard for logs compacted ONLINE (``quiesced=False``):
     folded rows encode the highest batch id they absorbed as
@@ -214,14 +225,8 @@ def _drop_replays_behind_watermark(log: DataFrame) -> DataFrame:
     decodes to wm = -1 — every live row passes, today's semantics.
     The watermark is derived IN-PLAN (tiny aggregate, broadcast back);
     no driver-side collect."""
-    wm = log.agg(
-        F.coalesce(
-            F.max(F.when(F.col("__commit") < -1, -F.col("__commit") - 2)),
-            F.lit(-1),
-        ).alias("__wm")
-    )
     return (
-        log.crossJoin(F.broadcast(wm))
+        log.crossJoin(F.broadcast(_replay_watermark(log)))
         .filter((F.col("__commit") < 0) | (F.col("__commit") > F.col("__wm")))
         .drop("__wm")
     )
@@ -1177,8 +1182,12 @@ def make_substring_clean_sink(
     Replay safety: the clean step excludes hashes the SAME batch id
     committed (a replayed batch must not see its own first attempt as
     'history'), so re-running a batch reproduces byte-identical
-    cleaned rows.  The frames the clean step persists are released
-    when the call ends — only those, never other readers' caches."""
+    cleaned rows.  Once an online compaction has folded a batch's
+    hashes, that exclusion can no longer see them; but its cleaned rows
+    were appended before its hashes, so they are already committed and
+    a replay at or behind the history's fold watermark is skipped.
+    The frames the clean step persists are released when the call
+    ends — only those, never other readers' caches."""
     from .. import cache
     from ..operators.dedup import (
         _window_occurrences,
@@ -1190,11 +1199,14 @@ def make_substring_clean_sink(
         spark = batch_df.sparkSession
         try:
             log = _read_log(spark, history_path)
+        except FileNotFoundError:
+            hist = spark.createDataFrame([], "h bigint")
+        else:
+            if batch_id <= _replay_watermark(log).first()["__wm"]:
+                return
             hist = _LOGS["window_hash"].view_of(
                 log.filter(F.col("__commit") != batch_id)
             )
-        except FileNotFoundError:
-            hist = spark.createDataFrame([], "h bigint")
         pos = cache.mark()
         try:
             cleaned = incremental_substring_clean(

@@ -495,6 +495,43 @@ def test_consensus_grid_pass_and_checkpoint(spark, sf_dir):
     assert "Scan ExistingRDD" in eager_plan, eager_plan
 
 
+def test_consensus_grid_is_cached_before_the_partition_scope(
+    spark, sf_dir, monkeypatch
+):
+    """``grid_partitions=n`` scopes only the grid-sized detector stages:
+    the persisted dense grid (and the event-log aggregation feeding it)
+    is materialized before ``scoped_shuffle_partitions`` is entered, so
+    the log pass runs under the session's partitioning, not at ``n``."""
+    from kafka_spark_streaming_pipeline_spark import cache, session
+    from kafka_spark_streaming_pipeline_spark.catalog import load_table
+    from kafka_spark_streaming_pipeline_spark.operators.timeseries import (
+        detector_consensus,
+    )
+
+    cache.unpersist_tracked(blocking=True)
+    manager = spark._jsparkSession.sharedState().cacheManager()
+    at_scope_entry = []
+    scope = session.scoped_shuffle_partitions
+
+    def spy(sp, n):
+        at_scope_entry.append(
+            [
+                manager.lookupCachedData(df._jdf)
+                .get()
+                .cachedRepresentation()
+                .cacheBuilder()
+                .isCachedColumnBuffersLoaded()
+                for df in cache.tracked_since(0)
+            ]
+        )
+        return scope(sp, n)
+
+    monkeypatch.setattr(session, "scoped_shuffle_partitions", spy)
+    detector_consensus(load_table(spark, sf_dir, "events"), grid_partitions=4)
+    assert len(at_scope_entry) == 1
+    assert at_scope_entry[0] and all(at_scope_entry[0]), at_scope_entry
+
+
 def test_nb_score_model_join_is_size_gated(spark):
     """The dense NB model broadcasts while it fits (default gate) and
     falls back to a plain shuffle join on the well-spread token key

@@ -1732,6 +1732,65 @@ def test_streaming_substring_clean_matches_batch_and_survives_replay(spark, tmp_
     assert hv.count() == hv.distinct().count()
 
 
+def test_substring_clean_replay_after_online_fold_of_only_the_hash_history(
+    spark, tmp_path
+):
+    """Once an online compaction has folded a batch's window hashes,
+    the sink's own-commit exclusion cannot hide them from that batch's
+    replay.  The replay must not be cleaned against its own windows:
+    its cleaned rows were committed before its hashes, so the sink
+    skips it — the clean log gains no version and no second, different
+    cleaned_text under the same (__commit, doc_id)."""
+    from kafka_spark_streaming_pipeline_spark.operators.dedup import (
+        substring_dedup_clean,
+    )
+    from kafka_spark_streaming_pipeline_spark.streaming.sinks import (
+        compact_window_hashes,
+        make_substring_clean_sink,
+        substring_clean_view,
+    )
+    from kafka_spark_streaming_pipeline_spark.streaming.txn import AtomicParquetTable
+
+    run8 = "alpha bravo charlie delta echo foxtrot golf hotel"
+
+    def docs(rows):
+        return spark.createDataFrame(rows, ["doc_id", "text"])
+
+    hist_path = str(tmp_path / "window_hashes")
+    clean_path = str(tmp_path / "cleaned")
+    sink = make_substring_clean_sink(hist_path, clean_path)
+    b0 = [(1, f"one two {run8} three"), (2, "unrelated first batch words only")]
+    b1 = [
+        (10, f"late copy {run8} arrives"),
+        (11, "another unique later document with fresh words only"),
+    ]
+    sink(docs(b0), 0)
+    sink(docs(b1), 1)
+
+    compact_window_hashes(spark, hist_path, quiesced=False)
+    clean = AtomicParquetTable(clean_path)
+    version = clean.version(spark)
+    sink(docs(b1), 1)
+
+    assert clean.version(spark) == version
+    per_doc = (
+        clean.read(spark)
+        .filter(F.col("__commit") == 1)
+        .groupBy("doc_id")
+        .agg(F.countDistinct("cleaned_text").alias("n"))
+    )
+    assert {r.doc_id: r.n for r in per_doc.collect()} == {10: 1, 11: 1}
+    view = {
+        r.doc_id: (r.cleaned_text, r.n_tokens_removed)
+        for r in substring_clean_view(spark, clean_path).collect()
+    }
+    want = {
+        r.doc_id: (r.cleaned_text, r.n_tokens_removed)
+        for r in substring_dedup_clean(docs(b0 + b1)).collect()
+    }
+    assert view == want
+
+
 def test_streaming_bloom_filter_merges_exactly_no_false_negatives(spark, tmp_path):
     """The streamed bloom filter must equal the batch-built filter
     word for word (bit_or merges exactly), survive replay + online
