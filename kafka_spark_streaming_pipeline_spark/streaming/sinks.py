@@ -5,26 +5,20 @@ upserts keyed on (stream_id, chunk_index) (spark_streaming.py:322-337,
 463-486; README:563-569).  The engine keeps that design — deterministic
 keys + merge — on parquet tables:
 
-- ``upsert_partitioned``: MERGE-shaped upsert that only rewrites the
-  *partitions touched by the batch* (dynamic partition overwrite).  At
-  100 TB the per-batch cost is O(touched streams), not O(table) — the
-  same access pattern a Delta/Iceberg MERGE would compile to, without
-  requiring those jars in this environment.
+- ``make_live_log_sink``: the live path.  The per-chunk metadata is
+  a merge-on-read log: ``append_log_upsert`` appends the batch stamped
+  with its batch id as one crash-atomic ``txn`` commit, ``latest_view``
+  resolves the last row per key at read time, and ``compact_log``
+  folds the log back to one row per key when read amplification grows.
 - ``append_chunk_objects``: the object-store placeholder writes (S5)
   as an append-only file sink, one file per task with no directory
-  fan-out; rows are sorted by ``(part_bucket, stream_id,
-  chunk_index)`` so parquet min/max statistics still let a bucket or
-  stream filter skip row groups.
+  fan-out; rows are sorted by ``(stream_id, chunk_index)`` so parquet
+  min/max statistics still let a stream filter skip row groups.
 
-Both are safe under checkpoint replay: re-running a batch rewrites the
-same keys to the same values (last-writer-wins on the compound key).
-Crash-atomicity comes from the commit-marker protocol in ``txn``: the
-merge-on-read log (the DEFAULT live path, ``make_live_log_sink``) and
-the compactor publish every mutation as an atomic manifest rename, so
-a writer dying mid-write can never tear the table.  The plain
-dynamic-partition-overwrite ``upsert_partitioned`` remains as the
-lightweight alternative where the storage layer already provides
-atomic directory swap semantics.
+Both are safe under checkpoint replay: a replayed batch re-appends the
+same rows under the same batch id; ``latest_view`` keeps one row per
+key (last-writer-wins on the compound key), and a chunk object's key
+names the same object again, as a repeated PUT would.
 
 Every incremental sink after the live path — rollups, sketches,
 histograms, indexes and per-document fact logs — is one entry of the
@@ -58,59 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from .txn import AtomicParquetTable, fs_exists
-
-
-def upsert_partitioned(
-    batch_df: DataFrame,
-    table_path: str,
-    keys: list[str],
-    partition_col: str = "stream_id",
-    order_col: str | None = None,
-) -> None:
-    """Upsert ``batch_df`` into the parquet table at ``table_path``.
-
-    Within the batch, the last row per key wins (ordered by
-    ``order_col`` if given).  Existing rows for *touched partitions
-    only* are read back, anti-joined on the key, and the union is
-    written with dynamic partition overwrite — untouched partitions
-    are never rewritten.
-
-    NOT crash-atomic: the per-partition overwrite can tear if the
-    writer dies mid-rewrite.  Where that matters (it does on object
-    stores), use ``txn.AtomicParquetTable.upsert`` — same MERGE
-    semantics behind an atomic commit.
-    """
-    spark = batch_df.sparkSession
-
-    # dedup within the batch (replay / duplicate events)
-    order = F.col(order_col).desc() if order_col else F.monotonically_increasing_id().desc()
-    w = W.partitionBy(*keys).orderBy(order)
-    deduped = (
-        batch_df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-    # Hadoop FS probe, not os.path — the table may live on s3a://hdfs://
-    if fs_exists(spark, table_path):
-        existing = spark.read.parquet(table_path)
-        touched = deduped.select(partition_col).distinct()
-        # rows already in the touched partitions that are NOT replaced
-        kept = (
-            existing.join(F.broadcast(touched), partition_col, "left_semi")
-            .join(deduped.select(*keys).distinct(), keys, "left_anti")
-        )
-        out = kept.unionByName(deduped, allowMissingColumns=True)
-    else:
-        out = deduped
-    (
-        out.write.mode("overwrite")
-        # per-write option, NOT session conf: no cross-query leakage
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(table_path)
-    )
+from .txn import AtomicParquetTable
 
 
 def append_chunk_objects(batch_df: DataFrame, path: str) -> None:
@@ -119,71 +61,16 @@ def append_chunk_objects(batch_df: DataFrame, path: str) -> None:
     reference's {stream_id}/{quality}/{chunk_index}.ts keyspace lives
     in the data, not in the directory tree.
 
-    Each task writes ONE file: a directory per hash bucket would make
-    every task open a file in every bucket it touches (up to 64 tiny
-    files per task per micro-batch), and no reader prunes chunk
-    objects by directory.  ``part_bucket`` is kept as a data column
-    and rows are sorted within each task by ``(part_bucket, stream_id,
-    chunk_index)`` — all three are required — so a filter on bucket or
-    stream still skips row groups by their min/max statistics."""
+    Each task writes ONE file: no reader prunes chunk objects by
+    directory, so a directory per key range would only multiply the
+    files each micro-batch writes.  Rows are sorted within each task by
+    ``(stream_id, chunk_index)`` so a stream filter still skips row
+    groups by their min/max statistics."""
     (
-        batch_df.sortWithinPartitions("part_bucket", "stream_id", "chunk_index")
+        batch_df.sortWithinPartitions("stream_id", "chunk_index")
         .write.mode("append")
         .parquet(path)
     )
-
-
-N_PARTITION_BUCKETS = 64
-
-
-def with_partition_bucket(
-    df: DataFrame, key_col: str = "stream_id", buckets: int = N_PARTITION_BUCKETS
-) -> DataFrame:
-    """Bounded partition key: hash-bucket of the stream id.  Partitioning
-    a 100 TB table by raw stream_id means millions of directories (a
-    catalog/listing disaster) and single-stream batches rewriting one
-    tiny file per stream.  A fixed bucket count keeps the copy-on-write
-    metadata table's partition dirs bounded while per-stream reads
-    still prune: filter on ``part_bucket = pmod(xxhash64(id), buckets)``
-    + the id itself.  The append-only sinks (the merge-on-read log and
-    the chunk objects) keep the bucket as a plain column instead: they
-    never rewrite a partition, so a directory per bucket would only
-    multiply the files each commit writes."""
-    return df.withColumn("part_bucket", F.pmod(F.xxhash64(key_col), F.lit(buckets)))
-
-
-def make_live_sink(metadata_path: str, chunks_path: str):
-    """Copy-on-write variant of the live-path foreachBatch body
-    (reference process_live_batch, spark_streaming.py:519-539, minus
-    the collect()): dedup-upsert the per-chunk metadata, append the
-    chunk objects.  The metadata upsert partitions on the bounded hash
-    bucket, not the raw stream id; the chunk objects carry the bucket
-    as a column.  ``make_live_log_sink`` is the DEFAULT live
-    path — crash-atomic and O(batch) per commit; this COW variant
-    trades that for zero read-time merge."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df = with_partition_bucket(batch_df).persist()
-        try:
-            upsert_partitioned(
-                batch_df,
-                metadata_path,
-                keys=["stream_id", "chunk_index"],
-                partition_col="part_bucket",
-                order_col="sequence_number",
-            )
-            append_chunk_objects(
-                batch_df.select(
-                    "stream_id", "chunk_index", "chunk_path", "size_bytes", "part_bucket"
-                ),
-                chunks_path,
-            )
-        finally:
-            batch_df.unpersist()
-
-    return sink
 
 
 # ----------------------------------------------------- merge-on-read log
@@ -191,8 +78,6 @@ def make_live_sink(metadata_path: str, chunks_path: str):
 def append_log_upsert(batch_df: DataFrame, table_path: str, batch_id: int) -> None:
     """Merge-on-read upsert: O(batch) append of the rows stamped with
     the commit id — no read-modify-write on the hot path (the
-    copy-on-write ``upsert_partitioned`` pays a partition rewrite per
-    batch, which at high commit rates dominates; this is the
     Hudi-MOR/Delta-CDF shape).  Readers resolve the latest row per key
     via ``latest_view``; ``compact_log`` folds the log back to one row
     per key when read amplification grows.  The append itself is a
@@ -360,9 +245,11 @@ def compact_log(
 
 
 def make_live_log_sink(metadata_path: str, chunks_path: str):
-    """The DEFAULT live-path sink: merge-on-read log, so the per-batch
-    work is two appends — constant in table size, linear in batch
-    size — and the metadata append is a crash-atomic commit.  The
+    """The live-path sink (reference process_live_batch,
+    spark_streaming.py:519-539, minus the collect()): merge-on-read
+    log, so the per-batch work is two appends — constant in table
+    size, linear in batch size — and the metadata append is a
+    crash-atomic commit.  The
     chunk-object append stays a plain file append by design: it models
     per-object PUTs (each object is atomic on its own, reference
     spark_streaming.py:300-320), not a table mutation."""
@@ -370,13 +257,11 @@ def make_live_log_sink(metadata_path: str, chunks_path: str):
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_df = with_partition_bucket(batch_df).persist()
+        batch_df = batch_df.persist()
         try:
             append_log_upsert(batch_df, metadata_path, batch_id)
             append_chunk_objects(
-                batch_df.select(
-                    "stream_id", "chunk_index", "chunk_path", "size_bytes", "part_bucket"
-                ),
+                batch_df.select("stream_id", "chunk_index", "chunk_path", "size_bytes"),
                 chunks_path,
             )
         finally:
@@ -1439,6 +1324,7 @@ def make_curation_sink(
         # tier 1: quality
         q = gopher_quality_rules(batch, id_col, text_col).select(id_col, "keep")
         staged = batch.join(q, id_col).persist()
+        held = [staged]
         try:
             quality_pass = staged.filter("keep").select(id_col, text_col)
             n_q = quality_pass.count()
@@ -1460,6 +1346,7 @@ def make_curation_sink(
                     ex.filter("keep").select(id_col), id_col, "left_semi"
                 )
             ).persist()
+            held.append(exact_pass)
             n_e = exact_pass.count()
 
             # tier 3: near-dup, vs signature history (excluding own
@@ -1488,6 +1375,7 @@ def make_curation_sink(
                 .distinct()
             )
             nd_pass = exact_pass.join(removed_nd, id_col, "left_anti").persist()
+            held.append(nd_pass)
             n_n = nd_pass.count()
 
             # tier 4: decontamination vs the eval gram set
@@ -1497,6 +1385,7 @@ def make_curation_sink(
             accepted = nd_pass.join(
                 dc.filter("contaminated").select(id_col), id_col, "left_anti"
             ).persist()
+            held.append(accepted)
             n_d = accepted.count()
 
             # route + advance state (accepted docs only)
@@ -1540,10 +1429,9 @@ def make_curation_sink(
                 "stage string, docs_in long, docs_removed long, docs_out long",
             )
             AtomicParquetTable(f"{path}/yield").append(yields.select("*", stamp))
-            for frame in (exact_pass, nd_pass, accepted):
-                frame.unpersist()
         finally:
-            staged.unpersist()
+            for frame in held:
+                frame.unpersist()
 
     return sink
 def curation_yield_view(spark, path: str) -> DataFrame:

@@ -24,21 +24,19 @@ on nothing but the Hadoop ``FileSystem`` API that ships with Spark:
   invisible to every reader, reclaimed by ``vacuum``.
 - The manifest carries the table SCHEMA, as Delta's log does:
   ``append`` merges the batch's columns into it by name and
-  ``overwrite`` replaces it.  A reader therefore scans every
-  unpartitioned entry as ONE relation,
-  ``spark.read.schema(S).parquet(*dirs)`` — no footer inference, no
-  per-commit union — so a log view's plan stays one scan however many
-  commits it spans, and rows of a commit written before a column
-  existed read that column as NULL.  A manifest without the field
-  (written before it existed) infers the schema once per read, from
-  one footer per entry; its next append records it.
+  ``overwrite`` replaces it.  A reader therefore scans every entry as
+  ONE relation, ``spark.read.schema(S).parquet(*dirs)`` — no footer
+  inference, no per-commit union — so a log view's plan stays one scan
+  however many commits it spans, and rows of a commit written before a
+  column existed read that column as NULL.  A manifest without the
+  field (written before it existed) infers the schema once per read,
+  from one footer per entry; its next append records it.
 
-Partitioned tables get copy-on-write at PARTITION granularity: an
-upsert rewrites only the partitions the batch touches into the new
-commit dir, and the manifest re-points those partitions while all
-others keep referencing older commit dirs — O(touched partitions)
-per batch at 100 TB, same as a Delta/Iceberg MERGE with dynamic
-partition overwrite.
+Every table has one shape, the append log: a keyed upsert is an
+append of commit-stamped rows, resolved at read time (``sinks``'
+``latest_view``) and folded back by an ``overwrite`` compaction.  A
+manifest entry is ``{"dir": ...}``; manifests written before the
+table had one shape also carry two null keys, which readers ignore.
 
 All path probing goes through the Hadoop FileSystem API, so the table
 works on any scheme Spark can reach (file://, hdfs://, s3a://...) —
@@ -52,7 +50,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 from pyspark.sql.types import (
     ArrayType,
     ByteType,
@@ -191,30 +188,12 @@ def _publish(fs: _FS, root: str, version: int, manifest: dict) -> None:
 
 
 class AtomicParquetTable:
-    """A parquet table whose every mutation is an atomic commit.
+    """A parquet append log whose every mutation is an atomic commit
+    (``append`` / ``overwrite``): the merge-on-read shape of the live
+    sink and of every mergeable log."""
 
-    ``partition_col`` set   -> partition-granular copy-on-write
-    (``upsert``); unset -> append-log mode (``append`` /
-    ``overwrite``), the merge-on-read shape used by the live sink.
-    """
-
-    #: upsert() collects the batch's distinct partition values to the
-    #: driver to compute the COW entry list; this cap turns the implicit
-    #: assumption ("a batch touches few partitions") into a loud
-    #: contract instead of an unbounded driver materialization.  The
-    #: live sink's fixed 64-bucket hash partitioning keeps real batches
-    #: far below the default.
-    DEFAULT_MAX_TOUCHED_PARTITIONS = 10_000
-
-    def __init__(
-        self,
-        root: str,
-        partition_col: str | None = None,
-        max_touched_partitions: int = DEFAULT_MAX_TOUCHED_PARTITIONS,
-    ):
+    def __init__(self, root: str):
         self.root = root.rstrip("/")
-        self.partition_col = partition_col
-        self.max_touched_partitions = max_touched_partitions
 
     # ------------------------------------------------------------ resolve
 
@@ -234,27 +213,19 @@ class AtomicParquetTable:
     # --------------------------------------------------------------- read
 
     def read(
-        self,
-        spark: SparkSession,
-        partition_values: list | None = None,
-        version: int | None = None,
+        self, spark: SparkSession, version: int | None = None
     ) -> DataFrame | None:
         """The latest committed snapshot; ``None`` if nothing committed.
 
         ``version`` time-travels to an older commit: every commit file
-        is immutable and data dirs are copy-on-write, so any version
+        is immutable and data dirs are never rewritten, so any version
         not yet vacuumed reads exactly as it was published (the same
         mechanism as Delta's VERSION AS OF).  Raises KeyError for a
         version that never existed or whose commit was vacuumed.
 
-        ``partition_values`` prunes at MANIFEST level — only commit
-        dirs owning a wanted partition are even listed, and within a
-        dir only the wanted ``col=value`` subdirectories are read
-        (the file-listing analogue of partition pruning).
-
-        Every unpartitioned entry is read by ONE scan under the
-        manifest's schema, so the plan has one relation for the whole
-        log, not one per commit."""
+        Every entry is read by ONE scan under the manifest's schema, so
+        the plan has one relation for the whole log, not one per
+        commit."""
         fs = _FS(spark, self.root)
         if version is None:
             _, manifest = self._resolve(fs)
@@ -268,49 +239,21 @@ class AtomicParquetTable:
             manifest = json.loads(fs.read_text(commit))
         if manifest is None:
             return None
-        wanted = (
-            None if partition_values is None else {str(v) for v in partition_values}
-        )
-        log_dirs: list[str] = []
-        parts: list[DataFrame] = []
-        for entry in manifest["entries"]:
-            d = f"{self.root}/{entry['dir']}"
-            if entry["partitions"] is None:
-                log_dirs.append(d)
-                continue
-            owned = entry["partitions"] if wanted is None else sorted(
-                wanted.intersection(entry["partitions"])
-            )
-            if not owned:
-                continue
-            pcol = manifest["partition_col"]
-            parts.append(
-                spark.read.option("basePath", d).parquet(
-                    *[f"{d}/{pcol}={v}" for v in owned]
-                )
-            )
-        if log_dirs:
-            schema = self._schema(spark, manifest)
-            parts.insert(0, spark.read.schema(schema).parquet(*log_dirs))
-        if not parts:
+        dirs = [f"{self.root}/{e['dir']}" for e in manifest["entries"]]
+        if not dirs:
             return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        return spark.read.schema(self._schema(spark, manifest)).parquet(*dirs)
 
     def _schema(self, spark: SparkSession, manifest: dict) -> StructType | None:
-        """The schema of ``manifest``'s unpartitioned entries (None if it
-        has none).  A manifest without the field (written before
-        manifests carried it) gets the by-name merge of one footer per
-        such entry."""
+        """The schema of ``manifest``'s entries (None if it has none).  A
+        manifest without the field (written before manifests carried
+        it) gets the by-name merge of one footer per entry."""
         if "schema" in manifest:
             return StructType.fromJson(manifest["schema"])
         schema = None
         for entry in manifest["entries"]:
-            if entry["partitions"] is None:
-                d = f"{self.root}/{entry['dir']}"
-                schema = _merge_schema(schema, spark.read.parquet(d).schema)
+            d = f"{self.root}/{entry['dir']}"
+            schema = _merge_schema(schema, spark.read.parquet(d).schema)
         return schema
 
     # ------------------------------------------------------------- append
@@ -324,19 +267,12 @@ class AtomicParquetTable:
         schema = _merge_schema(self._schema(spark, manifest) if manifest else None, df.schema)
         rel = f"{_DATA}/{uuid.uuid4().hex[:12]}"
         df.write.parquet(f"{self.root}/{rel}")
-        entries = (manifest["entries"] if manifest else []) + [
-            {"dir": rel, "partitions": None}
-        ]
+        entries = (manifest["entries"] if manifest else []) + [{"dir": rel}]
         _publish(
             fs,
             self.root,
             version + 1,
-            {
-                "version": version + 1,
-                "partition_col": self.partition_col,
-                "schema": schema.jsonValue(),
-                "entries": entries,
-            },
+            {"version": version + 1, "schema": schema.jsonValue(), "entries": entries},
         )
         return version + 1
 
@@ -366,79 +302,10 @@ class AtomicParquetTable:
             version + 1,
             {
                 "version": version + 1,
-                "partition_col": self.partition_col,
                 "schema": _nullable(df.schema).jsonValue(),
-                "entries": [{"dir": rel, "partitions": None}],
+                "entries": [{"dir": rel}],
             },
         )
-        return version + 1
-
-    # ------------------------------------------------------------- upsert
-
-    def upsert(
-        self, batch_df: DataFrame, keys: list[str], order_col: str | None = None
-    ) -> int:
-        """MERGE keyed on ``keys``: last row per key in the batch wins
-        (ordered by ``order_col``), existing rows of TOUCHED partitions
-        are carried over minus replaced keys, untouched partitions are
-        re-pointed, and the whole thing becomes visible in one commit.
-
-        The touched-partition list is collected to the driver — it is
-        bounded by the partition key's cardinality per batch (the live
-        sink uses a fixed 64-bucket hash partition precisely so this
-        stays O(64) at any scale, see sinks.with_partition_bucket)."""
-        if self.partition_col is None:
-            raise ValueError("upsert requires a partition_col")
-        pcol = self.partition_col
-        spark = batch_df.sparkSession
-        fs = _FS(spark, self.root)
-        version, manifest = self._resolve(fs)
-
-        order = (
-            F.col(order_col).desc() if order_col else F.monotonically_increasing_id().desc()
-        )
-        w = W.partitionBy(*keys).orderBy(order)
-        deduped = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-
-        # cap the driver-side list BEFORE collecting: limit(n+1) bounds
-        # the transfer, and exceeding the cap fails loudly instead of
-        # materializing an arbitrarily long partition list
-        cap = self.max_touched_partitions
-        touched_rows = deduped.select(pcol).distinct().limit(cap + 1).collect()
-        if len(touched_rows) > cap:
-            raise ValueError(
-                f"batch touches > {cap} distinct {pcol!r} partitions; "
-                "repartition the sink key (e.g. hash-bucket it) or raise "
-                "max_touched_partitions"
-            )
-        touched = sorted(str(r[0]) for r in touched_rows)
-        existing = self.read(spark, partition_values=touched) if manifest else None
-        if existing is not None:
-            kept = existing.join(deduped.select(*keys).distinct(), keys, "left_anti")
-            out = kept.unionByName(deduped, allowMissingColumns=True)
-        else:
-            out = deduped
-
-        rel = f"{_DATA}/{uuid.uuid4().hex[:12]}"
-        out.write.partitionBy(pcol).parquet(f"{self.root}/{rel}")
-
-        entries = [{"dir": rel, "partitions": touched}]
-        for entry in manifest["entries"] if manifest else []:
-            remaining = (
-                None
-                if entry["partitions"] is None
-                else [p for p in entry["partitions"] if p not in set(touched)]
-            )
-            if remaining is None or remaining:
-                entries.append({"dir": entry["dir"], "partitions": remaining})
-        new = {"version": version + 1, "partition_col": pcol, "entries": entries}
-        if manifest and "schema" in manifest:
-            new["schema"] = manifest["schema"]  # every log entry is kept as is
-        _publish(fs, self.root, version + 1, new)
         return version + 1
 
     # ------------------------------------------------------------- vacuum

@@ -3,8 +3,8 @@
 Every entry of ``streaming.sinks._LOGS`` is fed by its own public sink
 and must (a) publish no version for an empty micro-batch and (b) drop
 a batch replayed after an online compaction (``quiesced=False``),
-leaving its merged view unchanged.  Plus the scoped cache release of
-the two sinks that persist intermediate frames.
+leaving its merged view unchanged.  Plus the cache release of the
+sinks that persist intermediate frames.
 """
 
 from __future__ import annotations
@@ -12,10 +12,12 @@ from __future__ import annotations
 from typing import Callable, NamedTuple
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from kafka_spark_streaming_pipeline_spark import cache
 from kafka_spark_streaming_pipeline_spark.streaming import sinks as S
+from kafka_spark_streaming_pipeline_spark.streaming import txn
 from kafka_spark_streaming_pipeline_spark.streaming.txn import AtomicParquetTable
 
 WORDS = (
@@ -233,3 +235,28 @@ def test_trigram_counts_sink_does_not_grow_the_cache_registry(spark, tmp_path):
     for batch_id in range(3):
         sink(_docs(spark, range(batch_id * 4, batch_id * 4 + 4)), batch_id)
     assert len(cache._TRACKED) == before
+
+
+def test_curation_sink_releases_its_frames_when_a_commit_fails(
+    spark, tmp_path, monkeypatch
+):
+    """A curation batch whose commit fails leaves none of the frames it
+    persisted cached."""
+    sink = _curation_sink(spark, str(tmp_path / "cur"))
+    frame_type = type(spark.range(1))
+    persist = frame_type.persist
+    persisted = []
+
+    def recording_persist(df, *args, **kwargs):
+        persisted.append(df)
+        return persist(df, *args, **kwargs)
+
+    def boom(fs, root, version, manifest):
+        raise RuntimeError("simulated writer crash before commit")
+
+    monkeypatch.setattr(frame_type, "persist", recording_persist)
+    monkeypatch.setattr(txn, "_publish", boom)
+    with pytest.raises(RuntimeError, match="simulated"):
+        sink(_docs(spark, range(6)), 0)
+    assert persisted
+    assert [df.storageLevel for df in persisted] == [StorageLevel.NONE] * len(persisted)

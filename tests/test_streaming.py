@@ -21,7 +21,6 @@ from kafka_spark_streaming_pipeline_spark.streaming.pipeline import (
     start_foreach_batch,
     with_watermarked_windows,
 )
-from kafka_spark_streaming_pipeline_spark.streaming.sinks import make_live_sink, upsert_partitioned
 from kafka_spark_streaming_pipeline_spark.streaming.state import dvr_manifests, track_gaps
 
 
@@ -420,47 +419,8 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
 # ----------------------------------------------------------------- sinks
 
 
-def test_upsert_sink_idempotent_under_replay(spark, tmp_path):
-    table = str(tmp_path / "meta")
-    df = spark.createDataFrame([_event("s1", i) for i in range(4)], LIVE_CHUNK_SCHEMA)
-    upsert_partitioned(df, table, keys=["stream_id", "chunk_index"], order_col="sequence_number")
-    # replay the same batch (checkpoint recovery scenario, ST3)
-    upsert_partitioned(df, table, keys=["stream_id", "chunk_index"], order_col="sequence_number")
-    out = spark.read.parquet(table)
-    assert out.count() == 4
-    # update wins: new status for chunk 0 replaces the old row
-    upd = _event("s1", 0)
-    upd["status"] = "live"
-    upsert_partitioned(
-        spark.createDataFrame([upd], LIVE_CHUNK_SCHEMA),
-        table,
-        keys=["stream_id", "chunk_index"],
-        order_col="sequence_number",
-    )
-    out = spark.read.parquet(table)
-    assert out.count() == 4
-    assert out.filter(F.col("chunk_index") == 0).collect()[0].status == "live"
-
-
-def test_upsert_only_touched_partitions(spark, tmp_path):
-    table = str(tmp_path / "meta")
-    df = spark.createDataFrame(
-        [_event("s1", 0), _event("s2", 0)], LIVE_CHUNK_SCHEMA
-    )
-    upsert_partitioned(df, table, keys=["stream_id", "chunk_index"])
-    s2_files_before = set(os.listdir(os.path.join(table, "stream_id=s2")))
-    upsert_partitioned(
-        spark.createDataFrame([_event("s1", 1)], LIVE_CHUNK_SCHEMA),
-        table,
-        keys=["stream_id", "chunk_index"],
-    )
-    s2_files_after = set(os.listdir(os.path.join(table, "stream_id=s2")))
-    assert s2_files_before == s2_files_after  # untouched partition not rewritten
-    assert spark.read.parquet(table).count() == 3
-
-
 def test_end_to_end_live_query(spark, tmp_path):
-    """Full topology on the DEFAULT (merge-on-read, crash-atomic) live
+    """Full topology on the (merge-on-read, crash-atomic) live
     sink: file-source micro-batches -> transform -> foreachBatch dual
     sink (metadata log upsert + chunk objects)."""
     from kafka_spark_streaming_pipeline_spark.streaming.sinks import (
@@ -491,13 +451,10 @@ def test_end_to_end_live_query(spark, tmp_path):
 
 
 def test_live_log_sink_writes_one_chunk_file_per_task(spark, tmp_path):
-    """A batch touching all 64 hash buckets writes at most one chunk
-    object file per input partition — no part_bucket= directory per
-    bucket — and every row keeps its bucket as a data column."""
-    from kafka_spark_streaming_pipeline_spark.streaming.sinks import (
-        N_PARTITION_BUCKETS,
-        make_live_log_sink,
-    )
+    """A batch of 1,000 streams writes at most one chunk object file per
+    input partition, with no directory per key range, and the objects
+    carry only the chunk columns."""
+    from kafka_spark_streaming_pipeline_spark.streaming.sinks import make_live_log_sink
 
     n_parts = 4
     batch = spark.range(1000).select(
@@ -507,8 +464,6 @@ def test_live_log_sink_writes_one_chunk_file_per_task(spark, tmp_path):
         (F.col("id") + 1000).alias("size_bytes"),
         F.col("id").alias("sequence_number"),
     ).repartition(n_parts)
-    bucket = F.pmod(F.xxhash64("stream_id"), F.lit(N_PARTITION_BUCKETS))
-    assert batch.select(bucket).distinct().count() == N_PARTITION_BUCKETS
 
     chunks = str(tmp_path / "chunks")
     make_live_log_sink(str(tmp_path / "meta"), chunks)(batch, 0)
@@ -518,25 +473,35 @@ def test_live_log_sink_writes_one_chunk_file_per_task(spark, tmp_path):
     assert 1 <= len(files) <= n_parts
     out = spark.read.parquet(chunks)
     assert out.count() == 1000
-    assert out.filter(F.col("part_bucket") != bucket).count() == 0
+    assert out.columns == ["stream_id", "chunk_index", "chunk_path", "size_bytes"]
 
 
-def test_cow_live_sink_still_works(spark, tmp_path):
-    """The copy-on-write alternative sink keeps its semantics."""
-    batches = [[_event("s1", i) for i in range(3)]]
-    in_dir = _write_batch_files(spark, str(tmp_path), batches)
-    stream = parquet_stream(spark, in_dir, LIVE_CHUNK_SCHEMA, max_files_per_trigger=1)
+def test_live_log_sink_runs_three_jobs_per_batch(spark, tmp_path, count_jobs):
+    """The live sink's Spark work per micro-batch: the emptiness probe,
+    the metadata log append and the chunk-object append — 3 jobs for a
+    non-empty 250-row batch.  An empty batch runs no write: no job at
+    all when its plan is empty (as a trigger with no new rows hands
+    over), the probe alone when a file must be read to find no rows."""
+    from kafka_spark_streaming_pipeline_spark.streaming.sinks import make_live_log_sink
+    from kafka_spark_streaming_pipeline_spark.streaming.txn import AtomicParquetTable
+
     meta = str(tmp_path / "meta")
-    chunks = str(tmp_path / "chunks")
-    q = start_foreach_batch(
-        live_transform(stream),
-        make_live_sink(meta, chunks),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        query_name="live_cow",
-        available_now=False,
-    )
-    _drain(q)
-    assert spark.read.parquet(meta).count() == 3
+    sink = make_live_log_sink(meta, str(tmp_path / "chunks"))
+
+    def from_file(b, rows):
+        path = str(tmp_path / "in" / str(b))
+        spark.createDataFrame(rows, LIVE_CHUNK_SCHEMA).write.parquet(path)
+        return live_transform(spark.read.schema(LIVE_CHUNK_SCHEMA).parquet(path))
+
+    batches = {
+        b: from_file(b, [_event(f"s{i % 5}", i) for i in range(b * 250, b * 250 + 250)])
+        for b in (0, 1, 3)
+    }
+    batches[2] = batches[0].where(F.lit(False))
+    batches[4] = from_file(4, [])
+    jobs = {b: count_jobs(lambda: sink(df, b)) for b, df in sorted(batches.items())}
+    assert jobs == {0: 3, 1: 3, 2: 0, 3: 3, 4: 1}
+    assert AtomicParquetTable(meta).version(spark) == 3
 
 
 # --------------------------------------------------------------- metrics

@@ -23,12 +23,6 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-def _snapshot(spark, table):
-    df = table.read(spark)
-    assert df is not None
-    return sorted(tuple(r) for r in df.drop("__commit").collect())
-
-
 def _fail_publish(monkeypatch):
     """Simulate the writer dying between data write and commit rename."""
 
@@ -39,27 +33,38 @@ def _fail_publish(monkeypatch):
 
 
 def test_crash_before_commit_preserves_upsert_table(spark, tmp_path, monkeypatch):
-    table = AtomicParquetTable(str(tmp_path / "t"), partition_col="stream_id")
-    table.upsert(_df(spark, [("s1", 0, 1, "v1"), ("s2", 0, 1, "v1")]),
-                 keys=["stream_id", "chunk_index"], order_col="sequence_number")
-    before = _snapshot(spark, table)
+    """The keyed upsert is a log append: a writer dying after its data
+    files are written leaves the version and the latest view as they
+    were, and the retried batch lands."""
+    from kafka_spark_streaming_pipeline_spark.streaming.sinks import (
+        append_log_upsert,
+        latest_view,
+    )
+
+    path = str(tmp_path / "t")
+    table = AtomicParquetTable(path)
+
+    def view():
+        rows = latest_view(spark, path, ["stream_id", "chunk_index"], "sequence_number")
+        return {(r.stream_id, r.chunk_index): r.payload for r in rows.collect()}
+
+    append_log_upsert(_df(spark, [("s1", 0, 1, "v1"), ("s2", 0, 1, "v1")]), path, batch_id=0)
+    before = view()
     v_before = table.version(spark)
 
     _fail_publish(monkeypatch)
     with pytest.raises(RuntimeError, match="simulated"):
-        table.upsert(_df(spark, [("s1", 0, 2, "TORN")]),
-                     keys=["stream_id", "chunk_index"], order_col="sequence_number")
-    # the half-written commit is invisible: same version, same rows
+        append_log_upsert(_df(spark, [("s1", 0, 2, "TORN")]), path, batch_id=1)
+    # the half-written commit is invisible: same version, same view
     assert table.version(spark) == v_before
-    assert _snapshot(spark, table) == before
+    assert view() == before
 
     monkeypatch.undo()
     # retry after "restart" lands normally
-    table.upsert(_df(spark, [("s1", 0, 2, "v2")]),
-                 keys=["stream_id", "chunk_index"], order_col="sequence_number")
-    rows = {(r.stream_id, r.chunk_index): r.payload
-            for r in table.read(spark).collect()}
-    assert rows == {("s1", 0): "v2", ("s2", 0): "v1"}
+    append_log_upsert(_df(spark, [("s1", 0, 2, "v2")]), path, batch_id=1)
+    assert view() == {("s1", 0): "v2", ("s2", 0): "v1"}
+    # the crashed writer's files were never referenced
+    assert len(table.vacuum(spark)) == 1
 
 
 def test_crash_mid_compaction_preserves_log(spark, tmp_path, monkeypatch):
@@ -130,29 +135,6 @@ def test_concurrent_commit_one_winner(spark, tmp_path):
         txn._publish(fs, root, v, {"version": v, "partition_col": None, "entries": []})
 
 
-def test_upsert_repoints_only_touched_partitions(spark, tmp_path):
-    """Partition-granular COW: a batch touching s1 only must not
-    rewrite s2's files — s2's manifest entry keeps pointing at the
-    original commit dir."""
-    root = str(tmp_path / "t")
-    table = AtomicParquetTable(root, partition_col="stream_id")
-    table.upsert(_df(spark, [("s1", 0, 1, "v1"), ("s2", 0, 1, "v1")]),
-                 keys=["stream_id", "chunk_index"])
-    fs = txn._FS(spark, root)
-    _, m1 = table._resolve(fs)
-    [e1] = m1["entries"]
-    assert sorted(e1["partitions"]) == ["s1", "s2"]
-
-    table.upsert(_df(spark, [("s1", 1, 1, "v1")]), keys=["stream_id", "chunk_index"])
-    _, m2 = table._resolve(fs)
-    by_parts = {tuple(e["partitions"]): e["dir"] for e in m2["entries"]}
-    assert by_parts[("s2",)] == e1["dir"]  # untouched partition re-pointed, not rewritten
-    assert by_parts[("s1",)] != e1["dir"]
-    assert table.read(spark).count() == 3
-    # manifest-level pruning reads only the asked partition
-    assert table.read(spark, partition_values=["s2"]).count() == 1
-
-
 def test_vacuum_removes_only_unreferenced(spark, tmp_path):
     root = str(tmp_path / "t")
     table = AtomicParquetTable(root)
@@ -164,20 +146,6 @@ def test_vacuum_removes_only_unreferenced(spark, tmp_path):
     assert len(removed) == 2  # the two superseded append dirs
     assert table.read(spark).count() == 2
     assert fs_exists(spark, root)
-
-
-def test_upsert_fails_loudly_over_partition_cap(spark, tmp_path):
-    table = AtomicParquetTable(
-        str(tmp_path / "capped"), partition_col="part", max_touched_partitions=5
-    )
-    wide = spark.range(10).select(
-        F.col("id").alias("k"), F.col("id").cast("string").alias("part"),
-        F.lit("v").alias("val"),
-    )
-    with pytest.raises(ValueError, match="> 5 distinct"):
-        table.upsert(wide, keys=["k"])
-    narrow = wide.filter(F.col("k") < 5)
-    assert table.upsert(narrow, keys=["k"]) == 1  # under the cap: commits
 
 
 def test_time_travel_reads_and_vacuum_expires(spark, tmp_path):
