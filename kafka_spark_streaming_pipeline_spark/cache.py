@@ -104,6 +104,19 @@ def lineage_checkpoint(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
+def release_checkpoints(df: DataFrame) -> None:
+    """Force-unpersist the local checkpoints ``df``'s plan reads.  The
+    exception to ``lineage_checkpoint``'s leave-it-to-GC rule, for an
+    owner that runs no plan referencing them again — a sink whose batch
+    has committed — so the blocks go when its call ends rather than at
+    the next driver GC."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD" and leaf.rdd().isLocallyCheckpointed():
+            leaf.rdd().unpersist(False)
+
+
 def session_gc(spark) -> None:
     """Reclaim orphaned ``lineage_checkpoint`` blocks in a long-lived
     session (ADVICE r9): a localCheckpoint's MEMORY_AND_DISK blocks

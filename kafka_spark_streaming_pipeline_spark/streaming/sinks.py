@@ -29,10 +29,11 @@ sink model) once:
 - write: a non-empty micro-batch appends its PARTIAL stamped with the
   batch id as ``__commit``, as one crash-atomic commit; an empty batch
   publishes nothing.  The log is never read on the write path.
-- read: drop replays behind an online compaction's watermark,
-  deduplicate on ``(__commit, keys)`` (a retried foreachBatch
-  recomputes the identical partial, so one copy per commit is
-  exactly-once), then ``merge`` the partials.
+- read: drop replays behind the fold watermark the manifest records
+  (a literal filter, none when no online compaction ran), deduplicate
+  on ``(__commit, keys)`` (a retried foreachBatch recomputes the
+  identical partial, so one copy per commit is exactly-once), then
+  ``merge`` the partials.
 - compact: fold the log to its merged view — itself a valid partial,
   so live appends keep composing — under a pinned-snapshot CAS commit.
 
@@ -40,10 +41,11 @@ The public ``make_*`` / ``*_view`` / ``compact_*`` functions are thin
 bindings of those entries; their docstrings say only why the log is
 mergeable and what the merged view guarantees.
 
-Every log view here reads its log through ``_read_log``: one parquet
-scan over all committed files under the schema the manifest records
-(see ``txn``), so a view's read cost follows the rows in the log, not
-the number of commits behind them.
+Every log here, views and sinks alike, is read through ``_read_log``:
+one parquet scan over all committed files under the schema the
+manifest records, filtered by the fold watermark from the same
+manifest read (see ``txn``), so a view's read cost follows the rows in
+the log, not the number of commits behind them.
 """
 
 
@@ -88,80 +90,34 @@ def append_log_upsert(batch_df: DataFrame, table_path: str, batch_id: int) -> No
     )
 
 
-def _replay_watermark(log: DataFrame) -> DataFrame:
-    """One row, one ``__wm`` column: the highest batch id an online
-    compaction folded into ``log`` (-1 when none was)."""
-    return log.agg(
-        F.coalesce(
-            F.max(F.when(F.col("__commit") < -1, -F.col("__commit") - 2)),
-            F.lit(-1),
-        ).alias("__wm")
-    )
-
-
-def _drop_replays_behind_watermark(log: DataFrame) -> DataFrame:
-    """Replay guard for logs compacted ONLINE (``quiesced=False``):
-    folded rows encode the highest batch id they absorbed as
-    ``__commit = -(wm + 2)``; a batch the stream replays after a crash
-    re-appends under its ORIGINAL id <= wm, and since its first copy
-    was folded away, per-commit dedup alone can no longer drop it.
-    This filter can: keep folded rows (negative) and live rows with
-    ``__commit > wm`` only.  Quiesced compaction stamps -1, which
-    decodes to wm = -1 — every live row passes, today's semantics.
-    The watermark is derived IN-PLAN (tiny aggregate, broadcast back);
-    no driver-side collect."""
-    return (
-        log.crossJoin(F.broadcast(_replay_watermark(log)))
-        .filter((F.col("__commit") < 0) | (F.col("__commit") > F.col("__wm")))
-        .drop("__wm")
-    )
-
-
-def _stamp_folded(resolved: DataFrame, log: DataFrame, quiesced: bool) -> DataFrame:
-    """Attach the ``__commit`` stamp compaction puts on folded rows.
-
-    Quiesced (default): -1 — folded history can never collide with a
-    stream restarted on a FRESH checkpoint (ids restart at 0), which
-    is the supported restart path after an offline compaction.
-
-    Online (``quiesced=False``): -(wm + 2) where wm is the highest
-    batch id being folded (carried forward across successive online
-    folds) — safe to run UNDER a live stream, because a replayed
-    uncheckpointed batch (id <= wm) is dropped by
-    ``_drop_replays_behind_watermark`` while future batches (id > wm)
-    merge normally.  Before restarting on a fresh checkpoint, run one
-    quiesced compaction to reset the stamp to -1.  The watermark is a
-    tiny in-plan aggregate broadcast onto the folded rows."""
-    if quiesced:
-        return resolved.withColumn("__commit", F.lit(-1))
-    wm = log.agg(
-        F.coalesce(
-            F.max(
-                F.when(F.col("__commit") >= 0, F.col("__commit")).otherwise(
-                    -F.col("__commit") - 2
-                )
-            ),
-            F.lit(-1),
-        ).alias("__fold_wm")
-    )
-    return (
-        resolved.crossJoin(F.broadcast(wm))
-        .withColumn("__commit", -(F.col("__fold_wm") + F.lit(2)))
-        .drop("__fold_wm")
-    )
-
-
-def _read_log(spark, table_path: str) -> DataFrame:
-    log = AtomicParquetTable(table_path).read(spark)
+def _read_log(
+    spark, table_path: str, empty: str | None = None
+) -> tuple[int, DataFrame, int]:
+    """The one reader of every log here: ``(version, rows, fold
+    watermark)`` of its latest commit (``txn``'s snapshot).  A batch the
+    stream replays after an online compaction folded its first copy
+    re-appends under its ORIGINAL id <= the watermark, where per-commit
+    dedup can no longer drop it; this literal filter does (none at -1).
+    With nothing committed, ``empty`` (a DDL schema) gives an empty log;
+    without it the read raises FileNotFoundError."""
+    version, log, wm = AtomicParquetTable(table_path).snapshot(spark)
     if log is None:
-        raise FileNotFoundError(f"no committed version at {table_path}")
-    return log
+        if empty is None:
+            raise FileNotFoundError(f"no committed version at {table_path}")
+        log = spark.createDataFrame([], empty)
+    if wm >= 0:
+        log = log.filter((F.col("__commit") < 0) | (F.col("__commit") > wm))
+    return version, log, wm
 
 
 def _compact(spark, table_path: str, fold_of, quiesced: bool) -> None:
-    """Shared compaction driver: resolve ONE version, read exactly that
-    snapshot, build the fold AND the watermark from that single
-    DataFrame, and publish with compare-and-swap at version+1.
+    """Shared compaction driver: resolve ONE version, fold exactly that
+    snapshot with its rows stamped ``__commit = -1``, and publish with
+    compare-and-swap at version+1.  The new fold watermark is -1 when
+    ``quiesced`` (a stream restarted on a FRESH checkpoint replays from
+    id 0); online, the larger of the previous one and the highest live
+    batch id folded, so ``_read_log`` drops a replayed uncheckpointed
+    batch while later batches merge.
 
     The CAS is what makes online compaction sound: without it, a batch
     the live stream commits between the fold's read and the overwrite
@@ -171,20 +127,20 @@ def _compact(spark, table_path: str, fold_of, quiesced: bool) -> None:
     replay.  With the pinned snapshot neither interleaving exists, and
     a concurrent commit surfaces as txn.ConcurrentWriteError with the
     table untouched — the caller simply re-runs compaction."""
+    version, log, wm = _read_log(spark, table_path)
+    if quiesced:
+        wm = -1
+    else:
+        wm = max(wm, log.agg(F.coalesce(F.max("__commit"), F.lit(-1))).first()[0])
     table = AtomicParquetTable(table_path)
-    version = table.version(spark)
-    if version == 0:
-        raise FileNotFoundError(f"no committed version at {table_path}")
-    log = table.read(spark, version=version)
-    folded = _stamp_folded(fold_of(log), log, quiesced)
-    table.overwrite(folded, expect_version=version)
+    folded = fold_of(log).withColumn("__commit", F.lit(-1))
+    table.overwrite(folded, expect_version=version, fold_watermark=wm)
     table.vacuum(spark)
 
 
 def _latest_view_of(
     log: DataFrame, keys: list[str], order_col: str | None = None
 ) -> DataFrame:
-    log = _drop_replays_behind_watermark(log)
     order = [F.col("__commit").desc()] + (
         [F.col(order_col).desc()] if order_col else []
     )
@@ -202,9 +158,8 @@ def latest_view(
     """Last-writer-wins view over the append log: one row per key,
     newest commit (then ``order_col``) winning — the read-side half of
     merge-on-read.  Replays of batches folded by an online compaction
-    are dropped via the in-band watermark (see
-    ``_drop_replays_behind_watermark``)."""
-    return _latest_view_of(_read_log(spark, table_path), keys, order_col)
+    are dropped by the manifest's fold watermark (see ``_read_log``)."""
+    return _latest_view_of(_read_log(spark, table_path)[1], keys, order_col)
 
 
 def compact_log(
@@ -232,10 +187,10 @@ def compact_log(
     folded it, the restarted stream re-appends that batch under its
     original id and per-commit dedup cannot drop it (the original
     rows were folded into -1).  ``quiesced=False`` lifts that
-    requirement for a LIVE stream: the fold stamps the in-band
-    watermark instead (see ``_stamp_folded``) and the views drop such
-    replays.  Fold, watermark, and publish all pin ONE snapshot with a
-    CAS commit (see ``_compact``)."""
+    requirement for a LIVE stream: the fold records the highest batch
+    id it absorbed as the manifest's fold watermark, and every read
+    drops replays behind it.  Fold, watermark, and publish all pin ONE
+    snapshot with a CAS commit (see ``_compact``)."""
     _compact(
         spark,
         table_path,
@@ -314,13 +269,11 @@ class MergeableLog:
 
     def view_of(self, log: DataFrame, **params) -> DataFrame:
         keys = self.keys(log.columns) if callable(self.keys) else self.keys
-        deduped = _drop_replays_behind_watermark(log).dropDuplicates(
-            ["__commit", *keys]
-        )
+        deduped = log.dropDuplicates(["__commit", *keys])
         return self.merge(deduped, keys, **params)
 
     def view(self, spark, path: str, **params) -> DataFrame:
-        return self.view_of(_read_log(spark, path), **params)
+        return self.view_of(_read_log(spark, path)[1], **params)
 
     def compact(self, spark, path: str, quiesced: bool = True, **params) -> None:
         """Fold the log to its merged view; atomic overwrite, a crash
@@ -333,8 +286,8 @@ class MergeableLog:
         fully-checkpointed log — a folded but uncheckpointed batch loses
         its commit identity and its replay would double-count.
         ``quiesced=False`` is safe UNDER a live stream instead: the fold
-        stamps the in-band replay watermark (``_stamp_folded``) and every
-        view drops replays behind it.  Run one quiesced fold before
+        records the manifest's fold watermark and every read drops
+        replays behind it (``_read_log``).  Run one quiesced fold before
         restarting on a fresh checkpoint."""
         _compact(spark, path, lambda log: self.view_of(log, **params), quiesced)
 
@@ -1082,16 +1035,10 @@ def make_substring_clean_sink(
     @_nonempty
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        try:
-            log = _read_log(spark, history_path)
-        except FileNotFoundError:
-            hist = spark.createDataFrame([], "h bigint")
-        else:
-            if batch_id <= _replay_watermark(log).first()["__wm"]:
-                return
-            hist = _LOGS["window_hash"].view_of(
-                log.filter(F.col("__commit") != batch_id)
-            )
+        _, log, wm = _read_log(spark, history_path, "h bigint, __commit bigint")
+        if batch_id <= wm:
+            return
+        hist = _LOGS["window_hash"].view_of(log.filter(F.col("__commit") != batch_id))
         pos = cache.mark()
         try:
             cleaned = incremental_substring_clean(
@@ -1201,9 +1148,9 @@ def make_quality_gate_sink(
         spark = batch_df.sparkSession
         batch = batch_df.withColumn(text_col, F.coalesce(F.col(text_col), F.lit("")))
         scored = score_with_bigram_lm(batch, lm_path, id_col, text_col)
-        history = AtomicParquetTable(fingerprint_history_path).read(spark)
-        if history is None:
-            history = spark.createDataFrame([], "fingerprint string, __commit long")
+        _, history, _ = _read_log(
+            spark, fingerprint_history_path, "fingerprint string, __commit long"
+        )
         deduped = incremental_dedup(
             batch,
             history.filter(F.col("__commit") != batch_id).select("fingerprint"),
@@ -1266,7 +1213,7 @@ def compact_gate_history(spark, fingerprint_history_path: str) -> None:
 
 def gate_view(spark, path: str, id_col: str = "doc_id") -> DataFrame:
     """Replay-deduplicated view of an accept/reject log."""
-    return _read_log(spark, path).dropDuplicates(["__commit", id_col])
+    return _read_log(spark, path)[1].dropDuplicates(["__commit", id_col])
 
 
 # ------------------------------------------------- streaming curation
@@ -1306,7 +1253,10 @@ def make_curation_sink(
     (sum-mergeable counters — ``curation_yield_view`` folds it to the
     cumulative funnel).  Replay contract: both history reads exclude
     THIS batch's own commit id and every log dedups per commit, so a
-    replayed batch re-derives byte-identical decisions (test-pinned)."""
+    replayed batch re-derives byte-identical decisions (test-pinned).
+    Every frame the call persists, and the near-dup step's signature
+    checkpoint, is released when the call ends."""
+    from .. import cache
     from ..operators.curation import (
         decontaminate,
         gopher_quality_rules,
@@ -1325,16 +1275,15 @@ def make_curation_sink(
         q = gopher_quality_rules(batch, id_col, text_col).select(id_col, "keep")
         staged = batch.join(q, id_col).persist()
         held = [staged]
+        pairs = None
         try:
             quality_pass = staged.filter("keep").select(id_col, text_col)
             n_q = quality_pass.count()
 
             # tier 2: exact, vs history (excluding own commit) + in-batch
-            fp_log = AtomicParquetTable(f"{path}/fp").read(spark)
-            if fp_log is None:
-                fp_log = spark.createDataFrame(
-                    [], "fingerprint string, __commit long"
-                )
+            _, fp_log, _ = _read_log(
+                spark, f"{path}/fp", "fingerprint string, __commit long"
+            )
             ex = incremental_dedup(
                 quality_pass,
                 fp_log.filter(F.col("__commit") != batch_id).select("fingerprint"),
@@ -1351,11 +1300,9 @@ def make_curation_sink(
 
             # tier 3: near-dup, vs signature history (excluding own
             # commit) + in-batch pairs
-            sig_log = AtomicParquetTable(f"{path}/sig").read(spark)
-            if sig_log is None:
-                sig_log = spark.createDataFrame(
-                    [], f"{id_col} long, sig array<bigint>, __commit long"
-                )
+            _, sig_log, _ = _read_log(
+                spark, f"{path}/sig", f"{id_col} long, sig array<bigint>, __commit long"
+            )
             from ..operators.dedup import incremental_neardup
 
             hist_sigs = _LOGS["signature"].keyed(id_col).view_of(
@@ -1432,8 +1379,12 @@ def make_curation_sink(
         finally:
             for frame in held:
                 frame.unpersist()
+            if pairs is not None:
+                cache.release_checkpoints(pairs)
 
     return sink
+
+
 def curation_yield_view(spark, path: str) -> DataFrame:
     """Cumulative per-stage funnel from the yield log — the
     continuously-maintained counterpart of x94's one-shot funnel rows."""

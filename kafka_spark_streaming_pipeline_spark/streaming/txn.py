@@ -31,6 +31,12 @@ on nothing but the Hadoop ``FileSystem`` API that ships with Spark:
   column existed read that column as NULL.  A manifest without the
   field (written before it existed) infers the schema once per read,
   from one footer per entry; its next append records it.
+- The manifest carries the FOLD WATERMARK, the highest batch id an
+  online compaction folded away (-1 for none): ``append`` carries it
+  forward, ``overwrite`` records its caller's, and ``snapshot`` returns
+  it from the manifest read that resolves the rows.  A manifest without
+  the field encoded it in its rows (``__commit = -(wm + 2)``); it is
+  decoded from them (one job) until the next commit records it.
 
 Every table has one shape, the append log: a keyed upsert is an
 append of commit-stamped rows, resolved at read time (``sinks``'
@@ -212,6 +218,13 @@ class AtomicParquetTable:
 
     # --------------------------------------------------------------- read
 
+    def snapshot(self, spark: SparkSession) -> tuple[int, DataFrame | None, int]:
+        """``(version, read's rows, fold watermark)`` of the latest commit,
+        from ONE manifest read."""
+        version, manifest = self._resolve(_FS(spark, self.root))
+        rows = self._scan(spark, manifest)
+        return version, rows, self._fold_watermark(spark, manifest)
+
     def read(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame | None:
@@ -237,12 +250,26 @@ class AtomicParquetTable:
                     "(never committed, or vacuumed)"
                 )
             manifest = json.loads(fs.read_text(commit))
+        return self._scan(spark, manifest)
+
+    def _scan(self, spark: SparkSession, manifest: dict | None) -> DataFrame | None:
         if manifest is None:
             return None
         dirs = [f"{self.root}/{e['dir']}" for e in manifest["entries"]]
         if not dirs:
             return None
         return spark.read.schema(self._schema(spark, manifest)).parquet(*dirs)
+
+    def _fold_watermark(self, spark: SparkSession, manifest: dict | None) -> int:
+        if manifest is not None and "fold_watermark" in manifest:
+            return manifest["fold_watermark"]
+        # written before manifests carried it: an online fold stamped
+        # its rows -(wm + 2), a quiesced one -1
+        rows = self._scan(spark, manifest)
+        if rows is None or "__commit" not in rows.columns:
+            return -1
+        c = F.col("__commit")
+        return rows.agg(F.coalesce(F.max(F.when(c < -1, -c - 2)), F.lit(-1))).first()[0]
 
     def _schema(self, spark: SparkSession, manifest: dict) -> StructType | None:
         """The schema of ``manifest``'s entries (None if it has none).  A
@@ -268,18 +295,23 @@ class AtomicParquetTable:
         rel = f"{_DATA}/{uuid.uuid4().hex[:12]}"
         df.write.parquet(f"{self.root}/{rel}")
         entries = (manifest["entries"] if manifest else []) + [{"dir": rel}]
+        wm = self._fold_watermark(spark, manifest)
         _publish(
             fs,
             self.root,
             version + 1,
-            {"version": version + 1, "schema": schema.jsonValue(), "entries": entries},
+            {"version": version + 1, "schema": schema.jsonValue(),
+             "fold_watermark": wm, "entries": entries},
         )
         return version + 1
 
-    def overwrite(self, df: DataFrame, expect_version: int | None = None) -> int:
+    def overwrite(
+        self, df: DataFrame, expect_version: int | None = None, fold_watermark: int = -1
+    ) -> int:
         """Atomically replace the whole table content (compaction /
-        full rewrite).  Old dirs stay until ``vacuum`` — a reader that
-        resolved the previous version keeps a consistent snapshot.
+        full rewrite) and record ``fold_watermark`` in its manifest.
+        Old dirs stay until ``vacuum`` — a reader that resolved the
+        previous version keeps a consistent snapshot.
 
         ``expect_version`` makes the replace a compare-and-swap: the
         new manifest publishes at ``expect_version + 1``, and if any
@@ -303,6 +335,7 @@ class AtomicParquetTable:
             {
                 "version": version + 1,
                 "schema": _nullable(df.schema).jsonValue(),
+                "fold_watermark": fold_watermark,
                 "entries": [{"dir": rel}],
             },
         )

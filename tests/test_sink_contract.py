@@ -260,3 +260,49 @@ def test_curation_sink_releases_its_frames_when_a_commit_fails(
         sink(_docs(spark, range(6)), 0)
     assert persisted
     assert [df.storageLevel for df in persisted] == [StorageLevel.NONE] * len(persisted)
+
+
+def test_every_table_read_goes_through_the_one_log_reader():
+    """``streaming/sinks.py`` reads a committed table in one place,
+    ``_read_log``, which applies the manifest's fold watermark: views,
+    compaction and the sinks that read their own history (the gate's
+    fingerprints, curation's ``fp`` and ``sig``) all go through it."""
+    import ast
+    import inspect
+
+    callers = set()
+    for top in ast.parse(inspect.getsource(S)).body:
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("read", "snapshot")
+            ):
+                callers.add(top.name)
+    assert callers == {"_read_log"}
+
+
+def test_substring_clean_sink_reads_its_fold_watermark_from_the_manifest(
+    spark, tmp_path, count_jobs
+):
+    """With a history committed, a batch runs no job to find its skip
+    watermark: it comes from the manifest.  Aggregating it out of the
+    history's rows made batches 1 and 2 run 21 jobs each."""
+    sink = S.make_substring_clean_sink(
+        str(tmp_path / "hist"), str(tmp_path / "clean"), k=4
+    )
+    jobs = [
+        count_jobs(lambda b=b: sink(_docs(spark, range(b * 6, b * 6 + 6)), b))
+        for b in range(3)
+    ]
+    assert jobs == [16, 15, 15]
+
+
+def test_curation_sink_releases_its_signature_checkpoint(spark, tmp_path):
+    """The near-dup step's eager signature checkpoint is released when
+    the call ends: no RDD persisted during a curation batch outlives it."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    sink = _curation_sink(spark, str(tmp_path / "cur"))
+    before = set(rdds().keySet())
+    sink(_docs(spark, range(6)), 0)
+    assert set(rdds().keySet()) - before == set()

@@ -504,6 +504,32 @@ def test_live_log_sink_runs_three_jobs_per_batch(spark, tmp_path, count_jobs):
     assert AtomicParquetTable(meta).version(spark) == 3
 
 
+def test_log_views_read_the_fold_watermark_from_the_manifest(spark, tmp_path, count_jobs):
+    """A log view finds its fold watermark in the manifest, so reading
+    one runs only the view's own jobs: over a 3-commit log,
+    ``latest_view(...).collect()`` runs 2 and ``rollup_view(...).collect()``
+    3, two fewer each than when every read aggregated the watermark out
+    of the data."""
+    from kafka_spark_streaming_pipeline_spark.streaming.sinks import (
+        append_log_upsert,
+        latest_view,
+        make_rollup_sink,
+        rollup_view,
+    )
+
+    meta = str(tmp_path / "meta")
+    rollup = str(tmp_path / "rollup")
+    sink = make_rollup_sink(rollup, ["stream_id"])
+    for b in range(3):
+        events = [_event(f"s{b}", i) for i in range(b * 3, b * 3 + 3)]
+        df = spark.createDataFrame(events, LIVE_CHUNK_SCHEMA)
+        append_log_upsert(live_transform(df), meta, b)
+        sink(df.withColumn("event_ts", F.to_timestamp("timestamp")), b)
+    keys = ["stream_id", "chunk_index"]
+    assert count_jobs(lambda: latest_view(spark, meta, keys, "sequence_number").collect()) == 2
+    assert count_jobs(lambda: rollup_view(spark, rollup, ["stream_id"]).collect()) == 3
+
+
 # --------------------------------------------------------------- metrics
 
 
@@ -1101,7 +1127,7 @@ def test_orc_stream_source_end_to_end(spark, tmp_path):
 def test_online_compaction_drops_replayed_uncheckpointed_batch(spark, tmp_path):
     """compact_rollup(quiesced=False) under a live stream: a batch that
     was appended but NOT yet checkpointed gets folded; the restarted
-    stream replays it under its original id.  The in-band watermark
+    stream replays it under its original id.  The fold watermark
     must drop that replay (no double count) while still merging truly
     new batches — the exact scenario the quiesced-only contract used
     to forbid."""

@@ -284,3 +284,85 @@ def test_manifest_without_schema_reads_as_before(spark, tmp_path):
     assert sorted(tuple(r) for r in table.read(spark).collect()) == [
         (1, "a", None), (2, "b", 7.5), (3, "c", None)
     ]
+
+
+def test_online_live_log_compaction_drops_replay(spark, tmp_path):
+    """compact_log(quiesced=False) under a live stream: batch 1 is
+    folded before its checkpoint lands, and the restarted stream
+    replays it under its original id.  The replay must not bring its
+    status back over batch 2's, and a genuinely new batch still wins."""
+    from kafka_spark_streaming_pipeline_spark.streaming.sinks import (
+        append_log_upsert,
+        compact_log,
+        latest_view,
+    )
+
+    path = str(tmp_path / "log")
+    keys = ["stream_id", "chunk_index"]
+
+    def status():
+        return {(r.stream_id, r.chunk_index): r.payload
+                for r in latest_view(spark, path, keys, "sequence_number").collect()}
+
+    append_log_upsert(_df(spark, [("s1", 0, 1, "A")]), path, batch_id=1)
+    append_log_upsert(_df(spark, [("s1", 0, 1, "B")]), path, batch_id=2)
+    compact_log(spark, path, keys, "sequence_number", quiesced=False)
+    append_log_upsert(_df(spark, [("s1", 0, 1, "A")]), path, batch_id=1)
+    assert status() == {("s1", 0): "B"}
+    append_log_upsert(_df(spark, [("s1", 0, 1, "C")]), path, batch_id=3)
+    assert status() == {("s1", 0): "C"}
+
+
+def _legacy_table(spark, root, schema, entries):
+    """A table in the manifest format without ``fold_watermark``: one
+    data dir per entry of ``entries`` (lists of rows), one manifest."""
+    fs = txn._FS(spark, root)
+    for i, rows in enumerate(entries):
+        spark.createDataFrame(rows, schema).write.parquet(f"{root}/data/d{i}")
+    txn._publish(fs, root, 1, {
+        "version": 1,
+        "schema": txn._nullable(spark.createDataFrame([], schema).schema).jsonValue(),
+        "entries": [{"dir": f"data/d{i}"} for i in range(len(entries))],
+    })
+    return AtomicParquetTable(root)
+
+
+def test_manifest_without_fold_watermark_reads_as_before(spark, tmp_path):
+    """A manifest without ``fold_watermark`` whose rows an online fold
+    stamped ``__commit = -(wm + 2)`` (wm = 2), then a replay of batch 1
+    and a new batch 3: the replay is dropped and the new batch merged,
+    in the live log's view and a mergeable log's view alike.  The
+    table's next commit records the decoded watermark."""
+    from kafka_spark_streaming_pipeline_spark.streaming import sinks as S
+
+    live_schema = SCHEMA + ", __commit long"
+    live = _legacy_table(spark, str(tmp_path / "live"), live_schema, [
+        [("s1", 0, 1, "B", -4), ("s2", 0, 1, "A", -4)],
+        [("s1", 0, 1, "A", 1)],
+        [("s2", 0, 1, "C", 3)],
+    ])
+    keys = ["stream_id", "chunk_index"]
+
+    def status():
+        return {(r.stream_id, r.chunk_index): r.payload
+                for r in S.latest_view(spark, live.root, keys, "sequence_number").collect()}
+
+    assert status() == {("s1", 0): "B", ("s2", 0): "C"}
+
+    cms = _legacy_table(spark, str(tmp_path / "cms"),
+                        "depth int, slot int, cnt long, __commit long", [
+        [(0, 1, 5, -4)],
+        [(0, 1, 3, 1)],
+        [(0, 1, 2, 3), (0, 2, 7, 3)],
+    ])
+
+    def counts():
+        return {(r.depth, r.slot): r.cnt for r in S._LOGS["cms"].view(spark, cms.root).collect()}
+
+    assert counts() == {(0, 1): 7, (0, 2): 7}
+    assert live.snapshot(spark)[2] == 2
+
+    S.append_log_upsert(_df(spark, [("s1", 0, 1, "A")]), live.root, batch_id=1)
+    _, manifest = live._resolve(txn._FS(spark, live.root))
+    assert manifest["fold_watermark"] == 2
+    assert status() == {("s1", 0): "B", ("s2", 0): "C"}
