@@ -12,6 +12,10 @@ Two tiers:
 
 Dot products fold left-to-right in both Spark and DuckDB, so results
 are bit-comparable and the oracle can verify exact scores (rounded).
+Every vector-index trainer (k-means and IVF cells, PQ codebooks) runs
+one determinism kit — hash60 seeding, exact-BIGINT centroid sums and a
+4-dp rounded argmax with id tiebreaks — so each index build and search
+replays exactly in a SQL oracle.
 """
 
 from __future__ import annotations
@@ -19,14 +23,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from .text import hash60, let_expr as _let  # _let: single-binding 'let' (shared)
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
-
-
-from .text import let_expr as _let  # single-binding 'let' (shared)
 
 
 def _unit_arr(vv: Column) -> Column:
@@ -364,9 +367,7 @@ def lsh_cosine_topk_multi(
 
 # ------------------------------------------------------------------ IVF
 
-def nearest_cells(
-    df: DataFrame, cents: DataFrame, n: int, out: str, rounded: bool = False
-) -> DataFrame:
+def nearest_cells(df: DataFrame, cents: DataFrame, n: int, out: str) -> DataFrame:
     """Attach each vector's ``n`` nearest cells WITHOUT shuffling
     ``df``: the centroid set (nlist x dim — tiny by construction) is
     folded into a one-row array, broadcast-nested-loop attached, and
@@ -376,22 +377,18 @@ def nearest_cells(
     the corpus just to pick the max of nlist scores.  Expects the
     vector in column ``v`` (array<double>).
 
-    ``rounded=True`` ranks on the 4-dp rounded similarity with the
-    cell id as tiebreak — a cross-engine-deterministic argmax (the
-    struct sort orders by (neg_sim, cell)), which is what lets the
-    portable IVF carry a full SQL value oracle."""
+    Cells rank on the 4-dp rounded similarity with the cell id as
+    tiebreak (the struct sort orders by (neg_sim, cell)): a
+    cross-engine-deterministic argmax."""
     cent_arr = cents.agg(
         F.array_sort(F.collect_list(F.struct("cell", "centroid"))).alias("__cents")
     )
-
-    def _neg_sim(s):
-        sim = cosine(F.col("v"), s["centroid"])
-        return -F.round(sim + F.lit(1e-9), 4) if rounded else -sim
-
     sims = F.transform(
         F.col("__cents"),
         lambda s: F.struct(
-            _neg_sim(s).alias("neg_sim"),
+            (-F.round(cosine(F.col("v"), s["centroid"]) + F.lit(1e-9), 4)).alias(
+                "neg_sim"
+            ),
             s["cell"].alias("cell"),
         ),
     )
@@ -410,26 +407,6 @@ def nearest_cells(
         df.crossJoin(F.broadcast(cent_arr))
         .withColumn(out, F.explode(F.transform(top, lambda s: s["cell"])))
         .drop("__cents")
-    )
-
-
-def _centroids(assigned: DataFrame) -> DataFrame:
-    """Per-cell mean vector via posexplode + grouped avg (one shuffle
-    keyed on (cell, dim) — the same primitive as embedding centroids)."""
-    by_dim = assigned.select(
-        "cell", F.posexplode("v").alias("dim", "val")
-    ).groupBy("cell", "dim").agg(F.avg("val").alias("mean"), F.count("*").alias("n"))
-    return (
-        by_dim.groupBy("cell")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("dim", "mean"))).alias("dm"),
-            F.first("n").alias("n_members"),
-        )
-        .select(
-            "cell",
-            F.transform("dm", lambda s: s["mean"]).alias("centroid"),
-            "n_members",
-        )
     )
 
 
@@ -464,6 +441,71 @@ def _centroids_portable(assigned: DataFrame) -> DataFrame:
     )
 
 
+def _train_cells(
+    c: DataFrame, n: int, iterations: int, salt: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The one cell trainer behind k-means and every IVF tier: seed
+    each vector of ``c`` (columns ``id_col``, ``v``) into one of ``n``
+    cells by hash60 of its id, take exact centroids
+    (``_centroids_portable``), then run ``iterations`` Lloyd steps —
+    reassign through ``nearest_cells``, recompute the centroids.
+
+    Returns ``(assigned, cents)``: ``c`` plus the ``cell`` the final
+    centroids were averaged over, and those (cell, centroid) rows.
+    Scale shape per step: the shuffle-free broadcast argmax plus one
+    (cell, dim) aggregate of n x dim rows.  The plan grows by one step
+    per iteration and is not checkpointed: a local checkpoint per
+    centroid set ran more jobs (x15: 14, not 12), since its plan runs
+    apart from the consumer's and shares none of its broadcasts or
+    exchanges."""
+    assigned = c.withColumn(
+        "cell", F.pmod(hash60(F.col(id_col).cast("string"), salt=salt), F.lit(n))
+    )
+    cents = _centroids_portable(assigned).select("cell", "centroid")
+    for _ in range(iterations):
+        assigned = nearest_cells(c, cents, 1, "cell")
+        cents = _centroids_portable(assigned).select("cell", "centroid")
+    return assigned, cents
+
+
+def ivf_search_postings(
+    queries: DataFrame,
+    cents: DataFrame,
+    postings: DataFrame,
+    nprobe: int = 4,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Score queries against an ALREADY-ASSIGNED postings frame
+    (cell, neighbor_id, v), one row per neighbor_id — the one IVF
+    search, shared by ivf_topk (the postings its training assigned),
+    the persisted index (ivf_index_search reads postings from its
+    partitioned layout) and the STREAMING index
+    (streaming/sinks.ivf_stream_view merges them from the append log,
+    newest posting per vector).  Probe side broadcast; a query scores
+    only its ``nprobe`` cells' postings."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("v")
+    )
+    probed = (
+        nearest_cells(q, cents, nprobe, "probe_cell")
+        .withColumnRenamed("v", "q_vec")
+        .withColumn("q_n", F.sqrt(_dot(F.col("q_vec"), F.col("q_vec"))))
+    )
+    cands = postings.withColumnRenamed("v", "c_vec").withColumn(
+        "c_n", F.sqrt(_dot(F.col("c_vec"), F.col("c_vec")))
+    ).join(F.broadcast(probed), F.col("cell") == F.col("probe_cell"))
+    sim = _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_n") * F.col("c_n"))
+    scored = cands.select(
+        "query_id",
+        "neighbor_id",
+        F.round(sim + F.lit(1e-9), 4).alias("cosine_sim"),
+    )
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -472,68 +514,22 @@ def ivf_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
 ) -> DataFrame:
     """IVF approximate top-k: partition the corpus into ``nlist`` cells
-    (deterministic hash init + ONE Lloyd reassignment step, both pure
-    DataFrame ops), then score each query only against its ``nprobe``
-    nearest cells.
+    (``_train_cells``: hash seed + ONE Lloyd reassignment step, both
+    pure DataFrame ops), then score each query only against its
+    ``nprobe`` nearest cells (``ivf_search_postings``).
 
     Scale shape: centroids are tiny (nlist x dim) and broadcast
-    everywhere; the corpus is scanned twice (assign, search) and
-    shuffled once on cell id; a query touches nprobe/nlist of the
+    everywhere; the corpus is scanned twice (assign, search) and never
+    shuffled on its own key; a query touches nprobe/nlist of the
     corpus.  Versus SRP-LSH (lsh_cosine_topk) this adapts to the data
-    distribution instead of using fixed hyperplanes.
-
-    ``portable=True`` makes every discrete decision cross-engine
-    deterministic — md5-hash60 seeding (not xxhash64), exact-BIGINT
-    centroid sums (not float avg), 4-dp-rounded cell argmax with cell
-    id tiebreaks — so the whole index build + search pipeline can be
-    value-checked against a SQL oracle (x15).  Identical plan shape
-    and cost; the only semantic delta is 1e-3 centroid quantization."""
+    distribution instead of using fixed hyperplanes."""
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("v")
     )
-    # init: deterministic hash cells -> means; one Lloyd step: reassign
-    # each vector to its nearest centroid, recompute means
-    if portable:
-        from .text import hash60
-
-        seed_cell = F.pmod(
-            hash60(F.col("neighbor_id").cast("string"), salt="ivf|"), F.lit(nlist)
-        )
-        make_cents = _centroids_portable
-    else:
-        seed_cell = F.pmod(F.xxhash64("neighbor_id"), F.lit(nlist))
-        make_cents = _centroids
-    seeded = c.withColumn("cell", seed_cell)
-    cents0 = make_cents(seeded).select("cell", "centroid")
-
-    reassigned = nearest_cells(c, cents0, 1, "cell", rounded=portable)
-    cents = make_cents(reassigned).select("cell", "centroid")
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    probed = (
-        nearest_cells(q, cents, nprobe, "probe_cell", rounded=portable)
-        .withColumnRenamed("v", "q_vec")
-        .withColumn("q_n", F.sqrt(_dot(F.col("q_vec"), F.col("q_vec"))))
-    )
-    candidates = probed.join(
-        reassigned.withColumnRenamed("cell", "probe_cell")
-        .withColumnRenamed("v", "c_vec")
-        .withColumn("c_n", F.sqrt(_dot(F.col("c_vec"), F.col("c_vec")))),
-        "probe_cell",
-    )
-    sim = _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_n") * F.col("c_n"))
-    scored = candidates.select(
-        "query_id",
-        "neighbor_id",
-        F.round(sim + F.lit(1e-9), 4).alias("cosine_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    postings, cents = _train_cells(c, nlist, 1, "ivf|", "neighbor_id")
+    return ivf_search_postings(queries, cents, postings, nprobe, k, id_col, vec_col)
 
 
 # ------------------------------------------------------------ quantization
@@ -592,43 +588,22 @@ def kmeans_assign(
     iterations: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    portable: bool = False,
 ) -> DataFrame:
     """Spherical k-means (Lloyd) over an embedding column — the
     centroid trainer behind IVF indexing and semantic-cluster curation
     (cluster-then-sample corpus balancing).
 
-    Scale shape per iteration: assignment is the shuffle-free
-    broadcast-centroid array-argmax (``nearest_cells``), so the corpus
-    is never shuffled for assignment; the centroid update is one
-    (cell, dim) aggregation — the only shuffle — and its output is
-    k x dim rows regardless of corpus size.  ``localCheckpoint`` after
-    each update truncates the iterative plan, same as
-    dedup.connected_components.  Driver sees nothing but the next
-    centroid set's lineage handle.
+    Scale shape per iteration (``_train_cells``): assignment is the
+    shuffle-free broadcast-centroid array-argmax (``nearest_cells``),
+    so the corpus is never shuffled for assignment; the centroid update
+    is one (cell, dim) aggregation — the only shuffle — and its output
+    is k x dim rows regardless of corpus size.
 
     Returns (id, cell, sim) — each vector's cluster and its cosine
-    similarity to the final centroid.
-
-    ``portable=True`` applies the x15 determinism kit (md5-hash60
-    seeding, exact-BIGINT centroid sums, rounded argmax with cell
-    tiebreaks) so the full Lloyd loop unrolls into a SQL value oracle
-    (x37) — identical plan shape, 1e-3 centroid quantization."""
+    similarity to the final centroid."""
     c = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    if portable:
-        from .text import hash60
-
-        seed = F.pmod(hash60(F.col(id_col).cast("string"), salt="km|"), F.lit(k))
-        make_cents = _centroids_portable
-    else:
-        seed = F.pmod(F.xxhash64(id_col), F.lit(k))
-        make_cents = _centroids
-    seeded = c.withColumn("cell", seed)
-    cents = make_cents(seeded).select("cell", "centroid").localCheckpoint()
-    for _ in range(iterations):
-        assigned = nearest_cells(c, cents, 1, "cell", rounded=portable)
-        cents = make_cents(assigned).select("cell", "centroid").localCheckpoint()
-    final = nearest_cells(c, cents, 1, "cell", rounded=portable)
+    _, cents = _train_cells(c, k, iterations, "km|", id_col)
+    final = nearest_cells(c, cents, 1, "cell")
     return final.join(cents, "cell").select(
         id_col,
         "cell",
@@ -640,7 +615,7 @@ def cluster_topics(
     emb: DataFrame, docs: DataFrame, k: int = 8, iterations: int = 1
 ) -> DataFrame:
     """Name each embedding cluster by its top-3 TF-IDF terms (x90):
-    portable k-means cells over ``emb`` joined back to ``docs`` by id,
+    k-means cells over ``emb`` joined back to ``docs`` by id,
     then cluster-level TF-IDF (each cell is one super-document, df
     counts cells).  Scale: the only cost over ``kmeans_assign`` is a
     broadcast-able (doc_id, cell) join and the TF-IDF shuffles keyed on
@@ -652,7 +627,7 @@ def cluster_topics(
     # tf-idf legs — persist so the Lloyd pipeline runs ONCE, not once
     # per consumer
     assign = tracked_persist(
-        kmeans_assign(emb, k=k, iterations=iterations, portable=True).select(
+        kmeans_assign(emb, k=k, iterations=iterations).select(
             F.col("vec_id").alias("doc_id"), "cell"
         )
     )
@@ -703,9 +678,9 @@ def ivf_index_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Build-once half of the IVF index: train centroids (hash seed +
-    one Lloyd reassignment, same as ivf_topk) and PERSIST the index —
-    the assigned corpus written as parquet PARTITIONED BY cell, plus a
+    """Build-once half of the IVF index: train centroids
+    (``_train_cells``, same as ivf_topk) and PERSIST the index — the
+    assigned corpus written as parquet PARTITIONED BY cell, plus a
     tiny centroids table.
 
     This is the shape that matters at 100 TB: index construction is
@@ -717,10 +692,7 @@ def ivf_index_build(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("v")
     )
-    seeded = c.withColumn("cell", F.pmod(F.xxhash64("neighbor_id"), F.lit(nlist)))
-    cents0 = _centroids(seeded).select("cell", "centroid")
-    assigned = nearest_cells(c, cents0, 1, "cell")
-    cents = _centroids(assigned).select("cell", "centroid")
+    assigned, cents = _train_cells(c, nlist, 1, "ivf|", "neighbor_id")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/postings")
     cents.write.mode("overwrite").parquet(f"{path}/centroids")
 
@@ -734,39 +706,20 @@ def ivf_index_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Query-many half: probe each query's ``nprobe`` nearest cells
-    against the persisted index.  The probe side is broadcast and the
-    postings scan is joined ON ITS PARTITION COLUMN, so Catalyst
-    inserts a dynamic-partition-pruning subquery: only the probed cell
-    directories are listed and read — never the whole index, and never
-    a driver-side collect of the cell list.  The centroids table is
-    nlist rows and folds into the broadcast argmax (nearest_cells)
-    like every other assignment."""
-    cents = spark.read.parquet(f"{path}/centroids")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("v")
+    """Query-many half: ``ivf_search_postings`` over the persisted
+    index.  The postings scan is joined ON ITS PARTITION COLUMN, so
+    Catalyst inserts a dynamic-partition-pruning subquery: only the
+    probed cell directories are listed and read — never the whole
+    index, and never a driver-side collect of the cell list."""
+    return ivf_search_postings(
+        queries,
+        spark.read.parquet(f"{path}/centroids"),
+        spark.read.parquet(f"{path}/postings"),
+        nprobe,
+        k,
+        id_col,
+        vec_col,
     )
-    probed = (
-        nearest_cells(q, cents, nprobe, "probe_cell")
-        .withColumnRenamed("v", "q_vec")
-        .withColumn("q_n", F.sqrt(_dot(F.col("q_vec"), F.col("q_vec"))))
-    )
-    postings = (
-        spark.read.parquet(f"{path}/postings")
-        .withColumnRenamed("v", "c_vec")
-        .withColumn("c_n", F.sqrt(_dot(F.col("c_vec"), F.col("c_vec"))))
-    )
-    candidates = postings.join(
-        F.broadcast(probed), postings.cell == probed.probe_cell
-    )
-    sim = _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_n") * F.col("c_n"))
-    scored = candidates.select(
-        "query_id",
-        "neighbor_id",
-        F.round(sim + F.lit(1e-9), 4).alias("cosine_sim"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 # -------------------------------------------------------- semantic dedup
@@ -890,45 +843,6 @@ def semantic_dedup(
     )
 
 
-def ivf_search_postings(
-    queries: DataFrame,
-    cents: DataFrame,
-    postings: DataFrame,
-    nprobe: int = 4,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Score queries against an ALREADY-ASSIGNED postings frame
-    (cell, neighbor_id, v) — the search half shared by the persisted
-    index (ivf_index_search reads postings from its partitioned
-    layout) and the STREAMING index (streaming/sinks.ivf_stream_view
-    merges them from the append log).  Probe side broadcast; a query
-    scores only its ``nprobe`` cells' postings."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    probed = (
-        nearest_cells(q, cents, nprobe, "probe_cell")
-        .withColumnRenamed("v", "q_vec")
-        .withColumn("q_n", F.sqrt(_dot(F.col("q_vec"), F.col("q_vec"))))
-    )
-    cands = postings.withColumnRenamed("v", "c_vec").withColumn(
-        "c_n", F.sqrt(_dot(F.col("c_vec"), F.col("c_vec")))
-    ).join(F.broadcast(probed), F.col("cell") == F.col("probe_cell"))
-    sim = _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_n") * F.col("c_n"))
-    scored = (
-        cands.select(
-            "query_id",
-            "neighbor_id",
-            F.round(sim + F.lit(1e-9), 4).alias("cosine_sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 # ------------------------------------------------- product quantization
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -939,13 +853,32 @@ def _l2sq(a: Column, b: Column) -> Column:
     )
 
 
-def pq_train_codebooks(
-    corpus: DataFrame, m: int, ksub: int, dsub: int, portable: bool = False
+def _unit_rows(
+    df: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: str = "v"
 ) -> DataFrame:
+    """(``out_id``, ``out_vec``): each row's id and its L2-normalized
+    vector, so cosine is a plain dot product."""
+    return df.select(
+        F.col(id_col).alias(out_id),
+        _unit_arr(_as_double(F.col(vec_col))).alias(out_vec),
+    )
+
+
+def _pq_dsub(corpus: DataFrame, vec_col: str, m: int, dim: int | None) -> int:
+    """Subvector width for ``m`` subspaces; probes the vector width
+    once when the caller does not know it."""
+    if dim is None:
+        dim = corpus.select(F.size(_as_double(F.col(vec_col))).alias("d")).first()["d"]
+    if dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    return dim // m
+
+
+def pq_train_codebooks(corpus: DataFrame, m: int, ksub: int, dsub: int) -> DataFrame:
     """Train per-subspace PQ codebooks (Jégou et al., "Product
     Quantization for Nearest Neighbor Search"): split each vector into
     ``m`` subvectors of ``dsub`` dims, then per subspace run the same
-    deterministic hash-seed + one-Lloyd-step k-means the IVF tier uses.
+    hash60-seed + one-Lloyd-step k-means the IVF tier uses.
 
     Returns ONE row: ``__cb`` = array[m] of array[<=ksub] of centroid
     (array<double>) — tiny (m x ksub x dsub doubles) by construction,
@@ -953,11 +886,11 @@ def pq_train_codebooks(
     deterministically-sorted centroid list, so encode and ADC lookup
     align even if a Lloyd step empties a cell.
 
-    Scale shape: training shuffles only (sub, cell, dim) aggregates —
-    output is m*ksub*dsub rows regardless of corpus size; the corpus is
+    Scale shape: training shuffles only (sub, cell) aggregates —
+    output is m*ksub rows regardless of corpus size; the corpus is
     scanned twice (seed means, one reassignment) and never shuffled on
-    its own key.  Expects column ``v`` (array<double>, normalized by
-    the caller if inner-product ADC is intended)."""
+    its own key.  Expects columns ``id`` and ``v`` (array<double>,
+    normalized by the caller if inner-product ADC is intended)."""
     subs = (
         corpus.select(
             F.col("id"),
@@ -974,20 +907,13 @@ def pq_train_codebooks(
         .select("id", "e.sub", "e.sv")
     )
 
-    def _means(assigned: DataFrame) -> DataFrame:
-        # dsub is a build-time constant, so the per-dim means are dsub
-        # avg() columns in ONE aggregation — no posexplode (x dsub row
-        # blow-up) and no second regroup shuffle
-        return assigned.groupBy("sub", "cell").agg(
-            F.array(
-                *[F.avg(F.element_at(F.col("sv"), d + 1)) for d in range(dsub)]
-            ).alias("centroid")
-        )
-
-    def _means_portable(assigned: DataFrame) -> DataFrame:
-        # cross-engine-exact variant: quantized BIGINT coordinate sums
-        # (order-independent) + two IEEE divisions, same as
-        # _centroids_portable — what lets x62/x69 carry SQL oracles
+    def _codebook(assigned: DataFrame) -> DataFrame:
+        # per-(sub, cell) means from quantized BIGINT coordinate sums
+        # (order-independent) + two IEEE divisions, as in
+        # _centroids_portable; dsub is a build-time constant, so the
+        # per-dim sums are dsub columns of ONE aggregation (no
+        # posexplode row blow-up, no second regroup shuffle).  Packed
+        # into the one-row ``__cb`` array, cells in sorted order.
         g = assigned.groupBy("sub", "cell").agg(
             *[
                 F.sum((F.element_at(F.col("sv"), d + 1) * 1000).cast("long")).alias(
@@ -997,7 +923,7 @@ def pq_train_codebooks(
             ],
             F.count("*").alias("__n"),
         )
-        return g.select(
+        means = g.select(
             "sub",
             "cell",
             F.array(
@@ -1007,29 +933,22 @@ def pq_train_codebooks(
                 ]
             ).alias("centroid"),
         )
-
-    if portable:
-        from .text import hash60
-
-        seed = F.pmod(
-            hash60(F.col("id").cast("string"), salt="pq|") + F.col("sub"), F.lit(ksub)
+        return (
+            means.groupBy("sub")
+            .agg(F.array_sort(F.collect_list(F.struct("cell", "centroid"))).alias("cells"))
+            .groupBy()
+            .agg(F.array_sort(F.collect_list(F.struct("sub", "cells"))).alias("sc"))
+            .select(
+                F.transform(
+                    "sc", lambda s: F.transform(s["cells"], lambda c: c["centroid"])
+                ).alias("__cb")
+            )
         )
-        _means = _means_portable  # noqa: F811
-    else:
-        seed = F.pmod(F.xxhash64("id") + F.col("sub"), F.lit(ksub))
-    seeded = subs.withColumn("cell", seed)
-    cb0 = _means(seeded)
-    cb0_row = (
-        cb0.groupBy("sub")
-        .agg(F.array_sort(F.collect_list(F.struct("cell", "centroid"))).alias("cells"))
-        .groupBy()
-        .agg(F.array_sort(F.collect_list(F.struct("sub", "cells"))).alias("sc"))
-        .select(
-            F.transform(
-                "sc", lambda s: F.transform(s["cells"], lambda c: c["centroid"])
-            ).alias("__cb")
-        )
+
+    seed = F.pmod(
+        hash60(F.col("id").cast("string"), salt="pq|") + F.col("sub"), F.lit(ksub)
     )
+    cb0_row = _codebook(subs.withColumn("cell", seed))
     # one Lloyd step: reassign each subvector to its nearest seed
     # centroid (by position), recompute means.  O(ksub) array_min
     # replaces the O(ksub log ksub) sort-then-first — same (d, pos)
@@ -1049,18 +968,7 @@ def pq_train_codebooks(
         .withColumn("cell", argmin)
         .drop("__cb")
     )
-    return (
-        _means(reassigned)
-        .groupBy("sub")
-        .agg(F.array_sort(F.collect_list(F.struct("cell", "centroid"))).alias("cells"))
-        .groupBy()
-        .agg(F.array_sort(F.collect_list(F.struct("sub", "cells"))).alias("sc"))
-        .select(
-            F.transform(
-                "sc", lambda s: F.transform(s["cells"], lambda c: c["centroid"])
-            ).alias("__cb")
-        )
-    )
+    return _codebook(reassigned)
 
 
 def pq_encode(vectors: DataFrame, codebooks: DataFrame, m: int, dsub: int) -> DataFrame:
@@ -1096,88 +1004,11 @@ def pq_encode(vectors: DataFrame, codebooks: DataFrame, m: int, dsub: int) -> Da
     )
 
 
-def pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    m: int = 8,
-    ksub: int = 16,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    rerank: int = 0,
-    train_sample_mod: int | None = None,
-    portable: bool = False,
-) -> DataFrame:
-    """PQ approximate top-k cosine via asymmetric distance computation
-    (ADC): vectors are L2-normalized (cosine == dot), the corpus is
-    compressed to ``m`` codebook codes, and each QUERY precomputes a
-    lookup table LUT[sub][pos] = dot(q_sub, centroid) so scoring a
-    corpus row is ``m`` array lookups + adds — no per-pair float
-    vector math at all.
-
-    This is the missing compression tier between int8 affine
-    quantization (quantize_embeddings — 4x) and raw vectors: PQ is
-    32x smaller (64 floats -> 8 bytes) and the ADC scan's per-row cost
-    is O(m), independent of dim.  At 100 TB the scan reads ONLY the
-    codes column (64-dim vectors never leave the encode pass), and the
-    LUT rides the tiny broadcast query side.  Composes with IVF by
-    running the same ADC expression over ivf postings instead of the
-    full codes frame.  Everything is hash-seeded and fold-ordered —
-    no RNG — so results are reproducible run to run.
-
-    ``rerank`` > 0 enables the standard two-stage production shape:
-    the ADC scan keeps a per-query shortlist of ``rerank`` candidates
-    (lossy, cheap), then ONLY those |Q| x rerank rows fetch their full
-    vectors for exact cosine rescoring — the expensive float math
-    never touches the rest of the corpus, and recall approaches exact
-    as the shortlist grows.  Output column is ``cosine_sim`` (exact)
-    when reranking, ``adc_score`` (approximate dot of reconstructions)
-    when not.
-
-    ``train_sample_mod`` = N trains the codebooks on the deterministic
-    1/N hash-sample of the corpus (ids with xxhash64 % N == 0) — the
-    standard production move (FAISS trains on a fixed sample, never
-    the full corpus): codebook quality needs a representative sample,
-    not every vector, and at 100 TB a full-corpus training pass would
-    dwarf the encode itself.
-
-    ``portable=True`` swaps codebook training to the x15 determinism
-    kit (hash60 seeding, exact-BIGINT coordinate sums); every
-    downstream decision (argmin codes, LUT terms, ADC ranking, rerank)
-    is ALREADY rounded + tiebroken, so the entire two-stage pipeline
-    becomes reproducible in a SQL oracle (x62)."""
-    if dim is None:  # probe once when the caller doesn't know the width
-        dim = corpus.select(F.size(_as_double(F.col(vec_col))).alias("d")).first()["d"]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-
-    def _unit(df: DataFrame, out_id: str) -> DataFrame:
-        vv = _as_double(F.col(vec_col))
-        return df.select(
-            F.col(id_col).alias(out_id),
-            _unit_arr(vv).alias("v"),
-        )
-
-    c = _unit(corpus, "id")
-    if train_sample_mod:
-        if portable:
-            from .text import hash60
-
-            train_hash = hash60(F.col("id").cast("string"), salt="pqs|")
-        else:
-            train_hash = F.xxhash64("id")
-        train = c.filter(F.pmod(train_hash, F.lit(train_sample_mod)) == 0)
-    else:
-        train = c
-    cb = pq_train_codebooks(train, m, ksub, dsub, portable=portable).localCheckpoint()
-    encoded = pq_encode(c, cb, m, dsub).select(
-        F.col("id").alias("neighbor_id"), "codes"
-    )
-
-    # per-query LUT: same sorted codebook arrays => positions align
-    luts = F.transform(
+def _adc_luts(dsub: int) -> Column:
+    """Per-query ADC lookup table LUT[sub][pos] = dot(q_sub, centroid)
+    of query vector ``v`` against the one-row codebook ``__cb`` — same
+    sorted codebook arrays as the encode, so positions align."""
+    return F.transform(
         F.col("__cb"),
         lambda cells, s: F.transform(
             cells,
@@ -1188,13 +1019,12 @@ def pq_topk(
             ),
         ),
     )
-    q = (
-        _unit(queries, "query_id")
-        .crossJoin(F.broadcast(cb))
-        .withColumn("luts", luts)
-        .select("query_id", "luts")
-    )
-    score = F.aggregate(
+
+
+def _adc_score() -> Column:
+    """Asymmetric distance of a coded row against its query's LUT:
+    ``m`` array lookups + adds, no per-pair float vector math."""
+    return F.aggregate(
         F.zip_with(
             F.col("codes"),
             F.col("luts"),
@@ -1203,27 +1033,24 @@ def pq_topk(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    scored = encoded.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        F.round(score + F.lit(1e-9), 4).alias("adc_score"),
-    )
+
+
+def _adc_topk(
+    scored: DataFrame, k: int, rerank: int, qv: DataFrame, cv: DataFrame | None
+) -> DataFrame:
+    """Top-``k`` per query on ``adc_score`` or, with ``rerank`` > 0,
+    the standard two-stage shape: keep a shortlist of ``rerank``
+    candidates per query, and ONLY those |Q| x rerank rows fetch their
+    unit vectors (``cv``: neighbor_id, c_vec) for exact cosine against
+    the broadcast unit queries (``qv``: query_id, q_vec).  The float
+    math never touches the rest of the corpus."""
     w = W.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("neighbor_id"))
+    ranked = scored.withColumn("rank", F.row_number().over(w))
     if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= max(rerank, k))
-        .select("query_id", "neighbor_id")
+        return ranked.filter(F.col("rank") <= k)
+    shortlist = ranked.filter(F.col("rank") <= max(rerank, k)).select(
+        "query_id", "neighbor_id"
     )
-    # exact rescoring touches only |Q| x rerank rows: the shortlist ids
-    # semi-drive a join back to the corpus vectors, the (tiny) query
-    # vectors broadcast, and the final top-k ranks exact cosine
-    cv = c.select(F.col("id").alias("neighbor_id"), F.col("v").alias("c_vec"))
-    qv = _unit(queries, "query_id").withColumnRenamed("v", "q_vec")
     rescored = (
         shortlist.join(cv, "neighbor_id")
         .join(F.broadcast(qv), "query_id")
@@ -1239,6 +1066,64 @@ def pq_topk(
     return rescored.withColumn("rank", F.row_number().over(w2)).filter(F.col("rank") <= k)
 
 
+def pq_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    m: int = 8,
+    ksub: int = 16,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    dim: int | None = None,
+    rerank: int = 0,
+) -> DataFrame:
+    """PQ approximate top-k cosine via asymmetric distance computation
+    (ADC): vectors are L2-normalized (cosine == dot), the corpus is
+    compressed to ``m`` codebook codes, and each QUERY precomputes a
+    lookup table LUT[sub][pos] = dot(q_sub, centroid) so scoring a
+    corpus row is ``m`` array lookups + adds — no per-pair float
+    vector math at all.
+
+    This is the missing compression tier between int8 affine
+    quantization (quantize_embeddings — 4x) and raw vectors: PQ is
+    32x smaller (64 floats -> 8 bytes) and the ADC scan's per-row cost
+    is O(m), independent of dim.  At 100 TB the scan reads ONLY the
+    codes column (64-dim vectors never leave the encode pass), and the
+    LUT rides the tiny broadcast query side.  Composes with IVF by
+    running the same ADC expression over ivf postings instead of the
+    full codes frame (ivfpq_topk).
+
+    ``rerank`` > 0 adds the exact-rescore stage over a per-query
+    shortlist (``_adc_topk``).  Output column is ``cosine_sim`` (exact)
+    when reranking, ``adc_score`` (approximate dot of reconstructions)
+    when not."""
+    dsub = _pq_dsub(corpus, vec_col, m, dim)
+    c = _unit_rows(corpus, id_col, vec_col, "id")
+    cb = pq_train_codebooks(c, m, ksub, dsub).localCheckpoint()
+    encoded = pq_encode(c, cb, m, dsub).select(
+        F.col("id").alias("neighbor_id"), "codes"
+    )
+    luts = _adc_luts(dsub)
+    q = (
+        _unit_rows(queries, id_col, vec_col, "query_id")
+        .crossJoin(F.broadcast(cb))
+        .withColumn("luts", luts)
+        .select("query_id", "luts")
+    )
+    scored = encoded.crossJoin(F.broadcast(q)).select(
+        "query_id",
+        "neighbor_id",
+        F.round(_adc_score() + F.lit(1e-9), 4).alias("adc_score"),
+    )
+    return _adc_topk(
+        scored,
+        k,
+        rerank,
+        _unit_rows(queries, id_col, vec_col, "query_id", "q_vec"),
+        c.select(F.col("id").alias("neighbor_id"), F.col("v").alias("c_vec")),
+    )
+
+
 def pq_index_build(
     corpus: DataFrame,
     path: str,
@@ -1247,8 +1132,6 @@ def pq_index_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
-    train_sample_mod: int | None = None,
-    portable: bool = False,
 ) -> None:
     """Build-once half of the PQ index: train codebooks, encode the
     (normalized) corpus, persist codes + codebooks.  This is how the
@@ -1257,36 +1140,16 @@ def pq_index_build(
     batch reads the codes column only (32x smaller than the vectors)
     and pays just the ADC scan.  Codes carry the vector id, so the
     exact-rerank stage can fetch originals from the corpus table.
-    ``portable=True`` trains with the x62 determinism kit so a search
-    over the persisted index is SQL-oracle-reproducible (x95)."""
-    if dim is None:
-        dim = corpus.select(F.size(_as_double(F.col(vec_col))).alias("d")).first()["d"]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    vv = _as_double(F.col(vec_col))
-    c = corpus.select(
-        F.col(id_col).alias("id"),
-        _unit_arr(vv).alias("v"),
-    )
-    if train_sample_mod:
-        if portable:
-            from .text import hash60
-
-            train_hash = hash60(F.col("id").cast("string"), salt="pqs|")
-        else:
-            train_hash = F.xxhash64("id")
-        train = c.filter(F.pmod(train_hash, F.lit(train_sample_mod)) == 0)
-    else:
-        train = c
+    Same training as ``pq_topk``, so a search over the persisted index
+    returns its results (x95 shares x62's oracle)."""
+    dsub = _pq_dsub(corpus, vec_col, m, dim)
+    c = _unit_rows(corpus, id_col, vec_col, "id")
     # EAGER (r13, reversing r12's lazy form on measurement — VERDICT
     # r12 item 7): the codebook write AND the encode pass both read
     # this frame, and the interleaved A/B measured eager consistently
     # faster (x95 median 0.67 -> 0.63s; see unigram_lm_train_from_words
     # for the same finding on the word frame)
-    cb = pq_train_codebooks(train, m, ksub, dsub, portable=portable).localCheckpoint(
-        eager=True
-    )
+    cb = pq_train_codebooks(c, m, ksub, dsub).localCheckpoint(eager=True)
     cb.write.mode("overwrite").parquet(f"{path}/codebooks")
     pq_encode(c, cb, m, dsub).select("id", "codes").write.mode("overwrite").parquet(
         f"{path}/codes"
@@ -1309,81 +1172,30 @@ def pq_index_search(
     query batch costs one codes scan + m lookups per row.  With
     ``rerank`` > 0 the shortlist fetches original vectors from
     ``corpus`` (required then) for exact rescoring."""
+    if rerank and corpus is None:
+        raise ValueError("rerank requires the corpus frame for exact rescoring")
     cb = spark.read.parquet(f"{path}/codebooks")
-    first = cb.first()["__cb"]
-    m, dsub = len(first), len(first[0][0])
+    dsub = len(cb.first()["__cb"][0][0])
     codes = spark.read.parquet(f"{path}/codes").select(
         F.col("id").alias("neighbor_id"), "codes"
     )
-    vv = _as_double(F.col(vec_col))
-    qn = queries.select(
-        F.col(id_col).alias("query_id"),
-        _unit_arr(vv).alias("v"),
-    )
-    luts = F.transform(
-        F.col("__cb"),
-        lambda cells, s: F.transform(
-            cells,
-            lambda cent: F.round(
-                _dot(F.slice(F.col("v"), s * dsub + 1, F.lit(dsub)), cent)
-                + F.lit(1e-9),
-                6,
-            ),
-        ),
-    )
+    qn = _unit_rows(queries, id_col, vec_col, "query_id")
     q = (
         qn.crossJoin(F.broadcast(cb))
-        .withColumn("luts", luts)
+        .withColumn("luts", _adc_luts(dsub))
         .select("query_id", "luts")
-    )
-    score = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("luts"),
-            lambda code, lut: F.element_at(lut, code + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
     scored = codes.crossJoin(F.broadcast(q)).select(
         "query_id",
         "neighbor_id",
-        F.round(score + F.lit(1e-9), 4).alias("adc_score"),
+        F.round(_adc_score() + F.lit(1e-9), 4).alias("adc_score"),
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("neighbor_id"))
-    if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-    if corpus is None:
-        raise ValueError("rerank requires the corpus frame for exact rescoring")
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= max(rerank, k))
-        .select("query_id", "neighbor_id")
+    cv = (
+        None
+        if corpus is None
+        else _unit_rows(corpus, id_col, vec_col, "neighbor_id", "c_vec")
     )
-    cvv = _as_double(F.col(vec_col))
-    # _unit_arr let-binds the norm: referencing it inside the per-
-    # element lambda would re-inline the O(dim) dot per element
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _unit_arr(cvv).alias("c_vec"),
-    )
-    qv = qn.withColumnRenamed("v", "q_vec")
-    rescored = (
-        shortlist.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_dot(F.col("q_vec"), F.col("c_vec")) + F.lit(1e-9), 4).alias(
-                "cosine_sim"
-            ),
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return rescored.withColumn("rank", F.row_number().over(w2)).filter(F.col("rank") <= k)
+    return _adc_topk(scored, k, rerank, qn.withColumnRenamed("v", "q_vec"), cv)
 
 
 def ivfpq_topk(
@@ -1398,7 +1210,6 @@ def ivfpq_topk(
     vec_col: str = "embedding",
     dim: int | None = None,
     rerank: int = 0,
-    portable: bool = False,
 ) -> DataFrame:
     """IVF-PQ approximate top-k — the composed FAISS-style index shape
     and the full 100 TB ANN stack in one operator: an IVF coarse
@@ -1417,38 +1228,11 @@ def ivfpq_topk(
 
     All three training passes (cells, Lloyd step, codebooks) are
     hash-seeded and deterministic; ``rerank`` adds the exact-rescore
-    stage over the per-query shortlist exactly as in pq_topk.
-    ``portable=True`` composes the x15 + x62 determinism kits (hash60
-    seeds, exact-BIGINT centroids in both tiers, rounded argmax) so
-    the whole coarse-quantize -> residual-PQ -> ADC -> rerank stack
-    carries a SQL value oracle (x69)."""
-    if dim is None:
-        dim = corpus.select(F.size(_as_double(F.col(vec_col))).alias("d")).first()["d"]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-
-    def _unit(df: DataFrame, out_id: str) -> DataFrame:
-        vv = _as_double(F.col(vec_col))
-        return df.select(
-            F.col(id_col).alias(out_id),
-            _unit_arr(vv).alias("v"),
-        )
-
-    c = _unit(corpus, "id")
+    stage over the per-query shortlist exactly as in pq_topk."""
+    dsub = _pq_dsub(corpus, vec_col, m, dim)
+    c = _unit_rows(corpus, id_col, vec_col, "id")
     # IVF coarse quantizer: hash seed + one Lloyd step (as ivf_topk)
-    if portable:
-        from .text import hash60
-
-        coarse_seed = F.pmod(hash60(F.col("id").cast("string"), salt="ivf|"), F.lit(nlist))
-        make_cents = _centroids_portable
-    else:
-        coarse_seed = F.pmod(F.xxhash64("id"), F.lit(nlist))
-        make_cents = _centroids
-    seeded = c.withColumn("cell", coarse_seed)
-    cents0 = make_cents(seeded).select("cell", "centroid")
-    assigned = nearest_cells(c, cents0, 1, "cell", rounded=portable)
-    cents = make_cents(assigned).select("cell", "centroid").localCheckpoint()
+    assigned, cents = _train_cells(c, nlist, 1, "ivf|", "id")
 
     # residual postings + PQ codebooks trained ON the residuals
     resid = (
@@ -1456,77 +1240,36 @@ def ivfpq_topk(
         .withColumn("r", F.zip_with("v", "centroid", lambda x, y: x - y))
         .select("cell", "id", F.col("r").alias("v"))
     )
-    cb = pq_train_codebooks(resid, m, ksub, dsub, portable=portable).localCheckpoint()
+    cb = pq_train_codebooks(resid, m, ksub, dsub).localCheckpoint()
     postings = pq_encode(resid, cb, m, dsub).select("cell", "id", "codes")
 
     # probe side: nprobe cells per query; per probed cell one scalar
     # dot(q, centroid) + the LUT of q's subvectors vs residual codebooks
-    q = _unit(queries, "query_id")
-    probed = nearest_cells(q, cents, nprobe, "probe_cell", rounded=portable).join(
-        F.broadcast(cents.withColumnRenamed("cell", "probe_cell")), "probe_cell"
-    )
-    luts = F.transform(
-        F.col("__cb"),
-        lambda cells, s: F.transform(
-            cells,
-            lambda cent: F.round(
-                _dot(F.slice(F.col("v"), s * dsub + 1, F.lit(dsub)), cent)
-                + F.lit(1e-9),
-                6,
-            ),
-        ),
-    )
+    probed = nearest_cells(
+        _unit_rows(queries, id_col, vec_col, "query_id"), cents, nprobe, "probe_cell"
+    ).join(F.broadcast(cents.withColumnRenamed("cell", "probe_cell")), "probe_cell")
     qside = (
         probed.crossJoin(F.broadcast(cb))
-        .withColumn("luts", luts)
+        .withColumn("luts", _adc_luts(dsub))
         .withColumn(
             "cell_dot", F.round(_dot(F.col("v"), F.col("centroid")) + F.lit(1e-9), 6)
         )
         .select("query_id", "probe_cell", "cell_dot", "luts")
     )
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("luts"),
-            lambda code, lut: F.element_at(lut, code + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    scored = postings.join(
+        F.broadcast(qside), postings.cell == qside.probe_cell
+    ).select(
+        "query_id",
+        F.col("id").alias("neighbor_id"),
+        F.round(F.col("cell_dot") + _adc_score() + F.lit(1e-9), 4).alias("adc_score"),
     )
-    scored = (
-        postings.join(F.broadcast(qside), postings.cell == qside.probe_cell)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            F.round(F.col("cell_dot") + adc + F.lit(1e-9), 4).alias("adc_score"),
-        )
+    return _adc_topk(
+        scored,
+        k,
+        rerank,
+        _unit_rows(queries, id_col, vec_col, "query_id", "q_vec"),
+        c.select(F.col("id").alias("neighbor_id"), F.col("v").alias("c_vec")),
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("neighbor_id"))
-    if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= max(rerank, k))
-        .select("query_id", "neighbor_id")
-    )
-    cv = c.select(F.col("id").alias("neighbor_id"), F.col("v").alias("c_vec"))
-    qv = _unit(queries, "query_id").withColumnRenamed("v", "q_vec")
-    rescored = (
-        shortlist.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_dot(F.col("q_vec"), F.col("c_vec")) + F.lit(1e-9), 4).alias(
-                "cosine_sim"
-            ),
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return rescored.withColumn("rank", F.row_number().over(w2)).filter(F.col("rank") <= k)
 
 
 def embedding_neardup_pairs_multi(
@@ -1722,17 +1465,8 @@ def cluster_silhouette(
     Returns (cell, n_points, mean_silhouette, mean_sim, weak) —
     ``weak`` flags clusters whose mean silhouette falls below
     ``weak_below``."""
-    from .text import hash60, let_expr
-
     c = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    seed = F.pmod(hash60(F.col(id_col).cast("string"), salt="km|"), F.lit(k))
-    seeded = c.withColumn("cell", seed)
-    cents = _centroids_portable(seeded).select("cell", "centroid").localCheckpoint()
-    for _ in range(iterations):
-        assigned = nearest_cells(c, cents, 1, "cell", rounded=True)
-        cents = (
-            _centroids_portable(assigned).select("cell", "centroid").localCheckpoint()
-        )
+    _, cents = _train_cells(c, k, iterations, "km|", id_col)
     cent_arr = cents.agg(
         F.array_sort(F.collect_list(F.struct("cell", "centroid"))).alias("__cents")
     )
@@ -1745,7 +1479,7 @@ def cluster_silhouette(
             s["cell"].alias("cell"),
         ),
     )
-    top2 = let_expr(
+    top2 = _let(
         F.slice(F.array_sort(sims), 1, 2),
         lambda t: F.struct(
             F.element_at(t, 1)["cell"].alias("cell"),

@@ -616,7 +616,7 @@ WHERE rn <= 5
 def x15_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k (hash-seeded cells + one Lloyd step +
     nprobe search) — the data-adaptive ANN scale path next to x06's
-    fixed-hyperplane LSH.  Value-checked (r5): portable mode pins
+    fixed-hyperplane LSH.  Value-checked (r5): the determinism kit pins
     every discrete decision — md5-hash60 seeding, exact-BIGINT
     centroid sums, 4-dp-rounded argmax with cell tiebreaks — so the
     SQL oracle reproduces the ENTIRE index build + probe + rank
@@ -626,7 +626,7 @@ def x15_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf_topk(
-        emb.filter(F.col("vec_id") < 10), emb, nlist=16, nprobe=4, k=5, portable=True
+        emb.filter(F.col("vec_id") < 10), emb, nlist=16, nprobe=4, k=5
     )
 
 
@@ -1564,7 +1564,7 @@ def _kmeans_oracle(k: int = 8, iterations: int = 2) -> str:
 def x37_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spherical k-means (Lloyd) cluster assignment over the embedding
     table — the IVF centroid trainer exposed as an operator.
-    Value-checked (r5): portable mode pins seeding, exact-BIGINT
+    Value-checked (r5): the determinism kit pins seeding, exact-BIGINT
     centroid sums, and rounded argmax, so the WHOLE iterative Lloyd
     loop unrolls into chained SQL CTEs and hash-matches end-to-end.
     Convergence (mean within-cluster similarity non-decreasing,
@@ -1573,7 +1573,7 @@ def x37_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import kmeans_assign
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return kmeans_assign(emb, k=8, iterations=2, portable=True)
+    return kmeans_assign(emb, k=8, iterations=2)
 
 
 @query(
@@ -2925,7 +2925,7 @@ def _pq_oracle(
     k: int = 5,
     id_filter: str = "id < 10",
 ) -> str:
-    """SQL twin of pq_topk(portable=True): unit-normalize, split into
+    """SQL twin of pq_topk: unit-normalize, split into
     m subspaces, hash-seed + one exact-centroid Lloyd step per
     subspace, argmin-encode, ADC-score via 6-dp LUT terms (summed as
     scaled BIGINTs — exact and order-independent), exact-cosine rerank
@@ -3009,7 +3009,7 @@ def x62_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     full vectors for exact cosine rerank — recall@5 0.92 vs the exact
     p13_cosine_topk baseline at sf0.001 while the float math touches
     |Q| x 50 rows instead of |Q| x |corpus|.  Value-checked (r5):
-    portable codebook training (hash60 seed, exact-BIGINT centroid
+    deterministic codebook training (hash60 seed, exact-BIGINT centroid
     sums) plus the already-rounded argmin/LUT/rank decisions make the
     ENTIRE train -> encode -> ADC -> rerank pipeline reproducible in
     the SQL oracle; recall and determinism stay asserted in
@@ -3018,8 +3018,7 @@ def x62_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return pq_topk(
-        emb.filter(F.col("vec_id") < 10), emb, m=16, ksub=16, k=5, dim=64, rerank=50,
-        portable=True,
+        emb.filter(F.col("vec_id") < 10), emb, m=16, ksub=16, k=5, dim=64, rerank=50
     )
 
 
@@ -3372,7 +3371,7 @@ def _ivfpq_oracle(
     k: int = 5,
     id_filter: str = "id < 10",
 ) -> str:
-    """SQL twin of ivfpq_topk(portable=True): coarse IVF (hash60 seed
+    """SQL twin of ivfpq_topk: coarse IVF (hash60 seed
     + exact-centroid Lloyd step + rounded argmax), residual PQ
     codebooks per subspace, argmin codes, probe-side cell_dot + LUT,
     scaled-BIGINT ADC sum, exact-cosine shortlist rerank."""
@@ -3496,7 +3495,7 @@ def x69_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return ivfpq_topk(
         emb.filter(F.col("vec_id") < 10), emb,
-        nlist=8, nprobe=4, m=16, ksub=16, k=5, dim=64, rerank=50, portable=True,
+        nlist=8, nprobe=4, m=16, ksub=16, k=5, dim=64, rerank=50,
     )
 
 
@@ -4912,7 +4911,6 @@ def _pq_index_path(spark: SparkSession, sf_dir: str) -> str:
             m=16,
             ksub=16,
             dim=64,
-            portable=True,
         )
         _PQ_INDEX_CACHE[key] = path
     return _PQ_INDEX_CACHE[key]

@@ -391,7 +391,10 @@ def _latest_anchor(d: DataFrame, keys: list[str]) -> DataFrame:
 _LOGS: dict[str, MergeableLog] = {
     "rollup": MergeableLog(["bucket"], _folded("n_events", "value_sum")),
     "index": MergeableLog(["term"], _merge_index),
-    "ivf": MergeableLog(["neighbor_id"], _projected("cell", "neighbor_id", "v")),
+    "ivf": MergeableLog(
+        ["neighbor_id"],
+        lambda d, keys: _latest_view_of(d, keys).select("cell", "neighbor_id", "v"),
+    ),
     "cms": MergeableLog(["depth", "slot"], _folded("cnt")),
     "hh_candidates": MergeableLog([], _distinct),
     "hll": MergeableLog(["bucket"], _folded((F.max, "rho"))),
@@ -562,8 +565,9 @@ def make_ivf_sink(index_path: str, id_col: str = "vec_id", vec_col: str = "embed
 
 
 def ivf_stream_view(spark, index_path: str) -> DataFrame:
-    """Merged streaming postings: the (cell, neighbor_id, v) frame
-    ``ivf_search_postings`` scores against."""
+    """Merged streaming postings: the newest (cell, neighbor_id, v)
+    posting per vector — a vector re-sent in a later batch replaces its
+    old posting — the frame ``ivf_search_postings`` scores against."""
     return _LOGS["ivf"].view(spark, f"{index_path}/postings_log")
 
 

@@ -444,6 +444,42 @@ def test_shingle_oracles_agree_on_short_docs(spark, tmp_path):
         assert canonical(s_rows, sdf.columns) == canonical(o, o_cols), name
 
 
+def test_vector_index_family_matches_its_oracles(spark, sf_dir):
+    """The vector-index family replays exactly in DuckDB at the test
+    scale: IVF (x15), k-means (x37, and under x90's topics and x109's
+    silhouettes), PQ (x62), the persisted PQ index (x95) and IVF-PQ
+    (x69).  Every trainer's hash60 seeding, exact-BIGINT centroid sums
+    and rounded argmax must match the SQL twin to the last row."""
+    import os
+
+    import duckdb
+
+    from kafka_spark_streaming_pipeline_spark.catalog import table_path
+    from tools.check_oracle import canonical
+
+    with duckdb.connect() as con:
+        for t in TABLES:
+            path = table_path(sf_dir, t)
+            if os.path.exists(path):
+                con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+        for name in (
+            "x15_ivf_topk",
+            "x37_kmeans_clusters",
+            "x62_pq_topk",
+            "x69_ivfpq_topk",
+            "x90_cluster_topics",
+            "x95_pq_index_search",
+            "x109_cluster_silhouette",
+        ):
+            q = QUERIES[name]
+            sdf = q.builder(spark, sf_dir)
+            s_rows = [tuple(r) for r in sdf.collect()]
+            o = con.execute(q.oracle).fetchall()
+            o_cols = [d[0] for d in con.description]
+            assert len(s_rows) == len(o), (name, len(s_rows), len(o))
+            assert canonical(s_rows, sdf.columns) == canonical(o, o_cols), name
+
+
 def test_engine_round5_surfaces(spark, sf_dir):
     """The round-5 facade additions: datasheet, cluster topics,
     canonical selection, portable distinct counts, BPE tokenize."""

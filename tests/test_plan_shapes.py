@@ -253,27 +253,18 @@ def test_lint_flags_single_partition_scan(spark, sf_dir, tmp_path):
     )
 
 
-def test_headline_queries_lint_clean(spark, sf_dir):
-    """Every bench headline query must pass the linter — the
-    enforceable form of PLANS.md's audit claims."""
+def test_entire_registry_lints_clean(spark, sf_dir):
+    """EVERY registered query passes the anti-pattern linter — the bench
+    headliners among them, which makes it the enforceable form of
+    PLANS.md's audit claims.  A new query that sneaks in a cartesian
+    product, a data-bearing single-partition exchange, or row-at-a-time
+    Python fails here before it ever reaches a cluster."""
     import bench
 
     from kafka_spark_streaming_pipeline_spark.plans import QUERIES
     from kafka_spark_streaming_pipeline_spark.plans.lint import lint_plan
 
-    for name in bench.HEADLINE:
-        findings = lint_plan(QUERIES[name].builder(spark, sf_dir))
-        assert findings == [], (name, findings)
-
-
-def test_entire_registry_lints_clean(spark, sf_dir):
-    """EVERY registered query passes the anti-pattern linter — not
-    just the bench headliners.  A new query that sneaks in a cartesian
-    product, a data-bearing single-partition exchange, or row-at-a-time
-    Python fails here before it ever reaches a cluster."""
-    from kafka_spark_streaming_pipeline_spark.plans import QUERIES
-    from kafka_spark_streaming_pipeline_spark.plans.lint import lint_plan
-
+    assert set(bench.HEADLINE) <= set(QUERIES)
     flagged = {}
     for name, q in sorted(QUERIES.items()):
         findings = lint_plan(q.builder(spark, sf_dir))

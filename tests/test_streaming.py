@@ -158,43 +158,6 @@ def test_gap_detection_across_batches(spark, tmp_path):
     assert final["s2"].gap_events == 0
 
 
-def test_gap_backend_selected_at_import(spark, tmp_path):
-    """VERDICT r5 #5: ONE ST5 code path is chosen at import time —
-    transformWithStateInPandas where the runtime can execute it
-    (Spark 4.x API + protobuf), else applyInPandasWithState.  The
-    selection must match the capability probe, and the selected path
-    must produce the canonical cross-batch gap fold."""
-    from kafka_spark_streaming_pipeline_spark.streaming.state import (
-        TWS_DEFAULT,
-        track_gaps_auto,
-        tws_runtime_available,
-    )
-
-    assert TWS_DEFAULT == tws_runtime_available()
-    batches = [
-        [_event("s1", i, seq=i) for i in range(3)],
-        [_event("s1", i, seq=i) for i in (5, 6)],  # gap: 3,4 missing
-    ]
-    in_dir = _write_batch_files(spark, str(tmp_path), batches)
-    stream = parquet_stream(spark, in_dir, LIVE_CHUNK_SCHEMA)
-    cols = stream.select("stream_id", "sequence_number")
-    out = track_gaps_auto(cols if TWS_DEFAULT else stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("auto_gaps")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_auto"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    results = spark.sql("SELECT * FROM auto_gaps").collect()
-    final = max((r for r in results if r.stream_id == "s1"), key=lambda r: r.last_seq)
-    assert final.last_seq == 6
-    assert final.gap_events == 1
-    assert final.missing_total == 2
-
-
 def test_gap_fold_is_chunk_order_independent():
     """One key's micro-batch can arrive as several UNORDERED Arrow
     chunks (arrow.maxRecordsPerBatch); the fold must globally sort
@@ -574,46 +537,6 @@ def test_observed_metrics_listener(spark, tmp_path):
     assert listener.gauges["approx_streams"] >= 1
     assert "max_latency_ms" in listener.gauges
     assert listener.batches >= 1
-
-
-def test_gap_detection_transform_with_state(spark, tmp_path):
-    """ST5 via the Spark 4.x transformWithStateInPandas API: same
-    cross-batch fold as track_gaps, RocksDB-backed typed state."""
-    from kafka_spark_streaming_pipeline_spark.streaming.state import track_gaps_tws
-
-    if track_gaps_tws is None:
-        pytest.skip("transformWithState requires Spark 4.x")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithState's Python runner needs google.protobuf")
-    batches = [
-        [_event("s1", i, seq=i) for i in (0, 1, 2)],
-        [_event("s1", i, seq=i) for i in (5, 6)],  # gap of 2 (3,4 missing)
-    ]
-    in_dir = _write_batch_files(spark, str(tmp_path), batches)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = parquet_stream(spark, in_dir, LIVE_CHUNK_SCHEMA)
-        out = track_gaps_tws(stream.select("stream_id", "sequence_number"))
-        results = []
-        q = start_foreach_batch(
-            out,
-            lambda df, _id: results.extend(df.collect()),
-            checkpoint_dir=str(tmp_path / "ckpt_tws"),
-            available_now=True,
-            query_name="tws_test",
-        )
-        _drain(q)
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    final = {r.stream_id: r for r in results}["s1"]
-    assert final.last_seq == 6
-    assert final.gap_events == 1
-    assert final.missing_total == 2
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
@@ -1299,6 +1222,12 @@ def test_streaming_ivf_index_matches_batch_and_survives_replay(spark, tmp_path):
     # a new batch above the watermark still lands
     sink(vecs([500]), 2)
     assert ivf_stream_view(spark, index_path).count() == len(b0) + len(b1) + 1
+
+    # a vector re-sent in a later batch keeps ONE posting, the newest
+    sink(spark.createDataFrame([(100, [6.0] * 8)], ["vec_id", "embedding"]), 3)
+    view = ivf_stream_view(spark, index_path)
+    assert view.count() == len(b0) + len(b1) + 1
+    assert [r.v for r in view.filter(F.col("neighbor_id") == 100).collect()] == [[6.0] * 8]
 
 
 def test_streaming_cms_merges_exactly_and_never_underestimates(spark, tmp_path):

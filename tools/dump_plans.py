@@ -68,7 +68,7 @@ AUDITED = {
     "x84_leadlag_xcorr": "lead-lag xcorr: one log pass to hours x types; all lag joins/corr run on the aggregated series only",
     "x86_rfm_segments": "RFM: broadcast quintile boundaries + map-only scoring — no single-partition ntile window (linter-enforced)",
     "x15_ivf_topk": "IVF: broadcast-centroid argmax assignment (corpus never shuffles to assign); probed cells only at search",
-    "x37_kmeans_clusters": "k-means: broadcast-argmax per round, (cell, dim) agg is the only shuffle; localCheckpoint truncates the loop",
+    "x37_kmeans_clusters": "k-means: broadcast-argmax per round; the (cell, dim) agg is each round's only shuffle, the corpus never shuffles",
     "x88_bpe_encode": "BPE encode: map-only codegen replace chain — zero exchanges, zero joins, no Python",
     "x89_hll_portable_rollup": "portable HLL: one raw scan to 256-register state; rollup and estimator touch registers only",
     "x90_cluster_topics": "cluster topics: persisted (doc, cell) assignment + persisted tf — Lloyd runs once, corpus explodes once",
