@@ -16,8 +16,8 @@ Scale design (the point of each shape):
 - n-gram Jaccard / edit distance: exact verification, run only on
   blocked/candidate pairs, never the cross product.
 - connected_components: label propagation, one join + one aggregate
-  per round, lineage truncated per round; opt-in salt splits
-  power-law hubs across tasks.
+  per round, lineage truncated per round; AQE's skew-join splitting
+  (session.get_spark) spreads a power-law hub's edges across tasks.
 
 Hash functions are md5-based (not xxhash) on purpose: md5 is available
 and bit-identical in both Spark and DuckDB, so every operator here is
@@ -594,24 +594,11 @@ def ngram_jaccard_pairs(
 
 # ------------------------------------------------- dedup cluster closure
 
-# Measurement hook: materialized-round count of the LAST
-# connected_components call (pointer doubling makes this
-# O(log diameter); tools/x104_stage_pricing.py commits it vs the
-# graph's measured diameter).  Telemetry only — never read by engine
-# code.  Single-threaded by assumption (ADVICE r11): concurrent
-# driver-side connected_components calls would clobber each other's
-# counts here; the only reader (the stage-pricing tool) runs queries
-# sequentially, so the last-call semantics hold.  Results are
-# unaffected either way — nothing in the engine branches on this.
-CC_LAST_ROUNDS = 0
-
-
 def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iterations: int = 20,
-    salt: int | None = None,
 ) -> DataFrame:
     """Transitive closure of near-dup pairs -> (id, component) with the
     component labeled by its smallest member — the final stage of a
@@ -628,15 +615,11 @@ def connected_components(
 
     Skew boundary: the per-iteration join keys edges by ``dst``, so a
     power-law hub (one document near-duplicate to millions — think an
-    empty-page template) concentrates all its edges in ONE task.  For
-    such graphs pass ``salt``: edges pre-partition by (dst,
-    hash(src) % salt) and the label side — narrow (id, component)
-    rows — replicates salt-ways per iteration, splitting every hub's
-    edge list across ``salt`` tasks.  Same fixpoint, same labels; cost
-    is a salt-times larger (but still tiny) label shuffle, which is why
-    it is opt-in rather than the default for ordinary dedup clusters.
-    The neighbor-min and convergence aggregates are algebraic, so
-    map-side partial aggregation already absorbs hub skew there."""
+    empty-page template) concentrates all its edges in ONE partition;
+    AQE's skew-join splitting (enabled in session.get_spark) divides
+    such a partition at run time.  The neighbor-min and convergence
+    aggregates are algebraic, so map-side partial aggregation already
+    absorbs hub skew there."""
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(
@@ -644,11 +627,6 @@ def connected_components(
         )
         .distinct()
     )
-    if salt is not None:
-        edges = edges.withColumn("salt", F.pmod(F.hash("src"), F.lit(salt)))
-        part_cols = ["dst", "salt"]
-    else:
-        part_cols = ["dst"]
     # partition ONCE by the join key: every iteration's
     # edges-to-labels join reuses this layout, so only the (small)
     # label side shuffles per round.  Checkpoints here and below are
@@ -667,7 +645,7 @@ def connected_components(
     # checkpoint blocks land — bounded to re-reading shuffle output
     # once, and measured cheaper than the eager alternative's extra
     # driver job per call (r12 A/B: x104 9.26 -> 6.74s with lazy).
-    edges = edges.repartition(*part_cols).localCheckpoint(eager=False)
+    edges = edges.repartition("dst").localCheckpoint(eager=False)
     # seed each node with min(self, neighbors) — the first propagation
     # round fused into initialization (one aggregate instead of a
     # join + aggregate + convergence action)
@@ -676,23 +654,8 @@ def connected_components(
         .agg(F.least(F.col("id"), F.min("dst")).alias("component"))
         .localCheckpoint(eager=False)
     )
-    global CC_LAST_ROUNDS
-    CC_LAST_ROUNDS = 0
     for _ in range(max_iterations):
-        CC_LAST_ROUNDS += 1
-        if salt is not None:
-            label_side = labels.select(
-                "id",
-                "component",
-                F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("salt"),
-            )
-            joined = edges.join(
-                label_side,
-                (edges.dst == label_side.id) & (edges.salt == label_side.salt),
-            )
-        else:
-            label_side = labels
-            joined = edges.join(label_side, edges.dst == label_side.id)
+        joined = edges.join(labels, edges.dst == labels.id)
         neighbor_min = joined.groupBy("src").agg(
             F.min("component").alias("nbr_component")
         )

@@ -15,7 +15,9 @@ the record id (well spread), and the pair expansion is the SAME
 capped-block machinery minhash_lsh_pairs uses — Σ block² with an
 explicit ``max_block_size`` guard, never an all-pairs join.  The
 closure is the distributed small-label propagation from
-operators/dedup.connected_components.
+operators/dedup.connected_components.  Every stage runs under the
+session's shuffle settings; a job that needs more partition headroom
+wraps the call in ``session.scoped_shuffle_partitions``.
 
 Recall guarantee (why TWO blocking passes): ranking every record's
 tokens by global document frequency and blocking on the 2 rarest
@@ -179,7 +181,6 @@ def entity_resolve(
     passes: int = 2,
     max_block_size: int = 128,
     conjunctive: bool = False,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Full entity resolution: every record labeled with its entity.
 
@@ -190,24 +191,13 @@ def entity_resolve(
     equal to that minimum.  The closure runs on verified pairs only,
     so its input is |matches|, not |records|.
 
-    ``shuffle_partitions`` is the measured per-job partition-headroom
-    dial (VERDICT r11 item 1): at 10x the bench corpus this pipeline
-    is STARVED at the session's 32 shuffle partitions
-    (SCALE_ROOTCAUSE.json: 20.8 s -> 13.4 s at 128), and the cure
-    must not be a session default (AQE_AB.json: 8x initial headroom
-    taxes composed small-shuffle pipelines 1.5-3x).  When set, the
-    heavy stages — blocking, capped pair expansion, Jaccard verify,
-    and the iterative closure, which all MATERIALIZE inside this call
-    via the closure's checkpoints — run under a scoped
-    ``spark.sql.shuffle.partitions`` / AQE ``initialPartitionNum``
-    that is restored (even on failure) before returning; AQE still
-    coalesces down where stats are small.  The returned frame's final
-    join/window executes lazily at the caller's action under session
-    defaults — it is output-sized, not pair-scale.  Size the dial to
-    data volume: ~(verified-pair bytes / 128 MB) per the usual
-    partition-sizing rule, or leave None below the saturation point."""
-    from ..session import scoped_shuffle_partitions
-
+    Every stage runs under the session's shuffle settings.  A caller
+    that needs partition headroom at a larger scale (SCALE_ROOTCAUSE.json:
+    20.8 s -> 13.4 s at 128 partitions on 10x the bench corpus) wraps
+    the call in ``session.scoped_shuffle_partitions`` itself, as
+    tools/bench_scale.py does; it is not a session default because 8x
+    initial headroom taxes composed small-shuffle pipelines 1.5-3x
+    (AQE_AB.json)."""
     pairs = entity_pairs(
         records,
         id_col=id_col,
@@ -220,11 +210,7 @@ def entity_resolve(
         # copies; skipping the pairs-level distinct drops one exchange
         dedup_pairs=False,
     )
-    if shuffle_partitions is not None:
-        with scoped_shuffle_partitions(records.sparkSession, shuffle_partitions):
-            labels = connected_components(pairs, "id_a", "id_b")
-    else:
-        labels = connected_components(pairs, "id_a", "id_b")
+    labels = connected_components(pairs, "id_a", "id_b")
     out = records.join(labels, records[id_col] == labels.id, "left").select(
         F.col(id_col),
         F.coalesce(F.col("component"), F.col(id_col)).alias("entity_id"),

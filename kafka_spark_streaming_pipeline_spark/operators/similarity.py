@@ -9,6 +9,9 @@ Two tiers:
   hyperplane-sign bucket, so each query only scores its bucket.  This
   is the 100 TB path: bucket assignment is a map-only pass, and the
   join shuffles on the bucket key instead of broadcasting the corpus.
+  Every SRP bucket in this module is ``int_srp_bucket``'s: integer
+  planes over the integer-quantized vector, so buckets are identical
+  in Spark and in the SQL oracle.
 
 Dot products fold left-to-right in both Spark and DuckDB, so results
 are bit-comparable and the oracle can verify exact scores (rounded).
@@ -200,77 +203,36 @@ def embedding_neardup_pairs(
     )
 
 
-def srp_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-random-projection bucket id: one bit per hyperplane."""
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(p) for p in plane]), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(2 ** i)).otherwise(F.lit(0))
-    return bucket
-
-
 def lsh_cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
-    planes: list[list[float]],
+    planes: list[list[int]],
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    multiprobe_bits: int = 0,
-    quantized: bool = False,
 ) -> DataFrame:
     """Approximate top-k: only candidates in the query's SRP bucket are
     scored.  Recall grows with fewer planes / multiple tables; this is
     the scale path where |C| makes brute force infeasible.
 
-    ``quantized=True`` (requires INTEGER plane coefficients) buckets on
-    the integer-quantized projection (int_srp_bucket) — bit-identical
-    across engines, which is what lets the x06 registry entry carry a
-    full SQL value oracle instead of a rows-only check.
-
-    ``multiprobe_bits`` > 0 enables multi-probe LSH: each query ALSO
-    probes the buckets at Hamming distance 1 on its first
-    ``multiprobe_bits`` sign bits (the classic recall/cost dial — a
-    near neighbor that flipped one marginal sign lands one bit away).
-    Only the tiny broadcast query side fans out (x(1+bits) rows); the
-    corpus is hashed and scored exactly as before, and per-pair work is
-    deduplicated because a (query, neighbor) pair can meet in at most
-    one bucket per probe."""
-    bucket_of = int_srp_bucket if quantized else srp_bucket
+    Buckets come from the integer-quantized projection (int_srp_bucket,
+    so the planes carry INTEGER coefficients) — bit-identical across
+    engines, which is what lets the x06 registry entry carry a full SQL
+    value oracle instead of a rows-only check."""
     q = (
         queries.select(
             F.col(id_col).alias("query_id"),
             _as_double(F.col(vec_col)).alias("q_vec"),
         )
-        .withColumn("bucket", bucket_of(F.col("q_vec"), planes))
+        .withColumn("bucket", int_srp_bucket(F.col("q_vec"), planes))
         .withColumn("q_n", F.sqrt(_dot(F.col("q_vec"), F.col("q_vec"))))
     )
-    if multiprobe_bits:
-        nbits = min(multiprobe_bits, len(planes))
-        probes = F.array_distinct(
-            F.array(
-                F.col("bucket"),
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(1 << b)).alias(f"p{b}")
-                    for b in range(nbits)
-                ],
-            )
-        )
-        q = q.withColumn("bucket", F.explode(probes))
-        # a (query, neighbor) pair meets in at most one probed bucket
-        # of this query (buckets are distinct), but TWO different
-        # queries' probe sets may both reach the same neighbor — that
-        # is per-query, so no cross-pair dedup is needed.
     c = (
         corpus.select(
             F.col(id_col).alias("neighbor_id"),
             _as_double(F.col(vec_col)).alias("c_vec"),
         )
-        .withColumn("bucket", bucket_of(F.col("c_vec"), planes))
+        .withColumn("bucket", int_srp_bucket(F.col("c_vec"), planes))
         .withColumn("c_n", F.sqrt(_dot(F.col("c_vec"), F.col("c_vec"))))
     )
     sim = _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_n") * F.col("c_n"))
@@ -286,20 +248,17 @@ def lsh_cosine_topk(
 def lsh_cosine_topk_multi(
     queries: DataFrame,
     corpus: DataFrame,
-    tables: list[list[list[float]]],
+    tables: list[list[list[int]]],
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    multiprobe_bits: int = 0,
-    quantized: bool = False,
 ) -> DataFrame:
     """Multi-table SRP-LSH: ``tables`` is a list of independent
     hyperplane sets; a candidate only needs to share a bucket in ANY
     table.  This is the standard recall dial for web-scale ANN — with
     per-table collision probability p, the miss probability drops
     exponentially, (1-p)^n_tables — at a linear candidate-volume cost.
-    ``multiprobe_bits`` composes: each query also probes Hamming-1
-    buckets within every table.
+    Buckets are int_srp_bucket's, as in lsh_cosine_topk.
 
     One scan per side: every table's bucket is computed in the SAME
     projection and exploded to (table, bucket) rows, so adding tables
@@ -311,28 +270,19 @@ def lsh_cosine_topk_multi(
     if not tables:
         raise ValueError("at least one hyperplane table required")
 
-    def _probes(bucket, n_planes: int):
-        if not multiprobe_bits:
-            return F.array(bucket)
-        nbits = min(multiprobe_bits, n_planes)
-        return F.array_distinct(
-            F.array(bucket, *[bucket.bitwiseXOR(F.lit(1 << b)) for b in range(nbits)])
-        )
-
-    def _tag(t: int):
-        # closure, not a default arg: F.transform reads a 2-param
-        # lambda as (element, index)
-        return lambda bkt: F.struct(F.lit(t).alias("tbl"), bkt.alias("bucket"))
-
-    bucket_of = int_srp_bucket if quantized else srp_bucket
-
-    def _with_table_buckets(df: DataFrame, vec: str, probe: bool) -> DataFrame:
-        entries = []
-        for t, planes in enumerate(tables):
-            bucket = bucket_of(F.col(vec), planes)
-            buckets = _probes(bucket, len(planes)) if probe else F.array(bucket)
-            entries.append(F.transform(buckets, _tag(t)))
-        tb = F.explode(F.array_distinct(F.flatten(F.array(*entries)))).alias("tb")
+    def _with_table_buckets(df: DataFrame, vec: str) -> DataFrame:
+        # one (table, bucket) struct per table: distinct by table id
+        tb = F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(t).alias("tbl"),
+                        int_srp_bucket(F.col(vec), planes).alias("bucket"),
+                    )
+                    for t, planes in enumerate(tables)
+                ]
+            )
+        ).alias("tb")
         return df.select("*", tb).select(
             *df.columns, F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
         )
@@ -342,14 +292,12 @@ def lsh_cosine_topk_multi(
             F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
         ).withColumn("q_n", F.sqrt(_dot(F.col("q_vec"), F.col("q_vec")))),
         "q_vec",
-        probe=True,
     )
     c = _with_table_buckets(
         corpus.select(
             F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("c_vec")
         ).withColumn("c_n", F.sqrt(_dot(F.col("c_vec"), F.col("c_vec")))),
         "c_vec",
-        probe=False,
     )
     sim = _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_n") * F.col("c_n"))
     scored = (
@@ -1278,7 +1226,6 @@ def embedding_neardup_pairs_multi(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    center: bool = True,
 ) -> DataFrame:
     """Multi-table, MEAN-CENTERED SRP near-dup pairs — the variant for
     ANISOTROPIC embedding distributions.
@@ -1304,24 +1251,17 @@ def embedding_neardup_pairs_multi(
         emb.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
         .withColumn("n", F.sqrt(_dot(F.col("v"), F.col("v"))))
     )
-    if center:
-        dim_rows = v.select(F.posexplode("v").alias("d", "x"))
-        mu = dim_rows.groupBy("d").agg(
-            F.round(F.avg("x") + F.lit(1e-9), 6).alias("m")
-        )
-        mu_arr = mu.agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "m"))), lambda s: s["m"]
-            ).alias("__mu")
-        )
-        v = v.crossJoin(F.broadcast(mu_arr)).withColumn(
-            "c",
-            F.zip_with(
-                "v", "__mu", lambda x, m: F.round(x - m + F.lit(1e-9), 6)
-            ),
-        ).drop("__mu")
-    else:
-        v = v.withColumn("c", F.col("v"))
+    dim_rows = v.select(F.posexplode("v").alias("d", "x"))
+    mu = dim_rows.groupBy("d").agg(F.round(F.avg("x") + F.lit(1e-9), 6).alias("m"))
+    mu_arr = mu.agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("d", "m"))), lambda s: s["m"]
+        ).alias("__mu")
+    )
+    v = v.crossJoin(F.broadcast(mu_arr)).withColumn(
+        "c",
+        F.zip_with("v", "__mu", lambda x, m: F.round(x - m + F.lit(1e-9), 6)),
+    ).drop("__mu")
 
     # persist the prepared frame: every table branch (and the pair
     # expansion inside each) re-reads these narrow rows instead of

@@ -14,6 +14,10 @@ element p (1-based) of an L-element list gets weight (1-alpha)^(L-p);
 the result is normalized by the weight sum (the "adjust=True" form of
 pandas ewm, which is also what a fresh stream restart computes — no
 dependence on pre-window history).
+
+The hourly-grid detectors (seasonal z, robust z, CUSUM, dispersion,
+trend) all read one persisted dense grid; ``detector_consensus``
+composes them lazily, with no driver action at build time.
 """
 
 from __future__ import annotations
@@ -1189,80 +1193,22 @@ def consensus_from_dense(
     )
 
 
-def _grid_partition_count(n_grid_rows: int) -> int:
-    """Shuffle-partition count for a grid of ``n_grid_rows`` (h, t,
-    cnt) rows: ~24 B per row, ~64 MB per partition (guide §2.2's
-    sizing rule) => ~2.6M rows per partition; floor 2 keeps a
-    degenerate single-partition exchange out of the plan.  On a
-    century-span, 10k-type grid this yields thousands of partitions,
-    so the dial scales up as well as down."""
-    return max(2, -(-int(n_grid_rows) // 2_600_000))
-
-
 def detector_consensus(
-    events: DataFrame,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    grid_partitions: int | None = None,
-    adaptive: bool = False,
+    events: DataFrame, ts_col: str = "ts", type_col: str = "event_type"
 ) -> DataFrame:
     """All five hourly-grid detectors composed into one dashboard
     frame — see ``consensus_from_dense``.
 
-    Default: a LAZY composition — one event-log pass into the
-    persisted dense grid, all five detectors readers of that cache,
-    zero driver actions at build time.  The post-aggregate stages are
-    grid-sized (hours x types rows) and run under the session's
-    shuffle settings; AQE's partition coalescing shrinks their tiny
-    exchanges at action time.  The r12 pass materialized the grid
-    eagerly to size those shuffles from a measured row count, but the
-    dedicated count() plus the eager checkpoint cost two extra driver
-    jobs on every cold build — a net loss at bench scale (driver
-    protocol: 1.79s lazy vs 2.92s eager; VERDICT r12 item 1), so the
-    eager cost is now GATED behind the explicit knobs below.
-
-    ``grid_partitions=n`` / ``adaptive=True`` — the grid-sized
-    shuffle-partition scope for production grids where the default
-    partitioning is measurably wrong (the r12 partition sweep: 4.3s at
-    32 partitions vs 2.6s at 4 for identical results on a 3.6k-row
-    grid; conversely a century-span 10k-type grid wants hundreds of
-    partitions).  NOTE: both knobs make the call EAGER — the frame is
-    computed inside the scope and returned as a bounded localCheckpoint
-    (``scoped_shuffle_partitions`` binds at action time, so a lazy
-    return could not ride it), and the operator's internal grid caches
-    are released before returning.  Both knobs first materialize the
-    grid with one count() OUTSIDE the scope (the blocks serve every
-    detector anyway), so the event-log aggregation shuffle runs under
-    the session's partitioning and only the grid-sized stages under the
-    scope.  ``adaptive=True`` derives the partition count from that
-    count via ``_grid_partition_count``; ``grid_partitions`` scopes to
-    the given value.
-    """
-    from ..cache import mark, release, tracked_since
-    from ..session import scoped_shuffle_partitions
-
-    pos = mark()
-    dense = dense_hourly_counts(events, ts_col, type_col)
-    if grid_partitions is None and not adaptive:
-        return consensus_from_dense(dense)
-
-    # materialize the persisted grid BEFORE the scope: the event-log
-    # aggregation feeding it must run under the session's partitioning,
-    # only the grid-sized detector stages under ``n_parts``
-    n_grid_rows = dense.count()
-    n_parts = (
-        int(grid_partitions)
-        if grid_partitions is not None
-        else _grid_partition_count(n_grid_rows)
-    )
-    with scoped_shuffle_partitions(events.sparkSession, n_parts):
-        out = consensus_from_dense(dense).localCheckpoint(eager=True)
-    # the checkpoint holds the finished dashboard rows, so the
-    # operator's internal grid caches have no remaining reader —
-    # release THEM specifically (scoped, not unpersist_tracked: a
-    # caller's own tracked frames must survive this call)
-    release(tracked_since(pos))
-    return out
+    A LAZY composition: one event-log pass into the persisted dense
+    grid, all five detectors readers of that cache, zero driver actions
+    at build time.  The post-aggregate stages are grid-sized (hours x
+    types rows) and run under the session's shuffle settings; AQE's
+    partition coalescing shrinks their tiny exchanges at action time.
+    Sizing those shuffles from a measured grid row count needs a
+    count() and an eager checkpoint — two extra driver jobs on every
+    cold build, a net loss at bench scale (driver protocol: 1.79s lazy
+    vs 2.92s eager; VERDICT r12 item 1)."""
+    return consensus_from_dense(dense_hourly_counts(events, ts_col, type_col))
 
 
 def holt_winters_from_dense(

@@ -287,9 +287,7 @@ def x06_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import lsh_cosine_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return lsh_cosine_topk(
-        emb.filter(F.col("vec_id") < 10), emb, X06_PLANES, k=5, quantized=True
-    )
+    return lsh_cosine_topk(emb.filter(F.col("vec_id") < 10), emb, X06_PLANES, k=5)
 
 
 @query(
@@ -2204,7 +2202,7 @@ def x49_multi_table_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return lsh_cosine_topk_multi(
-        emb.filter(F.col("vec_id") < 10), emb, _srp_tables(3), k=5, quantized=True
+        emb.filter(F.col("vec_id") < 10), emb, _srp_tables(3), k=5
     )
 
 
@@ -9876,9 +9874,9 @@ def x165_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange reuse), so the persist only added a materialization
     # barrier + cache write to a subtree that was not actually
     # computed twice.
-    approx = lsh_cosine_topk_multi(
-        q, emb, _srp_tables(3), k=10, quantized=True
-    ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    approx = lsh_cosine_topk_multi(q, emb, _srp_tables(3), k=10).select(
+        "query_id", "neighbor_id", F.lit(1).alias("hit")
+    )
     ja = approx.groupBy("query_id").agg(
         F.count("*").cast("long").alias("n_approx")
     )

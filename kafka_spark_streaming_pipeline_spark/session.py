@@ -63,11 +63,10 @@ def get_spark(
         # overhead of 256 map-output buckets on dozens of tiny
         # exchanges.  It is a PER-JOB dial: use
         # scoped_shuffle_partitions (below) — it scopes BOTH confs
-        # around one job and restores them even on failure — or the
-        # operator-level knob that applies it
-        # (entity_resolve(shuffle_partitions=...)); leave the shared
-        # session at the parallelism default so composed dashboards
-        # and streaming micro-batches stay cheap.
+        # around one job and restores them even on failure, as
+        # tools/bench_scale.py does around x104's big point; leave the
+        # shared session at the parallelism default so composed
+        # dashboards and streaming micro-batches stay cheap.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # --- python exchange ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

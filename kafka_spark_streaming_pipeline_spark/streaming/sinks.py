@@ -1186,10 +1186,11 @@ def make_quality_gate_sink(
                 accepted.drop("keep", "fingerprint", "reject_reason")
             )
             AtomicParquetTable(reject_path).append(rejected)
+            # accepted fingerprints are unique: an accepted row is its
+            # fingerprint's batch-minimum id (``keep``); every history
+            # reader dedups the log anyway
             AtomicParquetTable(fingerprint_history_path).append(
-                accepted.select("fingerprint")
-                .distinct()
-                .withColumn("__commit", F.lit(batch_id))
+                accepted.select("fingerprint", "__commit")
             )
         finally:
             decided.unpersist()

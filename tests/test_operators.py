@@ -104,7 +104,7 @@ def test_lsh_cosine_agrees_with_brute_force_on_top1(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    planes = [[(((7 * i + 13 * p) % 17) - 8) / 8.0 for i in range(64)] for p in range(4)]
+    planes = [[((7 * i + 13 * p) % 17) - 8 for i in range(64)] for p in range(4)]
     brute = {r.query_id: r.neighbor_id for r in cosine_topk(queries, emb, k=1).collect()}
     approx = {r.query_id: r.neighbor_id for r in lsh_cosine_topk(queries, emb, planes, k=1).collect()}
     # self-match always lands in the query's own bucket -> top-1 agrees
@@ -750,66 +750,25 @@ def test_connected_components_salted_star_graph(spark):
     from kafka_spark_streaming_pipeline_spark.operators.dedup import connected_components
 
     # power-law boundary case: a star of 10k edges into one hub node —
-    # unsalted, every edge keyed by the hub lands in one task; salted,
-    # the hub's edge list splits hash(src)-ways while labels stay exact
+    # every edge is keyed by the hub, and the labels stay exact (AQE's
+    # skew-join splitting, on in get_spark, spreads the hub's task)
     star = spark.createDataFrame(
         [(0, i) for i in range(1, 10_001)], ["doc_a", "doc_b"]
     )
-    salted = connected_components(star, salt=8)
-    rows = salted.collect()
+    rows = connected_components(star).collect()
     assert len(rows) == 10_001
     assert {r["component"] for r in rows} == {0}
 
-    # salted and unsalted agree on a multi-component graph
+    # exact component set on a multi-component graph
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
         ["doc_a", "doc_b"],
     )
     plain = {(r["id"], r["component"]) for r in connected_components(pairs).collect()}
-    salted2 = {
-        (r["id"], r["component"])
-        for r in connected_components(pairs, salt=4).collect()
-    }
-    assert plain == salted2
     assert plain == {
         (1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
         (20, 20), (21, 20), (22, 20), (23, 20),
     }
-
-
-def test_lsh_multiprobe_widens_candidates_without_losing_recall(spark, sf_dir):
-    from kafka_spark_streaming_pipeline_spark.catalog import load_table
-    from kafka_spark_streaming_pipeline_spark.operators.similarity import (
-        cosine_topk,
-        lsh_cosine_topk,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    planes = [[(((7 * i + 13 * p) % 17) - 8) / 8.0 for i in range(64)] for p in range(4)]
-    brute = {
-        (r.query_id, r.neighbor_id)
-        for r in cosine_topk(queries, emb, k=3).collect()
-    }
-
-    def recall(bits):
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in lsh_cosine_topk(
-                queries, emb, planes, k=3, multiprobe_bits=bits
-            ).collect()
-        }
-        return len(got & brute) / len(brute)
-
-    r0, r2 = recall(0), recall(2)
-    # probing Hamming-1 buckets can only add candidates
-    assert r2 >= r0
-    # self-match still always lands in the query's own bucket
-    top1 = {
-        r.query_id: r.neighbor_id
-        for r in lsh_cosine_topk(queries, emb, planes, k=1, multiprobe_bits=2).collect()
-    }
-    assert all(q == n for q, n in top1.items())
 
 
 def test_multi_table_lsh_recall_monotone(spark, sf_dir):
@@ -3778,42 +3737,3 @@ def test_scoped_shuffle_partitions_restores_settings(spark):
     with _pytest.raises(ValueError):
         with scoped_shuffle_partitions(spark, 0):
             pass
-
-
-def test_entity_resolve_partition_dial_is_result_invariant(spark):
-    """entity_resolve(shuffle_partitions=N) must change ONLY the
-    physical partitioning of the heavy stages: identical labels,
-    cluster sizes, and canonical survivors as the undialed run, with
-    the session conf restored once the call returns (the heavy
-    stages materialize inside via the closure's checkpoints)."""
-    from kafka_spark_streaming_pipeline_spark.operators.linkage import (
-        entity_resolve,
-    )
-
-    rows = [
-        (1, "quick brown fox jumps over lazy dog tonight"),
-        (101, "brown fox jumps over lazy dog tonight"),
-        (2, "alpha beta gamma delta epsilon zeta eta theta"),
-        (102, "alpha beta gamma epsilon zeta eta theta"),
-        (3, "stormy petrel circles windward basalt cliffs alone"),
-        (4, "crimson green blue purple"),
-    ]
-    recs = spark.createDataFrame(rows, ["rec_id", "mention"])
-    key_sp = "spark.sql.shuffle.partitions"
-    before_sp = spark.conf.get(key_sp)
-
-    plain = {
-        (r["rec_id"], r["entity_id"], r["cluster_size"], r["is_canonical"])
-        for r in entity_resolve(recs).collect()
-    }
-    dialed_df = entity_resolve(recs, shuffle_partitions=96)
-    # the scope closed inside the call: session conf already restored
-    assert spark.conf.get(key_sp) == before_sp
-    assert spark.conf.get(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", None
-    ) is None
-    dialed = {
-        (r["rec_id"], r["entity_id"], r["cluster_size"], r["is_canonical"])
-        for r in dialed_df.collect()
-    }
-    assert dialed == plain

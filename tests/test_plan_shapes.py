@@ -446,23 +446,13 @@ def test_consensus_and_acf_ride_the_cached_grid(spark, sf_dir):
 
 
 def test_consensus_grid_pass_and_checkpoint(spark, sf_dir):
-    """x146's two plan pins after the r13 recovery (VERDICT r12
-    item 1 — the r12 always-eager form cost two extra driver jobs per
-    cold build and regressed below the host band):
-
-    (a) the DEFAULT registry builder is the lazy composition again —
-        all five detectors are readers of the persisted grid, one
-        event-log pass, no driver action at build time; and
-    (b) the gated eager path (``grid_partitions=n`` /
-        ``adaptive=True``) still returns the consensus as a bounded
-        checkpoint computed under a grid-sized shuffle-partition
-        scope — its final plan is a checkpoint scan with ZERO parquet
-        scans, and the session's shuffle-partition setting is
-        restored afterwards."""
-    from kafka_spark_streaming_pipeline_spark.catalog import load_table
-    from kafka_spark_streaming_pipeline_spark.operators.timeseries import (
-        detector_consensus,
-    )
+    """x146's plan pin after the r13 recovery (VERDICT r12 item 1 —
+    the r12 always-eager form cost two extra driver jobs per cold build
+    and regressed below the host band): the registry builder is the
+    lazy composition — all five detectors are readers of the persisted
+    grid, one event-log pass, no driver action at build time, and no
+    checkpoint leaf in the plan."""
+    from kafka_spark_streaming_pipeline_spark import cache
     from kafka_spark_streaming_pipeline_spark.plans import QUERIES
     from kafka_spark_streaming_pipeline_spark.plans.lint import lint_plan
 
@@ -475,52 +465,10 @@ def test_consensus_grid_pass_and_checkpoint(spark, sf_dir):
     assert plan.count("Scan parquet") <= cached + 1, plan.count("Scan parquet")
     # lazy: no checkpoint leaf in the default build
     assert "Scan ExistingRDD" not in plan, plan
-
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    eager = detector_consensus(
-        load_table(spark, sf_dir, "events"), grid_partitions=4
-    )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    eager_plan = eager._jdf.queryExecution().executedPlan().toString()
-    assert "Scan parquet" not in eager_plan, eager_plan
-    assert "Scan ExistingRDD" in eager_plan, eager_plan
-
-
-def test_consensus_grid_is_cached_before_the_partition_scope(
-    spark, sf_dir, monkeypatch
-):
-    """``grid_partitions=n`` scopes only the grid-sized detector stages:
-    the persisted dense grid (and the event-log aggregation feeding it)
-    is materialized before ``scoped_shuffle_partitions`` is entered, so
-    the log pass runs under the session's partitioning, not at ``n``."""
-    from kafka_spark_streaming_pipeline_spark import cache, session
-    from kafka_spark_streaming_pipeline_spark.catalog import load_table
-    from kafka_spark_streaming_pipeline_spark.operators.timeseries import (
-        detector_consensus,
-    )
-
+    # the registry lint above leaves every builder's tracked caches in
+    # the session; release them so the modules after this one do not
+    # run their job-count pins beside the whole registry's cached frames
     cache.unpersist_tracked(blocking=True)
-    manager = spark._jsparkSession.sharedState().cacheManager()
-    at_scope_entry = []
-    scope = session.scoped_shuffle_partitions
-
-    def spy(sp, n):
-        at_scope_entry.append(
-            [
-                manager.lookupCachedData(df._jdf)
-                .get()
-                .cachedRepresentation()
-                .cacheBuilder()
-                .isCachedColumnBuffersLoaded()
-                for df in cache.tracked_since(0)
-            ]
-        )
-        return scope(sp, n)
-
-    monkeypatch.setattr(session, "scoped_shuffle_partitions", spy)
-    detector_consensus(load_table(spark, sf_dir, "events"), grid_partitions=4)
-    assert len(at_scope_entry) == 1
-    assert at_scope_entry[0] and all(at_scope_entry[0]), at_scope_entry
 
 
 def test_nb_score_model_join_is_size_gated(spark):

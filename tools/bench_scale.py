@@ -225,9 +225,9 @@ def main() -> None:
             "8x initialPartitionNum curing this point while taxing "
             "composed small-shuffle pipelines 1.5-3x (x146).  r12: the "
             "dial is ENGAGED here — the big point is timed under "
-            "session.scoped_shuffle_partitions(128) (the knob "
-            "entity_resolve(shuffle_partitions=...) applies), exactly "
-            "as a production job at this volume would run it; small "
+            "session.scoped_shuffle_partitions(128) around the whole "
+            "query, exactly as a production job at this volume would "
+            "run it; small "
             "and mid points stay at session defaults"
         ),
         "x78_contrastive_triplets": (

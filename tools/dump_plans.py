@@ -137,7 +137,7 @@ AUDITED = {
     "x143_order_value_model": "closed-form OLS: per-order aggregate + one orders join; all nine regression moments accumulate in ONE combinable aggregate — no iterative solver, no driver matrix",
     "x144_lang_source_chi2": "chi2 independence: one corpus scan to the persisted contingency cells; margins/total/grid/statistic all run on r x c rows; zero cells restored by the margin cross",
     "x145_autocorrelation": "ACF: one log pass to the persisted hours x types grid; lag self-join + exact-BIGINT Pearson moments over aggregated rows only (sixth consumer of the shared rollup)",
-    "x146_detector_consensus": "detector consensus: ONE log pass to the persisted dense grid; all five detectors (seasonal/robust/CUSUM/dispersion/trend) are readers of the cached grid, composed LAZILY (r13 recovery of the r12 always-eager form — the dedicated count() + eager checkpoint cost two driver jobs per cold build); the gated eager path (grid_partitions=n / adaptive=True) keeps the grid-derived shuffle-partition scope for production grids; both shapes pinned by tests/test_plan_shapes.py::test_consensus_grid_pass_and_checkpoint",
+    "x146_detector_consensus": "detector consensus: ONE log pass to the persisted dense grid; all five detectors (seasonal/robust/CUSUM/dispersion/trend) are readers of the cached grid, composed LAZILY (r13 recovery of the r12 always-eager form — the dedicated count() + eager checkpoint cost two driver jobs per cold build); the shape is pinned by tests/test_plan_shapes.py::test_consensus_grid_pass_and_checkpoint",
     "q47_sole_late_supplier": "TPC-H Q21 shape: the (orderkey, suppkey, late) projection computed ONCE and persisted — semi/anti/probe roles all read the cache; orderkey-equi self-joins; top-20 over the supplier-count aggregate",
     "x147_holt_winters": "Holt-Winters: one log pass to the persisted grid; each type's whole series folds inside ONE row as a codegen array fold — no Python, no driver loop, no iterative jobs",
     "x148_length_psi": "PSI drift: the persisted length histogram (shared with the KS screen) bins map-side; skeleton cross and the quantized term sum run over k x ~20-bin rows only",

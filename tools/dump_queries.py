@@ -7,7 +7,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from kafka_spark_streaming_pipeline_spark.plans import QUERIES  # noqa: E402
 
@@ -18,7 +19,8 @@ GROUPS = [
 ]
 
 
-def main() -> None:
+def render() -> str:
+    """QUERIES.md's text, generated from the registry."""
     lines = [
         "# QUERIES — the registered query surface",
         "",
@@ -39,9 +41,12 @@ def main() -> None:
             summary = first[:cut] if cut != -1 else first.rstrip(".")
             lines.append(f"- **{name}** ({status}) — {summary}.")
         lines.append("")
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md")
-    with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as f:
+        f.write(render())
     print(f"wrote QUERIES.md ({len(QUERIES)} queries)")
 
 

@@ -19,9 +19,10 @@ check_oracle.py's name-filter convention.  Exit 0 = clean, 1 = flagged.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
